@@ -21,9 +21,9 @@ package graft.operators
   */
 private[graft] object Par {
 
-  /** Run `tasks` concurrently, each as its own Spark job group; blocks
-    * until ALL complete; rethrows the first failure. Single task runs
-    * inline (no pool churn). */
+  /** Run `tasks` concurrently on a small thread pool (no Spark job group
+    * is set); blocks until ALL complete; rethrows the first failure.
+    * Single task runs inline (no pool churn). */
   def run(tasks: Seq[() => Unit]): Unit = {
     if (tasks.isEmpty) return
     if (tasks.size == 1) { tasks.head.apply(); return }

@@ -25,16 +25,23 @@ object Validation {
   final case class Split(valid: DataFrame, rejects: DataFrame)
 
   /** Evaluate rules, split on any violation. */
-  def split(df: DataFrame, rules: Seq[(String, Column)]): Split = {
+  def split(df: DataFrame, rules: Seq[(String, Column)]): Split =
+    route(mark(df, rules))
+
+  /** Tag every row with the names of the rules it violates
+    * (`violations: array<string>`, empty when the row is valid). */
+  def mark(df: DataFrame, rules: Seq[(String, Column)]): DataFrame = {
     val marks = array(rules.map { case (name, bad) =>
       when(bad, lit(name)).otherwise(lit(null).cast("string"))
     }: _*)
-    val flagged = df.withColumn("violations",
-      filter(marks, x => x.isNotNull))
-    Split(
-      flagged.filter(size(col("violations")) === 0).drop("violations"),
-      flagged.filter(size(col("violations")) > 0))
+    df.withColumn("violations", filter(marks, x => x.isNotNull))
   }
+
+  /** Split rows already tagged by [[mark]] on any violation. */
+  def route(marked: DataFrame): Split =
+    Split(
+      marked.filter(size(col("violations")) === 0).drop("violations"),
+      marked.filter(size(col("violations")) > 0))
 
   /** V1 — product rules (`corruptions.py:52-61`; CHECKs `02:54-58`). */
   val productRules: Seq[(String, Column)] = Seq(

@@ -1,7 +1,10 @@
 package graft.streaming
 
 import graft.operators.Validation
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -74,7 +77,11 @@ object IngestPipeline {
     * and tests. `normalizedBuckets = Some(n)` switches the normalized
     * sink from the whole-table swap to the hash-partitioned upsert
     * ([[PartitionedUpsert]]) — O(touched buckets) per batch instead of
-    * O(table); read the result back with `PartitionedUpsert.readAll`. */
+    * O(table); read the result back with `PartitionedUpsert.readAll`.
+    *
+    * A small batch is bound by job scheduling, not compute: it runs one
+    * eager pin, one tally to the driver, a lineage lookup only for offsets
+    * at or below the offset mark, then one write per sink and the mark. */
   def processBatch(batch: DataFrame, batchId: Long, sinks: Sinks,
       entitySchema: StructType, pk: String, versionCol: String,
       rules: Seq[(String, Column)],
@@ -83,60 +90,46 @@ object IngestPipeline {
     val spark = batch.sparkSession
     val t0 = System.nanoTime()
 
-    // Idempotence is enforced PER SINK, not upstream of all of them: a
-    // crash between the raw append and the downstream writes must not
-    // cause the replayed batch to skip normalized/rejects (they each
-    // tolerate re-processing on their own — anti-join for the appends,
-    // tie-break ordering for the upsert).
-    val inBatch = batch.dropDuplicates("partition", "offset").localCheckpoint(true)
-    val nIn = inBatch.count()
+    // ---- S5 + V1–V5: ONE pin — lineage dedup, typed decode (PERMISSIVE +
+    // corrupt-record capture), validation marks. Raw reads the Kafka frame
+    // from `_msg`; rejects and normalized filter the marks.
+    val pin = Validation.mark(
+      batch.dropDuplicates("partition", "offset")
+        .withColumn("r", from_json(col("value"), entitySchema,
+          Map("mode" -> "PERMISSIVE",
+            "timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")))
+        .select(struct(batch.columns.toIndexedSeq.map(col): _*).as("_msg"),
+          col("partition"), col("offset"), col("r.*")),
+      rules).localCheckpoint(true)
 
-    // ---- S6: raw audit append, idempotent on (partition, offset). The
-    // guard is high-water-mark first: rows beyond the per-partition max
-    // landed offset are fresh WITHOUT opening the audit table (at 100 TB
-    // the audit table is the biggest table in the system — an O(table)
-    // lineage scan per microbatch is unaffordable); only the replay
-    // overlap (normally empty) anti-joins against landed lineage.
-    val freshRaw = freshByHwm(spark, inBatch, sinks.raw)
-      .localCheckpoint(true) // materialize before appending to what it reads
-    freshRaw.withColumn("consumed_at", current_timestamp())
+    // ---- S6: replay guard, idempotent on (partition, offset) PER append
+    // sink. One mark (per-partition max offset either sink may hold)
+    // serves both: offsets above it cannot have landed and skip the sinks
+    // (at 100 TB the audit table is the biggest in the system); those at
+    // or below it (a replay, normally a handful) are looked up.
+    val appendSinks = Seq(sinks.raw, sinks.rejects)
+    val markAt = sinks.raw + "._hwm"
+    val stored = readMark(spark, markAt)
+    val mark = stored.getOrElse(markFromSinks(spark, appendSinks))
+    val tallies = tally(pin, mark)
+    val Seq(landedRaw, landedRejects) = landed(spark, appendSinks,
+      tallies.collect { case (p, t) if t.suspects.nonEmpty => p -> t.suspects })
+
+    // The mark advances BEFORE the appends: after a crash past this point
+    // the replay looks up every offset, where a mark trailing landed rows
+    // would pass them as fresh and land them twice.
+    val advanced = mark ++ tallies.collect {
+      case (p, t) if mark.get(p).forall(_ < t.hi) => p -> t.hi }
+    if (advanced.nonEmpty && !stored.contains(advanced))
+      swapWrite(spark, spark.createDataFrame(advanced.toSeq).toDF("partition", "max_offset")
+        .coalesce(1), markAt)
+
+    pin.filter(!among(landedRaw)).select(col("_msg.*"))
+      .withColumn("consumed_at", current_timestamp())
       .write.mode("append").parquet(sinks.raw)
-    // Advance the watermark only AFTER the append committed: a crash in
-    // between leaves the mark low, which degrades to the anti-join path
-    // on replay — never to a skipped row.
-    advanceHwm(spark, inBatch, sinks.raw)
-    val nFresh = freshRaw.count() // cheap: counts materialized blocks
-
-    // ---- S5: typed decode (PERMISSIVE + corrupt-record capture) over
-    // the WHOLE deduped batch — downstream sinks do their own replay
-    // guarding, so a row already in raw still flows to them.
-    val parsed = inBatch
-      .withColumn("r", from_json(col("value"), entitySchema,
-        Map("mode" -> "PERMISSIVE",
-          "timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")))
-      .select(col("partition"), col("offset"), col("r.*"))
-      // ONE decode pass per batch: the rejects sink, the reject count,
-      // and the normalized upsert below all consume this frame —
-      // materialized, each reads blocks plus a cheap predicate instead
-      // of re-running from_json per consumer (three passes before).
-      .localCheckpoint(true)
-
-    // ---- V1–V5: validation split.
-    val Validation.Split(valid, rejects) = Validation.split(parsed, rules)
-
-    // ---- Rejects append, idempotent on (partition, offset) like raw
-    // (validation is deterministic, so a given offset is always valid or
-    // always a reject — the rejects-only watermark can never skip a row
-    // that belongs here).
-    val freshRejects = freshByHwm(spark, rejects, sinks.rejects)
-      .localCheckpoint(true)
-    freshRejects.withColumn("batch_id", lit(batchId))
+    val Validation.Split(valid, rejects) = Validation.route(pin.drop("_msg"))
+    rejects.filter(!among(landedRejects)).withColumn("batch_id", lit(batchId))
       .write.mode("append").parquet(sinks.rejects)
-    advanceHwm(spark, rejects, sinks.rejects)
-    // Batch-level reject count (replayed rows included) — a predicate
-    // over the materialized decode, so no parse re-run and no lineage
-    // re-scan.
-    val nRejects = rejects.count()
 
     // ---- S7/T5: normalized latest-wins upsert. Winner per key by
     // (version, source offset, existing-first): a genuinely newer record
@@ -167,8 +160,10 @@ object IngestPipeline {
           sinks.normalized)
     }
 
-    // ---- A8/S9: processing stats append (`02:134-141` analog). Counts
-    // come from materialized frames or arithmetic — no plan re-runs.
+    // ---- A8/S9: processing stats append (`02:134-141` analog).
+    val nIn = tallies.values.map(_.n).sum
+    val nRejects = tallies.values.map(_.rejects).sum
+    val nFresh = nIn - landedRaw.values.map(_.size).sum
     val durMs = (System.nanoTime() - t0) / 1000000
     spark.createDataFrame(Seq(
       (batchId, nIn, nFresh, nIn - nRejects, nRejects, durMs)))
@@ -198,55 +193,61 @@ object IngestPipeline {
       .select(col(pk) +: payloadNames.map(c => col(s"w.$c").as(c)): _*)
   }
 
-  /** Keep only rows whose (partition, offset) lineage is absent from the
-    * sink — the replay guard each append sink applies independently. */
-  private def antiByOffset(df: DataFrame, sink: Option[DataFrame]): DataFrame =
-    sink match {
-      case Some(prior) =>
-        df.join(prior.select("partition", "offset"),
-          Seq("partition", "offset"), "left_anti")
-      case None => df
-    }
-
-  private def hwmPath(sinkPath: String): String = sinkPath + "._hwm"
-
-  /** High-water-mark replay guard: rows with `offset` beyond the
-    * per-partition max landed offset are fresh by construction — the
-    * audit table is NEVER opened for them; only the overlap (an exact or
-    * partial replay, normally empty — checked with one tiny job over the
-    * already-materialized batch) falls back to the lineage anti-join. No
-    * watermark file (first batch, or a crash before it ever landed) —
-    * full fallback. */
-  private def freshByHwm(spark: SparkSession, df: DataFrame, sinkPath: String): DataFrame =
-    existing(spark, hwmPath(sinkPath)) match {
-      case None => antiByOffset(df, existing(spark, sinkPath))
-      case Some(h) =>
-        val tagged = df
-          .join(broadcast(h), Seq("partition"), "left")
-          .withColumn("_hwm", coalesce(col("max_offset"), lit(Long.MinValue)))
-          .drop("max_offset")
-        val fresh   = tagged.filter(col("offset") > col("_hwm")).drop("_hwm")
-        val overlap = tagged.filter(col("offset") <= col("_hwm")).drop("_hwm")
-        if (overlap.isEmpty) fresh
-        else fresh.unionByName(antiByOffset(overlap, existing(spark, sinkPath)))
-    }
-
-  /** Advance the per-partition max-offset watermark with this batch's
-    * lineage. Called strictly AFTER the append commits: a crash between
-    * the two leaves the mark low (safe — replay degrades to the
-    * anti-join), never high (which could skip rows). The mark itself is
-    * a few rows, replaced via the same crash-safe rotation as the
-    * normalized table. */
-  private def advanceHwm(spark: SparkSession, batch: DataFrame, sinkPath: String): Unit = {
-    if (batch.isEmpty) return
-    val fresh = batch.groupBy("partition").agg(max("offset").as("max_offset"))
-    val merged = existing(spark, hwmPath(sinkPath)) match {
-      case Some(old) => old.unionByName(fresh)
-        .groupBy("partition").agg(max("max_offset").as("max_offset"))
-      case None => fresh
-    }
-    swapWrite(spark, merged, hwmPath(sinkPath))
+  /** One Kafka partition of a batch: its max offset, row and reject
+    * counts, and its offsets at or below the mark (replay suspects). */
+  private final case class Tally(hi: Long, n: Long, rejects: Long, suspects: List[Long]) {
+    def +(o: Tally) = Tally(hi max o.hi, n + o.n, rejects + o.rejects, suspects ::: o.suspects)
   }
+
+  /** Per-partition tallies in one job: tasks fold rows, the driver merges. */
+  private def tally(pin: DataFrame, mark: Map[Int, Long]): Map[Int, Tally] = {
+    def add(m: Map[Int, Tally], p: Int, t: Tally) = m.updated(p, m.get(p).fold(t)(_ + t))
+    pin.select(col("partition"), col("offset"), size(col("violations")) > 0).rdd
+      .aggregate(Map.empty[Int, Tally])({ (m, r) =>
+        val (p, o) = (r.getInt(0), r.getLong(1))
+        add(m, p, Tally(o, 1L, if (r.getBoolean(2)) 1L else 0L,
+          if (mark.get(p).exists(o <= _)) List(o) else Nil))
+      }, (a, b) => b.foldLeft(a) { case (m, (p, t)) => add(m, p, t) })
+  }
+
+  /** Rows whose (partition, offset) is in `offsets`: a literal predicate. */
+  private def among(offsets: Map[Int, Seq[Long]]): Column =
+    offsets.map { case (p, os) => col("partition") === p && col("offset").isInCollection(os) }
+      .foldLeft(lit(false))(_ || _)
+
+  /** (partition, offset, sink index) of every existing sink; reads two columns. */
+  private def lineage(spark: SparkSession, sinkPaths: Seq[String]): Option[DataFrame] =
+    sinkPaths.zipWithIndex.flatMap { case (path, i) => liveDir(spark, path).map(d =>
+      spark.read.schema("partition INT, offset BIGINT").parquet(d.toString)
+        .withColumn("sink", lit(i)))
+    }.reduceOption(_ unionByName _)
+
+  /** Which `suspects` already sit in each sink (a map per sink), in one job. */
+  private def landed(spark: SparkSession, sinkPaths: Seq[String],
+      suspects: Map[Int, Seq[Long]]): Seq[Map[Int, Seq[Long]]] = {
+    val rows = if (suspects.isEmpty) Nil else lineage(spark, sinkPaths)
+      .fold(Seq.empty[Row])(_.filter(among(suspects)).collect().toSeq)
+    sinkPaths.indices.map(i => rows.filter(_.getInt(2) == i).groupMap(_.getInt(0))(_.getLong(1)))
+  }
+
+  /** The offset mark `(partition int, max_offset long)` as a driver map,
+    * its few rows read on the driver (no Spark job); `None` if never written. */
+  private def readMark(spark: SparkSession, path: String): Option[Map[Int, Long]] = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    liveDir(spark, path).map(dir => dir.getFileSystem(hconf).listStatus(dir)
+      .map(_.getPath).filter(_.getName.endsWith(".parquet")).flatMap { f =>
+        val r = ParquetReader.builder(new GroupReadSupport(), f).withConf(hconf).build()
+        try Iterator.continually(r.read()).takeWhile(_ != null)
+          .map(g => g.getInteger("partition", 0) -> g.getLong("max_offset", 0)).toList
+        finally r.close()
+      }.toMap)
+  }
+
+  /** A lost mark rebuilt from the sinks' lineage: a full lineage scan,
+    * paid only on this recovery path. Empty before anything landed. */
+  private def markFromSinks(spark: SparkSession, sinkPaths: Seq[String]): Map[Int, Long] =
+    lineage(spark, sinkPaths).fold(Map.empty[Int, Long])(_.groupBy("partition")
+      .agg(max("offset")).collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
 
   /** Atomic-enough full-table replace without a table format: write the
     * new contents to `<path>.tmp` (reading the old contents is safe —
@@ -259,10 +260,10 @@ object IngestPipeline {
     * for a Delta/Iceberg MERGE; the dataflow above is unchanged.) */
   private[streaming] def swapWrite(spark: SparkSession, df: DataFrame, path: String): Unit = {
     val hconf = spark.sparkContext.hadoopConfiguration
-    val p   = new org.apache.hadoop.fs.Path(path)
+    val p   = new Path(path)
     val fs  = p.getFileSystem(hconf)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-    val bak = new org.apache.hadoop.fs.Path(path + ".bak")
+    val tmp = new Path(path + ".tmp")
+    val bak = new Path(path + ".bak")
     df.write.mode("overwrite").parquet(tmp.toString)
     // Rotate the backup ONLY while the live table exists: after a prior
     // mid-swap crash (path absent, state only in .bak) deleting the
@@ -276,18 +277,16 @@ object IngestPipeline {
     fs.delete(bak, true)
   }
 
-  private[streaming] def existing(spark: SparkSession, path: String): Option[DataFrame] = {
-    def readable(p: org.apache.hadoop.fs.Path,
-        fs: org.apache.hadoop.fs.FileSystem): Boolean =
-      fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
-    val p = new org.apache.hadoop.fs.Path(path)
+  private[streaming] def existing(spark: SparkSession, path: String): Option[DataFrame] =
+    liveDir(spark, path).map(d => spark.read.parquet(d.toString))
+
+  /** The directory holding a table's parquet files: `path`, or in the
+    * crash window of [[swapWrite]] (table mid-rotation) the backup that
+    * holds the pre-batch state. */
+  private def liveDir(spark: SparkSession, path: String): Option[Path] = {
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (readable(p, fs)) Some(spark.read.parquet(path))
-    else {
-      // Crash window of swapWrite: the table is mid-rotation and the
-      // pre-batch state lives in the backup.
-      val bak = new org.apache.hadoop.fs.Path(path + ".bak")
-      if (readable(bak, fs)) Some(spark.read.parquet(bak.toString)) else None
-    }
+    Seq(p, new Path(path + ".bak")).find(d =>
+      fs.exists(d) && fs.listStatus(d).exists(_.getPath.getName.endsWith(".parquet")))
   }
 }

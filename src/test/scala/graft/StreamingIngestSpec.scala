@@ -65,10 +65,20 @@ class StreamingIngestSpec extends AnyFunSuite {
     q2.awaitTermination()
 
     assert(spark.read.parquet(sinks.raw).count() === N, "raw must stay offset-unique")
+    assert(spark.read.parquet(sinks.rejects).count() === nReject,
+      "rejects must stay offset-unique")
     val normAfter = spark.read.parquet(sinks.normalized)
       .orderBy("product_id").collect().toSeq
     assert(normAfter === normBefore,
       "replay must not change the normalized table (incl. last_modified)")
+    // The replay batch's stats row: every record seen, none fresh, and the
+    // batch-level reject count still counts the replayed rejects.
+    val replayStats = spark.read.parquet(sinks.stats)
+      .orderBy(col("recorded_at").desc).head()
+    assert(replayStats.getAs[Long]("n_in") === N)
+    assert(replayStats.getAs[Long]("n_fresh") === 0L)
+    assert(replayStats.getAs[Long]("n_rejects") === nReject)
+    assert(replayStats.getAs[Long]("n_valid") === nValid)
   }
 
   test("a newer version of a key wins the upsert; older does not regress it (T5 compaction)") {
@@ -273,8 +283,8 @@ class StreamingIngestSpec extends AnyFunSuite {
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(hwm === expected)
 
-    // Simulate a crash that lost the mark after the append: replay must
-    // still be idempotent through the full anti-join fallback.
+    // Simulate a lost mark: replay must still be idempotent, through the
+    // mark rebuilt from the sinks' lineage.
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"${sinks.raw}._hwm"), true)
@@ -286,6 +296,99 @@ class StreamingIngestSpec extends AnyFunSuite {
       "raw must stay offset-unique without the watermark")
     // And the replay rebuilt the mark.
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"${sinks.raw}._hwm")))
+  }
+
+  /** A Kafka-shaped batch of `n` corrupted products at offsets above
+    * `offsetBase`, read back as the frame the stream hands `processBatch`. */
+  private def productBatch(n: Long, seed: Long, offsetBase: Long): org.apache.spark.sql.DataFrame = {
+    val in = tmp()
+    KafkaShaped.writeTopicFile(
+      Corruptions.products(Generator.products(spark, n, seed), 0.3, seed + 1),
+      "product_id", "products", 3, offsetBase, in)
+    spark.read.schema(KafkaShaped.schema).json(in)
+  }
+
+  private def offsets(df: org.apache.spark.sql.DataFrame): Seq[(Int, Long)] =
+    df.select("partition", "offset").collect().toSeq.map(r => (r.getInt(0), r.getLong(1)))
+
+  private lazy val productSchema = Generator.products(spark, 1, seed = 31).schema
+
+  private def ingest(sinks: IngestPipeline.Sinks, batch: org.apache.spark.sql.DataFrame,
+      batchId: Long): Unit =
+    IngestPipeline.processBatch(batch, batchId, sinks, productSchema, "product_id",
+      "created_at", Validation.productRules)
+
+  test("a crash between the raw and rejects appends is recovered on replay") {
+    val base = tmp()
+    val sinks = IngestPipeline.Sinks(s"$base/raw", s"$base/norm", s"$base/rej",
+      s"$base/stats", s"$base/ckpt")
+    val first = productBatch(30, seed = 71, offsetBase = 0)
+    val second = productBatch(30, seed = 73, offsetBase = 1000)
+    ingest(sinks, first, 0)
+
+    // A plain file where the rejects directory was: the second batch's
+    // raw append lands, then its rejects append fails.
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val rej = new org.apache.hadoop.fs.Path(sinks.rejects)
+    val aside = new org.apache.hadoop.fs.Path(s"$base/rej.aside")
+    assert(fs.rename(rej, aside))
+    fs.create(rej).close()
+    intercept[Exception](ingest(sinks, second, 1))
+    assert(spark.read.parquet(sinks.raw).count() === 60, "raw landed before the failure")
+
+    assert(fs.delete(rej, false) && fs.rename(aside, rej))
+    ingest(sinks, second, 1)
+
+    val raw = offsets(spark.read.parquet(sinks.raw))
+    assert(raw.size === 60 && raw.distinct.size === 60, "raw holds each offset once")
+    val expectedRejects = Seq(first, second).flatMap { b =>
+      val bad = Validation.split(
+        b.select(col("key"), from_json(col("value"), productSchema,
+          Map("timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")).as("r"))
+          .select("key", "r.*"), Validation.productRules).rejects.select("key")
+      offsets(b.join(bad, "key"))
+    }
+    assert(expectedRejects.nonEmpty)
+    val rejects = offsets(spark.read.parquet(sinks.rejects))
+    assert(rejects.sorted === expectedRejects.sorted,
+      "rejects hold exactly the invalid offsets, once each")
+    val hwm = spark.read.parquet(s"${sinks.raw}._hwm")
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(hwm === raw.groupBy(_._1).view.mapValues(_.map(_._2).max).toMap)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"${sinks.rejects}._hwm")),
+      "raw and rejects share the one mark at <raw>._hwm")
+  }
+
+  test("a fresh microbatch stays within its Spark job budget") {
+    // pin: dedup shuffle stage + checkpoint (2); per-partition tally (1);
+    // mark (1); raw (1); rejects (1); normalized: prior read, merge
+    // shuffle stage, write (3); stats (1). No lineage lookup: every
+    // offset is above the mark.
+    val Budget = 10
+    val base = tmp()
+    val sinks = IngestPipeline.Sinks(s"$base/raw", s"$base/norm", s"$base/rej",
+      s"$base/stats", s"$base/ckpt")
+    ingest(sinks, productBatch(40, seed = 75, offsetBase = 0), 0)
+    val second = productBatch(40, seed = 77, offsetBase = 1000)
+
+    val sc = spark.sparkContext
+    val group = s"ingest-budget-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "one fresh ingest microbatch")
+      try ingest(sinks, second, 1) finally sc.clearJobGroup()
+      org.apache.spark.graftbridge.ListenerBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get() > 0)
+    assert(jobs.get() <= Budget, s"${jobs.get()} Spark jobs for one fresh microbatch")
+    assert(spark.read.parquet(sinks.raw).count() === 80)
   }
 
   test("a batch mixing replayed and fresh offsets lands exactly the fresh rows") {
