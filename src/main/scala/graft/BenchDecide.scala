@@ -28,12 +28,9 @@ object BenchDecide {
       .filter(col("text").isNotNull)
       .select(col("lang"), col("doc_id"), col("text"))
     ReleaseFlow.init(corpus, base)
-    // the shard pin, exactly as releaseDeferred builds it (disjoint ids)
-    val shard = LlmQueries.withGatePre(corpus
-        .withColumn("doc_id", col("doc_id") + lit(10000000L))
-        .withColumn("n_chars", length(col("text")).cast("long"))
-        .withColumn(LlmQueries.PreTokens, split(lower(col("text")), "\\s+")))
-      .localCheckpoint()
+    // the shard pin releaseDeferred builds (disjoint ids)
+    val shard = AdmissionPipeline.gatePin(
+      corpus.withColumn("doc_id", col("doc_id") + lit(10000000L)))
     val neardup = StreamingNearDup.readIndex(spark, ReleaseFlow.neardupDir(base))
     val spans = StreamingSubstring.fromPersisted(spark, ReleaseFlow.substrDir(base))
     val winnow = WinnowIndex.read(spark, ReleaseFlow.winnowDir(base))

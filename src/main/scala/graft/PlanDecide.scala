@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.streaming.{AdmissionPipeline, StreamingNearDup, StreamingSubstring}
-import graft.operators.{DedupIndex, LlmQueries, ReleaseFlow, WinnowIndex}
+import graft.operators.{DedupIndex, ReleaseFlow, WinnowIndex}
 
 /** Dump the physical plan of the gate ladder's DECISION frame — the
   * round-19 plan-evidence companion to [[PlanDump]]. Every lifecycle
@@ -28,12 +28,9 @@ object PlanDecide {
       .filter(col("text").isNotNull)
       .select(col("lang"), col("doc_id"), col("text"))
     ReleaseFlow.init(corpus, base)
-    // the shard pin, exactly as releaseDeferred builds it (disjoint ids)
-    val shard = LlmQueries.withGatePre(corpus
-        .withColumn("doc_id", col("doc_id") + lit(10000000L))
-        .withColumn("n_chars", length(col("text")).cast("long"))
-        .withColumn(LlmQueries.PreTokens, split(lower(col("text")), "\\s+")))
-      .localCheckpoint()
+    // the shard pin releaseDeferred builds (disjoint ids)
+    val shard = AdmissionPipeline.gatePin(
+      corpus.withColumn("doc_id", col("doc_id") + lit(10000000L)))
     val gates = AdmissionPipeline.Gates(
       StreamingNearDup.readIndex(spark, ReleaseFlow.neardupDir(base)),
       spark.emptyDataFrame.select(lit(0L).as("gram")).limit(0),

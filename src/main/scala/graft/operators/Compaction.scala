@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, input_file_name}
+import org.apache.spark.sql.types.StructType
 
 /** Artifact COMPACTION — the maintenance half of the index family's
   * append contract. Every release appends new parquet files to the
@@ -245,12 +246,12 @@ object Compaction {
     * and directory-partition columns (the IVF `cid`) survive. Groups
     * union by name — identical writer schemas by construction. */
   private[graft] def readFiles(spark: SparkSession, dir: String,
-      rels: Seq[String]): DataFrame = {
+      rels: Seq[String], schema: Option[StructType] = None): DataFrame = {
     require(rels.nonEmpty, s"readFiles: empty file set under $dir")
     val qDir = fsOf(spark, new Path(dir)).makeQualified(new Path(dir))
     rels.groupBy(treeOf).toSeq.sortBy(_._1).map { case (tree, es) =>
       val base = if (tree.isEmpty) qDir else new Path(qDir, tree)
-      spark.read.option("basePath", base.toString)
+      reader(spark, schema).option("basePath", base.toString)
         .parquet(es.map(e => new Path(qDir, e).toString): _*)
     }.reduce(_.unionByName(_))
   }
@@ -259,14 +260,23 @@ object Compaction {
     * goes through. Self-contained live tree → one directory scan
     * (identical plan to the pre-manifest engine); manifest-bearing →
     * plan from the explicit live file list. Either way the plan is
-    * pinned to immutable files at construction time. */
-  def readLive(spark: SparkSession, dir: String): DataFrame = {
+    * pinned to immutable files at construction time.
+    *
+    * `schema`, when given, skips parquet schema inference — one footer
+    * job per read (per tree group). A reader that re-resolves the same
+    * artifact per microbatch passes the schema it resolved once; the
+    * live file set is still listed afresh on every call. */
+  def readLive(spark: SparkSession, dir: String,
+      schema: Option[StructType] = None): DataFrame = {
     val tree = currentVersion(spark, dir).map(v => s"v$v").getOrElse("")
     readManifest(spark, dir, tree) match {
-      case Some(entries) => readFiles(spark, dir, entries)
-      case None => spark.read.parquet(resolve(spark, dir))
+      case Some(entries) => readFiles(spark, dir, entries, schema)
+      case None => reader(spark, schema).parquet(resolve(spark, dir))
     }
   }
+
+  private def reader(spark: SparkSession, schema: Option[StructType]) =
+    schema.fold(spark.read)(spark.read.schema)
 
   /** Append through the manifest: run `write` (a mode("append") parquet
     * write) against the live tree, then — if that tree carries a

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The PERSISTED exact-dedup index — the build/probe split behind the
   * whole exact-dedup family, same lifecycle discipline as
@@ -68,8 +69,9 @@ object DedupIndex {
           .write.mode("append").parquet(live)
     }
 
-  def read(spark: SparkSession, base: String): DataFrame =
-    Compaction.readLive(spark, s"$base/content_hashes")
+  def read(spark: SparkSession, base: String,
+      schema: Option[StructType] = None): DataFrame =
+    Compaction.readLive(spark, s"$base/content_hashes", schema)
 
   /** Restore the range-clustered layout after an append chain — see
     * [[Compaction]]. Row multiset unchanged. */

@@ -11,10 +11,11 @@ package graft.operators
   * on a real cluster (FIFO scheduling gives exactly the back-fill
   * behavior; the jobs are small, so they cannot starve one another).
   *
-  * Same discipline as [[graft.streaming.PartitionedUpsert.upsert]]'s
-  * concurrent bucket merges (the in-repo precedent): bounded pool,
-  * fail-fast propagation of the first error, Await so the composite
-  * operation's completion still means "every artifact landed".
+  * A bounded pool, and a join that awaits EVERY task before it
+  * rethrows the first failure (in task order) — so the composite call
+  * returns, or throws, only once no task is still writing. A fail-fast
+  * join would let a caller retry or stop while a sibling append still
+  * writes its directory.
   * Correctness is unaffected — tasks touch disjoint directories and
   * the callers' semantics pins (ReleaseFlowSpec, RetractSpec,
   * CompactionSpec, MediaReleaseFlowSpec) hold verbatim.
@@ -22,37 +23,28 @@ package graft.operators
 private[graft] object Par {
 
   /** Run `tasks` concurrently on a small thread pool (no Spark job group
-    * is set); blocks until ALL complete; rethrows the first failure.
-    * Single task runs inline (no pool churn). */
+    * is set); blocks until ALL complete, failed or not, then rethrows
+    * the first failure in task order. Single task runs inline (no pool
+    * churn). */
   def run(tasks: Seq[() => Unit]): Unit = {
     if (tasks.isEmpty) return
     if (tasks.size == 1) { tasks.head.apply(); return }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(8, tasks.size))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.traverse(tasks)(t =>
-          scala.concurrent.Future(t.apply())),
-        scala.concurrent.duration.Duration.Inf)
-    finally pool.shutdown()
-    ()
+    deferred(tasks)()
   }
 
   def run(first: () => Unit, rest: (() => Unit)*): Unit =
     run(first +: rest)
 
   /** Start `tasks` concurrently NOW, return the JOIN: calling the
-    * returned thunk blocks until every task completed and rethrows the
-    * first failure (idempotent — a second call re-awaits the same
-    * completed futures). For compositions where work independent of
-    * the tasks can run between fork and join — [[CorpusBuild.build]]
-    * overlaps the release's artifact appends with the curation stage
-    * this way (curation reads only the pre-append decision checkpoint,
-    * never the artifacts; the composite still joins before returning,
-    * so callers observe the same "all artifacts landed" contract as
-    * [[run]]). */
+    * returned thunk blocks until every task completed, failed or not,
+    * and then rethrows the first failure in task order (idempotent — a
+    * second call re-awaits the same completed futures). For
+    * compositions where work independent of the tasks can run between
+    * fork and join — [[CorpusBuild.build]] overlaps the release's
+    * artifact appends with the curation stage this way (curation reads
+    * only the pre-append decision checkpoint, never the artifacts; the
+    * composite still joins before returning, so callers observe the
+    * same "all artifacts landed" contract as [[run]]). */
   def deferred(tasks: Seq[() => Unit]): () => Unit = {
     if (tasks.isEmpty) return () => ()
     // daemon threads: the normal path always joins, but an exception
@@ -61,19 +53,19 @@ private[graft] object Par {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(8, tasks.size),
       (r: Runnable) => {
-        val t = new Thread(r, "graft-par-deferred")
+        val t = new Thread(r, "graft-par")
         t.setDaemon(true)
         t
       })
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val fut = scala.concurrent.Future.traverse(tasks)(t =>
-      scala.concurrent.Future(t.apply()))
+    val futs = tasks.map(t => scala.concurrent.Future(t.apply()))
     () => {
-      try {
-        scala.concurrent.Await.result(fut,
-          scala.concurrent.duration.Duration.Inf); ()
-      } finally pool.shutdown()
+      // Future.traverse's join fails fast; await each future instead
+      try futs.foreach(scala.concurrent.Await.ready(_,
+        scala.concurrent.duration.Duration.Inf))
+      finally pool.shutdown()
+      futs.flatMap(_.value.get.failed.toOption).headOption.foreach(throw _)
     }
   }
 }

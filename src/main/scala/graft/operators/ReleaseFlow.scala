@@ -145,50 +145,9 @@ object ReleaseFlow {
     // screen drops them up front.
     val shard = shard0.filter(col("text").isNotNull)
     val addChars = !shard.columns.contains("n_chars")
-    // Pin the SHARD once before screening: decide() probes the batch
-    // from six arms (sketch, grams, hash, stop-word stats, …) and each
-    // arm is its own subtree, so an unpinned shard LINEAGE re-executes
-    // per arm — invisible for a plain parquet-backed shard (six pruned
-    // re-scans), a multiplier whenever the lineage carries compute (a
-    // cure, a decode, a planted construction: r1's gate measured ~16 s
-    // from exactly this). One materialization, bounded by SHARD size —
-    // never the corpus — the same discipline as the decided checkpoint
-    // below. Lazy: the first arm materializes it.
-    // tokenize-once (guide §2.3's "don't recompute what you can carry"):
-    // the canonical whitespace tokenization rides IN the pinned shard as
-    // the reserved [[LlmQueries.PreTokens]] column, so decide()'s screen
-    // arms (sketch, span grams, winnow, stop-word stats) and the four
-    // artifact appends all reuse one split instead of re-running the
-    // regex per consumer — bit-identical values by construction
-    // (LlmQueries.tokensOf). Dropped from the returned frame below.
-    // compute-once, one level up from tokenize-once: the MinHash
-    // shingle array + K=64 signature, the positional span-gram hashes,
-    // and the winnow fingerprint array all ride in the pin
-    // ([[LlmQueries.withGatePre]]), so decide()'s screen arms AND the
-    // artifact appends project one computed derivation each instead of
-    // re-running it per consumer (BenchDecide round 19: the re-sketched
-    // near-dup arm alone was ~2.9 s of the ~3.2 s decision wall; with
-    // the pre-cols it reads ~0.7 s). The fan-out makes the one place
-    // that still PAYS the per-doc compute — the pin's materialization —
-    // run at the session's parallelism when the shard arrives as a few
-    // scan partitions (the single-file fixture case; a cluster-scale
-    // shard is already wider and fanOut is a no-op).
-    // EAGER pin (plain localCheckpoint), deliberately: decide() reads
-    // this frame from six concurrent arm subtrees, and AQE runs their
-    // stages as parallel jobs — a lazy pin would be recomputed by every
-    // un-cached-yet task wave racing through it (measured: r1's
-    // decision stages burned ~10× the pin's CPU in duplicated
-    // recomputes before the cache landed). One up-front job
-    // materializes the heavy per-doc derivations exactly once, at the
-    // shard's own scan parallelism (a repartition-to-cores fan-out was
-    // measured and REJECTED — the exchange plus the wider checkpoint's
-    // per-task overheads cost more than the parallel pre-compute wins
-    // at any width tried; BENCH_NOTES round 19).
-    val withChars = LlmQueries.withGatePre(
-      (if (addChars) shard.withColumn("n_chars", length(col("text")).cast("long"))
-       else shard)
-        .withColumn(LlmQueries.PreTokens, split(lower(col("text")), "\\s+")))
-      .localCheckpoint()
+    // one eager gate pin ([[AdmissionPipeline.gatePin]]): decide()'s
+    // arms and the four appends below all project its pre-columns
+    val pinned = AdmissionPipeline.gatePin(shard)
     val gates = AdmissionPipeline.Gates(
       StreamingNearDup.readIndex(spark, neardupDir(base)),
       // an empty LONG gram frame leaves the contaminated arm inert
@@ -206,7 +165,7 @@ object ReleaseFlow {
       docQuality = screens.docQuality)
     // pin decisions BEFORE the appends mutate state; the checkpoint
     // still carries the pre-tokens so the appends read them for free
-    val decidedFull = AdmissionPipeline.decide(withChars, gates)
+    val decidedFull = AdmissionPipeline.decide(pinned, gates)
       .withColumnRenamed("reason", "decision")
       .localCheckpoint()
     val admitted = decidedFull.filter(col("decision") === "admit")
@@ -224,8 +183,7 @@ object ReleaseFlow {
       () => SubstringIndex.append(admitted, substrDir(base)),
       () => WinnowIndex.append(admitted, winnowDir(base))))
     val decided = decidedFull
-      .drop((Seq(LlmQueries.PreTokens, LlmQueries.PreShs, LlmQueries.PreSig,
-        LlmQueries.PreGrams, LlmQueries.PreWinnow) ++
+      .drop((AdmissionPipeline.GatePreCols ++
         (if (addChars) Seq("n_chars") else Seq.empty[String])): _*)
     (decided, joinAppends)
   }

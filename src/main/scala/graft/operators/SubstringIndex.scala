@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The PERSISTED substring index — l33's build/probe split, the same
   * lifecycle discipline as [[AnnIndexes]]: the positional hashed-gram
@@ -60,8 +61,9 @@ object SubstringIndex {
           .write.mode("append").parquet(live)
     }
 
-  def read(spark: SparkSession, base: String): DataFrame =
-    Compaction.readLive(spark, s"$base/span_grams")
+  def read(spark: SparkSession, base: String,
+      schema: Option[StructType] = None): DataFrame =
+    Compaction.readLive(spark, s"$base/span_grams", schema)
 
   /** Restore the range-clustered layout after an append chain — see
     * [[Compaction]]. Row multiset unchanged. This is the artifact

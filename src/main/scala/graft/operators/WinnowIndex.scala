@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The PERSISTED winnowing-fingerprint index — l74's build/probe split,
   * the same lifecycle discipline as [[SubstringIndex]] but at 2/(w+1)
@@ -96,8 +97,9 @@ object WinnowIndex {
     }
   }
 
-  def read(spark: SparkSession, base: String): DataFrame =
-    Compaction.readLive(spark, s"$base/$FmtDir")
+  def read(spark: SparkSession, base: String,
+      schema: Option[StructType] = None): DataFrame =
+    Compaction.readLive(spark, s"$base/$FmtDir", schema)
 
   /** Restore the range-clustered layout after an append chain — see
     * [[Compaction]]. Row multiset unchanged. */

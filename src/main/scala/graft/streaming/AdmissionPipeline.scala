@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.{CleaningQueries, LlmQueries, SubstringIndex}
+import graft.operators.{CleaningQueries, DedupIndex, LlmQueries, Par,
+  SubstringIndex, WinnowIndex}
 
 /** Composed streaming ADMISSION pipeline — the ingest-side counterpart
   * of batch l29: every admission gate a training-data ingest runs at
@@ -156,6 +157,25 @@ object AdmissionPipeline {
           CleaningQueries.piiRedact(concat_ws("\n", kept)))
       })
       .withColumn("n_chars", length(col("text")).cast("long"))
+
+  /** THE gate pin: one EAGER checkpoint of a batch plus every screen's
+    * per-doc pre-computation (`n_chars` if absent, [[LlmQueries
+    * .PreTokens]], then [[LlmQueries.withGatePre]]). [[decide]] reads
+    * its batch from about seven arm subtrees, so an unpinned lineage (a
+    * stateful dedup, a cure) re-runs per arm; on the pin the arms and
+    * the four index appends project the computed columns (bit-identical
+    * to recomputing them). Eager, because AQE races a lazy pin's cache
+    * with parallel task waves (~10x the pin's CPU on r1's gate). Keeps
+    * every row — a null-text doc still lands `low_quality`. Drop
+    * [[GatePreCols]] before a frame lands. */
+  private[graft] def gatePin(df: DataFrame): DataFrame =
+    LlmQueries.withGatePre(withNChars(df)
+        .withColumn(LlmQueries.PreTokens, split(lower(col("text")), "\\s+")))
+      .localCheckpoint()
+
+  private[graft] val GatePreCols = Seq(LlmQueries.PreTokens,
+    LlmQueries.PreShs, LlmQueries.PreSig, LlmQueries.PreGrams,
+    LlmQueries.PreWinnow)
 
   /** Screen-arm bits in the fused flag word ([[decide]]): one tagged
     * union + ONE doc_id aggregation replaces the former five per-arm
@@ -331,32 +351,39 @@ object AdmissionPipeline {
     deduped.writeStream
       .option("checkpointLocation", s"$outDir/_checkpoint")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeDecisions(decide(batch, gates), outDir, batchId)
+        writeDecisions(decide(gatePin(batch), gates).drop(GatePreCols: _*),
+          outDir, batchId)
       }
       .start()
   }
 
-  /** [[start]] with LIVE indexes: each microbatch re-resolves the
-    * persisted band index (and, when `substrIndexDir` is set, the
-    * persisted substring index) by PATH, and the batch's admitted docs
-    * are appended to both ([[StreamingNearDup.appendIndex]] /
-    * [[SubstringIndex.append]]) after the decision lands — so a doc
-    * admitted in batch N flags its near-copy AND its partial span
-    * lifts in batch N+1 without waiting for a corpus rebuild. What remains
-    * open, by design, is the INTRA-batch window: two novel
-    * near-identical docs inside one microbatch still both admit (the
-    * batch l9/l28 sweep is that backstop). The per-batch re-read costs
-    * one plan construction against the index directory — file listing,
-    * no data scan beyond what the screen join reads anyway.
+  /** [[start]] with LIVE indexes: each microbatch re-resolves every
+    * configured persisted index by PATH, and once the decisions land
+    * the batch's admitted docs are appended to each of them
+    * ([[StreamingNearDup.appendIndex]], [[SubstringIndex.append]],
+    * [[WinnowIndex.append]], [[DedupIndex.append]]) — so a doc
+    * admitted in batch N flags its near-copy, its partial span lifts
+    * and its byte-copies in batch N+1 without waiting for a corpus
+    * rebuild. What remains open, by design, is the INTRA-batch window:
+    * two novel near-identical docs inside one microbatch still both
+    * admit (the batch l9/l28 sweep is that backstop). The per-batch
+    * re-read costs one plan construction against the index directory —
+    * file listing, no data scan beyond what the screen join reads
+    * anyway; each index's schema resolves once, at start.
+    *
+    * Per microbatch: [[graft.operators.ReleaseFlow]]'s recipe — one
+    * [[gatePin]] (the stateful dedup runs once), [[decide]] on it, and
+    * the appends to disjoint dirs run concurrently ([[Par.run]]).
     *
     * Replay: decisions stay exactly-once via the batch-dir overwrite;
-    * a replayed append lands duplicate index rows, which screens
-    * tolerate (pair-level distinct) at the cost of index bytes until
-    * the next rebuild compacts them — the [[StreamingNearDup
-    * .appendIndex]] contract. Both index-backed dedup arms are
-    * additionally replay-DECISION-idempotent: [[decide]] anti-joins
-    * each screen's corpus-side owner ids against the batch's own id
-    * set, so a replayed batch whose appends survived the crash
+    * a failed append fails the batch, which replays whole. A replayed
+    * append lands duplicate index rows, which screens tolerate
+    * (pair-level distinct) at the cost of index bytes until the next
+    * rebuild compacts them — the [[StreamingNearDup.appendIndex]]
+    * contract, whichever appends had landed. Both index-backed dedup
+    * arms are additionally replay-DECISION-idempotent: [[decide]]
+    * anti-joins each screen's corpus-side owner ids against the batch's
+    * own id set, so a replayed batch whose appends survived the crash
     * re-admits its docs — including mutually-near-duplicate pairs
     * admitted together, which a self-id-only guard would flip to
     * duplicates of EACH OTHER — instead of flagging them against
@@ -393,6 +420,15 @@ object AdmissionPipeline {
     val in = if (clean) cleanse(stream) else stream
     val deduped = StreamingDedup.withinWatermark(
       withNChars(in), tsCol, delay)
+    // "ignored unless substrIndexDir is set": a set-but-unseeded winnow
+    // dir must not PATH_NOT_FOUND for a gate decide() never consults
+    val winnowDir = substrIndexDir.flatMap(_ => winnowIndexDir)
+    // each index's schema, inferred ONCE here: the per-batch reads
+    // re-list the live files by path but skip the footer-inference job
+    val ndLike = StreamingNearDup.readIndex(spark, neardupIndexDir)
+    val spanSchema = substrIndexDir.map(SubstringIndex.read(spark, _).schema)
+    val winnowSchema = winnowDir.map(WinnowIndex.read(spark, _).schema)
+    val hashSchema = exactHashDir.map(DedupIndex.read(spark, _).schema)
     deduped.writeStream
       .option("checkpointLocation", s"$outDir/_checkpoint")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -402,52 +438,36 @@ object AdmissionPipeline {
         // caller seeds it with the corpus, possibly recency-scoped,
         // before start)
         val gates = Gates(
-          StreamingNearDup.readIndex(spark, neardupIndexDir), holdoutGrams,
+          StreamingNearDup.readIndex(spark, neardupIndexDir, Some(ndLike)),
+          holdoutGrams,
           corpusSpans = substrIndexDir.map(d =>
-            StreamingSubstring.fromPersisted(spark, d)),
-          // resolved only when the verbatim gate it tiers is itself
-          // configured — the documented "ignored unless substrIndexDir
-          // is set" contract operationally: without the guard a set-
-          // but-unseeded winnow dir would PATH_NOT_FOUND every batch
-          // for a gate decide() never consults (and a valid one would
-          // pay a per-batch footer read for nothing)
-          corpusWinnow = substrIndexDir.flatMap(_ => winnowIndexDir).map(d =>
-            graft.operators.WinnowIndex.read(spark, d)),
+            StreamingSubstring.fromPersisted(spark, d, spanSchema)),
+          corpusWinnow = winnowDir.map(WinnowIndex.read(spark, _, winnowSchema)),
           classifier = classifier,
-          exactHashes = exactHashDir.map(d =>
-            graft.operators.DedupIndex.read(spark, d)),
+          exactHashes = exactHashDir.map(DedupIndex.read(spark, _, hashSchema)),
           evalVecs = evalVecsDir.map(d =>
             StreamingSemanticDecontam.readIndex(spark, d)))
-        // one decision pass, up to four consumers (sink + index appends)
-        val decisions = decide(batch, gates).localCheckpoint()
-        writeDecisions(decisions, outDir, batchId)
+        // one decision checkpoint, five consumers (the sink and four
+        // appends); it keeps the pre-columns so the appends project them
+        val decisions = decide(gatePin(batch), gates).localCheckpoint()
+        writeDecisions(decisions.drop(GatePreCols: _*), outDir, batchId)
         val admitted = decisions.filter(col("reason") === "admit")
-        StreamingNearDup.appendIndex(
-          admitted.select("doc_id", "text"), neardupIndexDir)
-        // a doc admitted in batch N screens batch N+1's span lifts, the
-        // same closed-window contract the near-dup append provides; the
-        // replayed-batch duplicate-rows tolerance is identical (distinct
-        // gram projection collapses them)
+        val appends = Seq.newBuilder[() => Unit]
+        appends += (() => StreamingNearDup.appendIndex(admitted, neardupIndexDir))
         substrIndexDir.foreach { d =>
           val withLang =
             if (admitted.columns.contains("lang")) admitted
             else admitted.withColumn("lang", lit("und"))
-          SubstringIndex.append(
-            withLang.select("lang", "doc_id", "text"), d)
+          appends += (() => SubstringIndex.append(withLang, d))
           // the winnow append rides the SAME conditional as the
           // substring append — one cannot grow without the other, the
           // coverage invariant's operational form
-          winnowIndexDir.foreach(w => graft.operators.WinnowIndex.append(
-            admitted.select("doc_id", "text"), w))
+          winnowIndexDir.foreach(w =>
+            appends += (() => WinnowIndex.append(admitted, w)))
         }
-        // the live exact backstop closes ITS cross-batch window the
-        // same way: batch N's admitted hashes screen batch N+1's
-        // byte-copies; replayed appends land duplicate hash rows,
-        // which the semi-join probe tolerates
-        exactHashDir.foreach { d =>
-          graft.operators.DedupIndex.append(
-            admitted.select("doc_id", "text"), d)
-        }
+        exactHashDir.foreach(d =>
+          appends += (() => DedupIndex.append(admitted, d)))
+        Par.run(appends.result())
       }
       .start()
   }

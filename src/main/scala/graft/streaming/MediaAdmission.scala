@@ -166,7 +166,9 @@ object MediaAdmission {
     dedupedStream(stream, tsCol, delay).writeStream
       .option("checkpointLocation", s"$outDir/_checkpoint")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeDecisions(decide(batch, gates), outDir, batchId)
+        // pinned once, eagerly: decide() reads the batch from several
+        // arms, and each read of the unpinned frame re-runs the dedup
+        writeDecisions(decide(batch.localCheckpoint(), gates), outDir, batchId)
       }
       .start()
   }
@@ -192,7 +194,7 @@ object MediaAdmission {
       .option("checkpointLocation", s"$outDir/_checkpoint")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val gates = Gates(StreamingMediaDedup.readIndex(spark, phashIndexDir))
-        val decisions = decide(batch, gates).localCheckpoint()
+        val decisions = decide(batch.localCheckpoint(), gates).localCheckpoint()
         writeDecisions(decisions, outDir, batchId)
         StreamingMediaDedup.appendIndex(
           decisions.filter(col("reason") === "admit")

@@ -63,10 +63,15 @@ object StreamingNearDup {
       () => idx.bands.sortWithinPartitions("band_id", "bkey")
         .write.mode("overwrite").parquet(s"$base/bands"))
 
-  def readIndex(spark: org.apache.spark.sql.SparkSession, base: String): Index =
+  /** `like`: an earlier read of the same index, whose schemas this
+    * read reuses instead of inferring them again. */
+  def readIndex(spark: org.apache.spark.sql.SparkSession, base: String,
+      like: Option[Index] = None): Index =
     Index(
-      graft.operators.Compaction.readLive(spark, s"$base/sketch"),
-      graft.operators.Compaction.readLive(spark, s"$base/bands"))
+      graft.operators.Compaction.readLive(spark, s"$base/sketch",
+        like.map(_.sketch.schema)),
+      graft.operators.Compaction.readLive(spark, s"$base/bands",
+        like.map(_.bands.schema)))
 
   /** Restore both frames' clustered layout after an append chain —
     * see [[graft.operators.Compaction]]: bands re-cluster by

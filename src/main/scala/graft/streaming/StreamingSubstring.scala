@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.{SamplingQueries, SubstringIndex}
 
@@ -81,9 +82,11 @@ object StreamingSubstring {
     spanGrams.select(col("gram"), col("doc_id").as("corpus_id")).distinct()
 
   /** [[indexFrom]] over [[SubstringIndex.read]]: resolve the gate's
-    * screen set from the persisted index directory by path. */
-  def fromPersisted(spark: SparkSession, base: String): DataFrame =
-    indexFrom(SubstringIndex.read(spark, base))
+    * screen set from the persisted index directory by path (`schema`:
+    * the span-gram schema, when already resolved). */
+  def fromPersisted(spark: SparkSession, base: String,
+      schema: Option[StructType] = None): DataFrame =
+    indexFrom(SubstringIndex.read(spark, base, schema))
 
   /** Persist sorted by gram for min/max row-group skipping.
     *

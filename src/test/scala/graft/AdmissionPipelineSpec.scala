@@ -848,4 +848,158 @@ class AdmissionPipelineSpec extends AnyFunSuite {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(!hashes.contains(45L) && hashes.contains(48L), hashes.toString)
   }
+
+  // ---- startLive over the four release artifacts
+
+  private val liveSchema = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("text", StringType),
+    StructField("ts", TimestampType)))
+
+  /** A long, stopword-free, repeat-free doc: admits unless an index
+    * already holds its content. */
+  private def novel(tag: String) =
+    (1 to 36).map(i => s"${tag}ovo$i").mkString(" ")
+
+  private def jsonLines(in: String, file: String,
+      rows: Seq[(Long, String, String)]): Unit =
+    Files.write(Paths.get(in, file), rows.map { case (id, text, ts) =>
+      s"""{"doc_id":$id,"text":"$text","ts":"2026-01-01T$ts"}"""
+    }.mkString("\n").getBytes)
+
+  /** Seed the four release artifacts under `base` with [[corpus]] and
+    * start a live query appending to all of them. */
+  private def startAll(in: String, out: String, base: String,
+      clean: Boolean = false) = {
+    import graft.operators.ReleaseFlow
+    ReleaseFlow.init(corpus.withColumn("lang", lit("und")), base)
+    AdmissionPipeline.startLive(spark,
+      spark.readStream.schema(liveSchema).json(in),
+      ReleaseFlow.neardupDir(base), gates.holdoutGrams, out, "ts",
+      "10 minutes", clean = clean,
+      substrIndexDir = Some(ReleaseFlow.substrDir(base)),
+      winnowIndexDir = Some(ReleaseFlow.winnowDir(base)),
+      exactHashDir = Some(ReleaseFlow.dedupDir(base)))
+  }
+
+  /** Each release artifact's rows under `base`, as sorted multisets. */
+  private def artifactRows(base: String): Seq[Seq[String]] = {
+    import graft.operators.{DedupIndex, ReleaseFlow, SubstringIndex, WinnowIndex}
+    val nd = StreamingNearDup.readIndex(spark, ReleaseFlow.neardupDir(base))
+    Seq(nd.sketch, nd.bands,
+      SubstringIndex.read(spark, ReleaseFlow.substrDir(base)),
+      WinnowIndex.read(spark, ReleaseFlow.winnowDir(base)),
+      DedupIndex.read(spark, ReleaseFlow.dedupDir(base)))
+      .map(_.collect().map(_.toString).sorted.toSeq)
+  }
+
+  test("startLive runs the stateful dedup once per batch and lands no " +
+      "gate pre-column in the decisions sink") {
+    val in = Files.createTempDirectory("graft_live1_in_").toString
+    val out = Files.createTempDirectory("graft_live1_out_").toString
+    val docs = (1 to 5).map(i => (60L + i, novel(s"d$i"), s"10:00:0${i}Z"))
+    jsonLines(in, "f1.json", docs)
+    // the data batch only: no trailing watermark batch (read at start)
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(noData, "false")
+    val q = try startAll(in, out,
+      Files.createTempDirectory("graft_live1_ix_").toString)
+    finally spark.conf.unset(noData)
+    q.processAllAvailable()
+    q.stop()
+    // SQL metrics sum over re-executions: a batch frame read unpinned by
+    // several decision arms reports a multiple of the batch's size here
+    val fed = q.recentProgress.filter(_.numInputRows > 0)
+    assert(fed.length === 1)
+    assert(fed.head.stateOperators(0).numRowsUpdated === docs.size.toLong,
+      s"the dedup stage must run exactly once for the batch: ${fed.head.json}")
+    val decisions = spark.read.parquet(s"$out/decisions")
+    assert(decisions.columns.toSeq.sorted ===
+      Seq("_batch_id", "doc_id", "n_chars", "reason", "text", "ts"),
+      decisions.columns.mkString(","))
+    assert(decisions.filter(col("reason") === "admit").count() === 5L)
+  }
+
+  test("startLive with clean=true: a page-dropped doc lands low_quality " +
+      "and the admitted doc reaches all four indexes redacted") {
+    import graft.operators.{DedupIndex, ReleaseFlow, SubstringIndex, WinnowIndex}
+    val body = Seq(
+      "porcelain zeppelin hammock quasar bobbin anchovy tundra seventy.",
+      "gazebo parchment kaleidoscope derrick awning lacquer plinth nine.",
+      "sextant bugle cornice dynamo easel fresco garnet marble forty.",
+      "contact hinge ingot javelin user33@example.com obelisk mandolin.")
+      .mkString("\\n")
+    val in = Files.createTempDirectory("graft_live2_in_").toString
+    val out = Files.createTempDirectory("graft_live2_out_").toString
+    val base = Files.createTempDirectory("graft_live2_ix_").toString
+    jsonLines(in, "f1.json", Seq(
+      (71L, s"junk header\\n$body", "10:00:00Z"),
+      // one unpunctuated line: the page rules drop it to a NULL text
+      (72L, "just one long unpunctuated boilerplate navigation row",
+        "10:00:01Z")))
+    val q = startAll(in, out, base, clean = true)
+    q.processAllAvailable()
+    q.stop()
+    val decisions = spark.read.parquet(s"$out/decisions")
+    val got = decisions.select("doc_id", "reason").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got === Map(71L -> "admit", 72L -> "low_quality"), got.toString)
+    assert(decisions.filter(col("doc_id") === 72L && col("text").isNull)
+      .count() === 1L, "the page-dropped doc carries its NULL text")
+    val landed = decisions.filter(col("doc_id") === 71L)
+      .select(lit("und").as("lang"), col("doc_id"), col("text"))
+    val text = landed.collect().head.getString(2)
+    assert(!text.contains("junk") && !text.contains("@example.com") &&
+      text.contains("<EMAIL>"), text)
+    // every index holds exactly the rows of the REDACTED text
+    def of71(df: org.apache.spark.sql.DataFrame) =
+      df.filter(col("doc_id") === 71L).collect().map(_.toString).sorted.toSeq
+    val nd = StreamingNearDup.readIndex(spark, ReleaseFlow.neardupDir(base))
+    val ndBuilt = StreamingNearDup.buildIndex(landed)
+    Seq(
+      "sketch" -> (nd.sketch, ndBuilt.sketch),
+      "bands" -> (nd.bands, ndBuilt.bands),
+      "span_grams" -> (SubstringIndex.read(spark, ReleaseFlow.substrDir(base)),
+        SubstringIndex.build(landed)),
+      "winnow" -> (WinnowIndex.read(spark, ReleaseFlow.winnowDir(base)),
+        WinnowIndex.build(landed)),
+      "content_hashes" -> (DedupIndex.read(spark, ReleaseFlow.dedupDir(base)),
+        DedupIndex.build(landed))).foreach { case (name, (ix, built)) =>
+      assert(of71(ix).nonEmpty && of71(ix) === of71(built), name)
+    }
+  }
+
+  test("startLive's live appends equal a rebuild: after two batches every " +
+      "index's row multiset is ReleaseFlow.init over corpus ∪ admitted") {
+    import graft.operators.ReleaseFlow
+    val in = Files.createTempDirectory("graft_live3_in_").toString
+    val out = Files.createTempDirectory("graft_live3_out_").toString
+    val base = Files.createTempDirectory("graft_live3_ix_").toString
+    jsonLines(in, "f1.json", Seq(
+      (81L, novel("e1"), "10:00:00Z"), (82L, novel("e2"), "10:00:01Z"),
+      (83L, "too short", "10:00:02Z")))
+    val q = startAll(in, out, base)
+    q.processAllAvailable()
+    // batch 2: a near-copy of 81 (caught by the live band append), a
+    // byte-copy of the corpus, and two novel docs
+    jsonLines(in, "f2.json", Seq(
+      (84L, novel("e1").split(" ").drop(1).mkString(" "), "10:00:05Z"),
+      (85L, longCorpusText, "10:00:06Z"),
+      (86L, novel("e3"), "10:00:07Z"), (87L, novel("e4"), "10:00:08Z")))
+    q.processAllAvailable()
+    q.stop()
+    val decisions = spark.read.parquet(s"$out/decisions")
+    val got = decisions.select("doc_id", "reason").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got === Map(81L -> "admit", 82L -> "admit", 83L -> "low_quality",
+      84L -> "near_duplicate", 85L -> "corpus_duplicate", 86L -> "admit",
+      87L -> "admit"), got.toString)
+    val rebuilt = Files.createTempDirectory("graft_live3_re_").toString
+    ReleaseFlow.init(corpus.unionByName(decisions
+        .filter(col("reason") === "admit").select("doc_id", "text"))
+      .withColumn("lang", lit("und")), rebuilt)
+    artifactRows(base).zip(artifactRows(rebuilt)).zipWithIndex.foreach {
+      case ((live, re), k) => assert(live === re, s"artifact $k")
+    }
+  }
 }

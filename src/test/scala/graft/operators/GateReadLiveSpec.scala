@@ -182,4 +182,45 @@ class GateReadLiveSpec extends AnyFunSuite {
     assert(flagged() === Set(101L),
       "docs near only the recalled eval vector re-admit")
   }
+
+  test("a read with a schema resolved once reads the same rows as a " +
+      "schema-inferring read after an append, a compact and a retract") {
+    val base = tmp("graft_gate_schema")
+    def docs(ids: Range) =
+      ids.map(i => ("und", i.toLong, words(s"s${i}w", 30))).toDF("lang", "doc_id", "text")
+    ReleaseFlow.init(docs(1 to 4), base)
+    // what a live query resolves once at start
+    val nd0 = StreamingNearDup.readIndex(spark, ReleaseFlow.neardupDir(base))
+    val sch = Seq(SubstringIndex.read(spark, ReleaseFlow.substrDir(base)),
+      WinnowIndex.read(spark, ReleaseFlow.winnowDir(base)),
+      DedupIndex.read(spark, ReleaseFlow.dedupDir(base))).map(_.schema)
+    def reads(pinned: Boolean): Seq[DataFrame] = {
+      def s(i: Int) = if (pinned) Some(sch(i)) else None
+      val nd = StreamingNearDup.readIndex(spark, ReleaseFlow.neardupDir(base),
+        if (pinned) Some(nd0) else None)
+      Seq(nd.sketch, nd.bands,
+        SubstringIndex.read(spark, ReleaseFlow.substrDir(base), s(0)),
+        WinnowIndex.read(spark, ReleaseFlow.winnowDir(base), s(1)),
+        DedupIndex.read(spark, ReleaseFlow.dedupDir(base), s(2)))
+    }
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def same(step: String): Seq[Int] =
+      reads(pinned = true).zip(reads(pinned = false)).zipWithIndex.map {
+        case ((p, i), k) =>
+          assert(p.schema === i.schema, s"$step: read $k schema")
+          assert(rows(p) === rows(i), s"$step: read $k rows")
+          p.select("doc_id").distinct().collect().length
+      }
+    assert(same("init").forall(_ == 4))
+    val shard = docs(5 to 6)
+    DedupIndex.append(shard, ReleaseFlow.dedupDir(base))
+    StreamingNearDup.appendIndex(shard, ReleaseFlow.neardupDir(base))
+    SubstringIndex.append(shard, ReleaseFlow.substrDir(base))
+    WinnowIndex.append(shard, ReleaseFlow.winnowDir(base))
+    assert(same("append").forall(_ == 6), "the pinned read must list afresh")
+    ReleaseFlow.compact(spark, base)
+    assert(same("compact").forall(_ == 6))
+    ReleaseFlow.retract(spark, Seq(5L).toDF("doc_id"), base)
+    assert(same("retract").forall(_ == 5))
+  }
 }

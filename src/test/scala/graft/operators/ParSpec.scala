@@ -48,6 +48,28 @@ class ParSpec extends AnyFunSuite {
     assert(boom.getMessage === "append 3 failed")
   }
 
+  test("a failure is rethrown only after every sibling task finished") {
+    // a fail-fast join would throw while the sleeper still writes —
+    // a caller could then retry or stop with an append in flight
+    val marker = java.nio.file.Files.createTempDirectory("graft_par_")
+      .resolve("written")
+    val boom = intercept[RuntimeException] {
+      Par.run(
+        () => throw new RuntimeException("append 1 failed"),
+        () => { Thread.sleep(300); java.nio.file.Files.createFile(marker); () })
+    }
+    assert(boom.getMessage === "append 1 failed")
+    assert(java.nio.file.Files.exists(marker),
+      "run() threw while a sibling task was still running")
+    val marker2 = marker.resolveSibling("deferred")
+    val join = Par.deferred(Seq(
+      () => { Thread.sleep(300); java.nio.file.Files.createFile(marker2); () },
+      () => throw new RuntimeException("append 2 failed")))
+    assert(intercept[RuntimeException](join()).getMessage === "append 2 failed")
+    assert(java.nio.file.Files.exists(marker2),
+      "deferred's join threw while a sibling task was still running")
+  }
+
   test("empty and single-task arities: no pool, same semantics") {
     Par.run(Seq.empty) // no-op, must not throw
     var ran = false
