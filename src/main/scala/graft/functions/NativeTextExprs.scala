@@ -308,7 +308,14 @@ object GramHash64 {
   * REPRESENTATION must stay the exact strings DuckDB rebuilds.
   *
   * Same null contract as [[GramHash64]]: NULL under k tokens (the
-  * HOF form's size-guard rows), null-poisoned by a null token. */
+  * HOF form's size-guard rows), null-poisoned by a null token.
+  *
+  * Retention: every gram of a row shares that row's joined buffer, so
+  * ONE gram retained past the row (say, buffered in an aggregation
+  * before unsafe conversion) keeps the whole document's bytes alive —
+  * an amplification the per-gram concat form did not have. A consumer
+  * that caches individual grams long-term should copy them
+  * (`UTF8String.fromBytes(g.getBytes)`) at that site. */
 case class GramStrings(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
 

@@ -14,8 +14,8 @@ import graft.functions.{Ivf, SimHash, VectorOps}
   * state: at 100 TB the corpus is signed/clustered ONCE per refresh in
   * batch, the index lands on parquet, and every query afterwards only
   * probes. This object is that steady-state contract — the same
-  * `writeIndex`/`readIndex` treatment the streaming near-dup corpus
-  * index already gets ([[graft.streaming.StreamingNearDup.writeIndex]]),
+  * `write`/`readIndex` treatment the streaming near-dup corpus
+  * index already gets ([[graft.streaming.StreamingNearDup.write]]),
   * extended to both ANN families. The reference encodes the identical
   * philosophy with its precomputed index set (`sql/init/
   * 03_create_indexes.sql` — build indexes once, point queries probe).
@@ -26,7 +26,8 @@ import graft.functions.{Ivf, SimHash, VectorOps}
   * plan — pinned by AnnIndexSpec against the same sf0.01 goldens.
   *
   * Persisted layout (the 100 TB shape):
-  *  - LSH bands cluster by (band_id, bval): a probe pushes its 4 band
+  *  - LSH bands cluster by (band_id, bval) (one [[IndexArtifact]]
+  *    layout for write, append and retract): a probe pushes its 4 band
   *    keys down as literal predicates, so row-group min/max stats on
   *    the clustered layout skip everything outside the query's 4 band
   *    values.
@@ -49,13 +50,16 @@ object AnnIndexes {
       .select(col("vec_id"), explode(SimHash.bands(col("sig"), 4, 16)).as("b"))
       .select(col("vec_id"), col("b.band_id"), col("b.bval"))
 
+  /** The persisted band rows: hash-partitioned by band_id, sorted by
+    * (band_id, bval) within each file. */
+  private val LshArtifact =
+    IndexArtifact.hashClustered("lsh_bands", "vec_id", "band_id", "band_id", "bval")
+
   def writeLsh(bands: DataFrame, base: String): Unit =
-    bands.repartition(col("band_id"))
-      .sortWithinPartitions("band_id", "bval")
-      .write.mode("overwrite").parquet(s"$base/lsh_bands")
+    LshArtifact.write(bands, base)
 
   def readLsh(spark: SparkSession, base: String): DataFrame =
-    Compaction.readLive(spark, s"$base/lsh_bands")
+    LshArtifact.read(spark, base)
 
   /** Incremental append: band rows for `newVecs` land beside the
     * existing index files. The LSH signature is a PURE per-row function
@@ -65,11 +69,7 @@ object AnnIndexes {
     * like the original write; row-group skipping still applies per
     * file. */
   def appendLsh(newVecs: DataFrame, base: String): Unit =
-    Compaction.appendInto(newVecs.sparkSession, s"$base/lsh_bands") { live =>
-      lshBands(newVecs).repartition(col("band_id"))
-        .sortWithinPartitions("band_id", "bval")
-        .write.mode("append").parquet(live)
-    }
+    LshArtifact.append(lshBands(newVecs), base)
 
   /** Retract vectors from BOTH persisted artifacts under `base` —
     * `lsh_bands` and/or `ivf_lists`, whichever exist — with ONE id set
@@ -82,8 +82,7 @@ object AnnIndexes {
     * read (loud FileNotFound under a cached listing, silently-empty
     * after a refresh; AnnIndexSpec pins the safe path). */
   def retract(spark: SparkSession, ids: DataFrame, base: String): Unit =
-    retractPinned(spark, ids.select("vec_id").distinct().localCheckpoint(),
-      base)
+    retractPinned(spark, IndexArtifact.pinIds(ids, "vec_id"), base)
 
   /** [[retract]] for an id frame the caller already materialized
     * ([[ReleaseFlow.retractAll]] pins one set across the whole
@@ -97,7 +96,7 @@ object AnnIndexes {
     }
     // disjoint artifact dirs — concurrent swaps ([[Par]], guide §2.6)
     Par.run(Seq(
-      ("lsh_bands", () => retractLshPinned(spark, pinned, base)),
+      ("lsh_bands", () => LshArtifact.retract(spark, pinned, base)),
       ("ivf_lists", () => retractIvfPinned(spark, pinned, base)),
       ("ivf8_lists", () => retractIvfInt8Pinned(spark, pinned, base)))
       .collect { case (d, t) if exists(s"$base/$d") => t })
@@ -115,17 +114,8 @@ object AnnIndexes {
     * it). For an id list whose lineage might read EITHER vector
     * artifact, use [[retract]] (one pin across both swaps). */
   def retractLsh(spark: SparkSession, ids: DataFrame, base: String): Unit =
-    // pin before the swap ([[ReleaseFlow.retract]]'s discipline): a
-    // caller may derive ids from a frame whose lineage reads this very
-    // artifact, and an unpinned plan re-evaluated after the swap would
-    // silently retract nothing
-    retractLshPinned(spark,
-      ids.select("vec_id").distinct().localCheckpoint(), base)
-
-  private def retractLshPinned(spark: SparkSession, pinned: DataFrame,
-      base: String): Unit =
-    Compaction.retract(spark, s"$base/lsh_bands", pinned, "vec_id")(
-      _.repartition(col("band_id")).sortWithinPartitions("band_id", "bval"))
+    // pinned before the swap ([[IndexArtifact.pinIds]])
+    LshArtifact.retract(spark, IndexArtifact.pinIds(ids, "vec_id"), base)
 
   /** Top-k by exact cosine among the vectors sharing ≥1 LSH band with
     * the query. `bands` may be the composed [[lshBands]] frame or a
@@ -394,7 +384,7 @@ object AnnIndexes {
   def retractIvf(spark: SparkSession, ids: DataFrame, base: String): Unit =
     retractIvfPinned(spark,
       // pinned before the swap — same lineage hazard as [[retractLsh]]
-      ids.select("vec_id").distinct().localCheckpoint(), base)
+      IndexArtifact.pinIds(ids, "vec_id"), base)
 
   private def retractIvfPinned(spark: SparkSession, pinned: DataFrame,
       base: String): Unit = {
@@ -589,7 +579,7 @@ object AnnIndexes {
     * would leave the retracted vectors probe-visible. */
   def retractIvfInt8(spark: SparkSession, ids: DataFrame, base: String): Unit =
     retractIvfInt8Pinned(spark,
-      ids.select("vec_id").distinct().localCheckpoint(), base)
+      IndexArtifact.pinIds(ids, "vec_id"), base)
 
   private def retractIvfInt8Pinned(spark: SparkSession, pinned: DataFrame,
       base: String): Unit = {

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.StructType
   * overlapping range-clustered file sets, so footer min/max spans
   * widen back toward the whole key domain and a key-ranged probe
   * stops skipping files (the selectivity the range clustering was
-  * built for — see [[SubstringIndex.write]]'s layout argument). The
+  * built for — see [[IndexArtifact]]'s layout argument). The
   * 100 TB story needs the maintenance op that restores the layout:
   * read → re-cluster → rewrite, each index by its own probe key.
   *
@@ -83,7 +83,7 @@ import org.apache.spark.sql.types.StructType
   * needing concurrent writers is the transactional-table-format
   * regime, where this same scheme is the format's commit protocol.
   *
-  * HIGH-FILE-COUNT bound, measured (graft.BenchManifest, round 18, at
+  * HIGH-FILE-COUNT bound, measured (BENCH_NOTES.md, round 18, at
   * ~34k one-row files — the 100 TB-artifact file-count regime at 2 GB
   * targets): the flat-manifest machinery itself is flat-cheap —
   * `appendInto`'s two tree walks + atomic manifest extension 0.29 s,

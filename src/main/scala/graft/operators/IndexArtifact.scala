@@ -1,0 +1,153 @@
+package graft.operators
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
+
+/** One compactable index artifact — THE definition of where it lives
+  * under its index's dir (`sub`), which column a retraction keys on
+  * (`idCol`: doc_id, or vec_id for the ANN artifacts), and its physical
+  * layout. Every lifecycle step derives from that one definition on top
+  * of the [[Compaction]] primitives, so init, append, compact and
+  * retract cannot cluster the same artifact differently.
+  *
+  * The layout is what makes a persisted index probe-able at scale:
+  * [[IndexArtifact.rangeClustered]] range-partitions on the probe key
+  * and sorts within each file, so each file covers a NARROW key range
+  * and its footer min/max let a key-ranged probe skip whole files, not
+  * just row groups (a hash-partitioned file's min/max spans ~the whole
+  * key domain). The LSH bands hash-partition instead — a probe pushes
+  * literal band keys, so one band per file is the selectivity it needs.
+  * Appends write the same layout, so the probe layout holds between
+  * compactions and the file count follows the appended bytes (AQE
+  * coalescing), not the input frame's partitioning.
+  *
+  * Retraction takes an id frame the caller already PINNED
+  * ([[IndexArtifact.pinIds]]): [[Compaction.retract]] evaluates it more
+  * than once, and a lazy frame whose lineage reads this very artifact
+  * would re-evaluate after the swap and silently under-retract.
+  */
+final class IndexArtifact private (sub: String, idCol: String,
+    layout: DataFrame => DataFrame) {
+
+  def dir(base: String): String = s"$base/$sub"
+
+  /** Replace the artifact with `rows` — a fresh flat layout (any
+    * version pointer is reset with it). */
+  def write(rows: DataFrame, base: String): Unit =
+    layout(rows).write.mode("overwrite").parquet(dir(base))
+
+  /** Land `rows` beside the live files, manifest-extended when the live
+    * tree carries one ([[Compaction.appendInto]]). */
+  def append(rows: DataFrame, base: String): Unit =
+    Compaction.appendInto(rows.sparkSession, dir(base))(
+      layout(rows).write.mode("append").parquet(_))
+
+  /** The live rows; `schema` skips inference ([[Compaction.readLive]]). */
+  def read(spark: SparkSession, base: String,
+      schema: Option[StructType] = None): DataFrame =
+    Compaction.readLive(spark, dir(base), schema)
+
+  /** Restore the layout after an append chain — row multiset unchanged. */
+  def compact(spark: SparkSession, base: String): Unit =
+    Compaction.rewrite(spark, dir(base))(layout)
+
+  /** Drop every row whose `idCol` is in `pinned` — equals a rebuild
+    * without those ids exactly ([[Compaction.retract]]). */
+  def retract(spark: SparkSession, pinned: DataFrame, base: String): Unit =
+    Compaction.retract(spark, dir(base), pinned, idCol)(layout)
+}
+
+object IndexArtifact {
+
+  /** Range-partitioned on `keys` and sorted within each file — every
+    * document index's layout. */
+  def rangeClustered(sub: String, keys: String*): IndexArtifact =
+    new IndexArtifact(sub, "doc_id",
+      _.repartitionByRange(keys.map(col): _*).sortWithinPartitions(keys.map(col): _*))
+
+  /** Hash-partitioned on `part`, sorted within each file by `sort`. */
+  def hashClustered(sub: String, idCol: String, part: String,
+      sort: String*): IndexArtifact =
+    new IndexArtifact(sub, idCol,
+      _.repartition(col(part)).sortWithinPartitions(sort.map(col): _*))
+
+  /** The distinct ids of `ids`, materialized once — what a retraction
+    * across one or more artifacts takes, so every swap sees the same
+    * id set however its lineage reads the artifacts. */
+  def pinIds(ids: DataFrame, idCol: String = "doc_id"): DataFrame =
+    ids.select(idCol).distinct().localCheckpoint()
+}
+
+/** A persisted document index: the artifacts it keeps under one dir and
+  * how a document frame becomes their rows. Index rows are a PURE
+  * per-doc function of a document (no trained state), so append ≡
+  * rebuild and retract ≡ rebuild-on-complement hold exactly, provided
+  * appended doc_ids don't collide with indexed ones (the caller's id
+  * authority). Compaction and retraction derive from [[artifacts]]. */
+trait DocIndex {
+  def artifacts: Seq[IndexArtifact]
+
+  /** Build from `docs` and write every artifact fresh under `base`. */
+  def write(docs: DataFrame, base: String): Unit
+
+  /** Build from `docs` and append to every artifact under `base`. */
+  def append(docs: DataFrame, base: String): Unit
+
+  def compact(spark: SparkSession, base: String): Unit =
+    IndexSet(this -> base).compact(spark)
+
+  /** Remove every row of the documents in `ids` (a doc_id frame),
+    * pinned once across all of this index's artifacts. */
+  def retract(spark: SparkSession, ids: DataFrame, base: String): Unit =
+    IndexSet(this -> base).retract(spark, ids)
+}
+
+/** A document index of one artifact whose rows are [[build]]`(docs)`. */
+abstract class OneArtifactIndex(protected val artifact: IndexArtifact)
+    extends DocIndex {
+
+  /** The index frame of a document frame. */
+  def build(docs: DataFrame): DataFrame
+
+  final def artifacts: Seq[IndexArtifact] = Seq(artifact)
+
+  def write(docs: DataFrame, base: String): Unit =
+    artifact.write(build(docs), base)
+
+  def append(docs: DataFrame, base: String): Unit =
+    artifact.append(build(docs), base)
+
+  def read(spark: SparkSession, base: String,
+      schema: Option[StructType] = None): DataFrame =
+    artifact.read(spark, base, schema)
+}
+
+/** The indexes a release holds, each placed under its own dir — THE
+  * list a release flow's init, appends, compaction and retraction
+  * iterate, so one place knows every artifact a release writes. Members
+  * write disjoint dirs, so each step runs them concurrently ([[Par]]). */
+final case class IndexSet(members: (DocIndex, String)*) {
+
+  def write(docs: DataFrame): Unit =
+    Par.run(members.map { case (ix, d) => () => ix.write(docs, d) })
+
+  /** Start every member's append now; the returned join blocks until
+    * all landed ([[Par.deferred]]). */
+  def appendDeferred(docs: DataFrame): () => Unit =
+    Par.deferred(members.map { case (ix, d) => () => ix.append(docs, d) })
+
+  def append(docs: DataFrame): Unit = appendDeferred(docs)()
+
+  def compact(spark: SparkSession): Unit = each(_.compact(spark, _))
+
+  def retract(spark: SparkSession, ids: DataFrame): Unit =
+    retractPinned(spark, IndexArtifact.pinIds(ids))
+
+  def retractPinned(spark: SparkSession, pinned: DataFrame): Unit =
+    each(_.retract(spark, pinned, _))
+
+  private def each(step: (IndexArtifact, String) => Unit): Unit =
+    Par.run(for ((ix, d) <- members; a <- ix.artifacts)
+      yield () => step(a, d))
+}

@@ -57,30 +57,24 @@ object MediaReleaseFlow {
     media.filter(MediaAdmission.decodable)
       .select(sha2(col("payload"), 256).as("h"), col("doc_id"))
 
-  private def writeBytes(media: DataFrame, base: String, mode: String): Unit = {
-    val dir = s"${bytehashDir(base)}/payload_hashes"
-    def put(path: String): Unit =
-      buildByteIndex(media).repartitionByRange(col("h"))
-        .sortWithinPartitions("h")
-        .write.mode(mode).parquet(path)
-    // appends land in the LIVE version tree (manifest-extended when
-    // one exists); an overwrite resets the whole artifact (pointer
-    // included) to a fresh flat layout
-    if (mode == "append")
-      Compaction.appendInto(media.sparkSession, dir)(put)
-    else put(dir)
+  private object ByteIndex extends OneArtifactIndex(
+      IndexArtifact.rangeClustered("payload_hashes", "h")) {
+    def build(media: DataFrame): DataFrame = buildByteIndex(media)
   }
 
   def readByteIndex(spark: SparkSession, base: String): DataFrame =
-    Compaction.readLive(spark, s"${bytehashDir(base)}/payload_hashes")
+    ByteIndex.read(spark, bytehashDir(base))
+
+  /** The release's two indexes — what init, the release appends,
+    * compaction and retraction ([[ReleaseFlow.retractAll]]'s included)
+    * iterate. */
+  private[operators] def indexes(base: String): IndexSet =
+    IndexSet(ByteIndex -> bytehashDir(base),
+      StreamingMediaDedup -> phashDir(base))
 
   /** Initialize the artifact pair from the first media corpus version.
     * `media` must carry (doc_id, payload). */
-  def init(media: DataFrame, base: String): Unit =
-    Par.run(
-      () => writeBytes(media, base, "overwrite"),
-      () => StreamingMediaDedup.writeIndex(
-        StreamingMediaDedup.buildIndex(media), phashDir(base)))
+  def init(media: DataFrame, base: String): Unit = indexes(base).write(media)
 
   /** Screen `shard` (doc_id, payload) against the persisted artifacts,
     * append the admitted slice to both, return the labeled decision
@@ -107,9 +101,7 @@ object MediaReleaseFlow {
       .localCheckpoint() // pin decisions BEFORE the appends mutate state
     val admitted = decided.filter(col("decision") === "admit")
       .select("doc_id", "payload")
-    Par.run(
-      () => writeBytes(admitted, base, "append"),
-      () => StreamingMediaDedup.appendIndex(admitted, phashDir(base)))
+    indexes(base).append(admitted)
     decided
   }
 
@@ -119,25 +111,12 @@ object MediaReleaseFlow {
     * had never been released (RetractSpec pins multiset equality with
     * the pre-release artifacts and with a complement rebuild). */
   def retract(spark: SparkSession, docIds: DataFrame, base: String): Unit =
-    retractPinned(spark,
-      docIds.select("doc_id").distinct().localCheckpoint(), base)
-
-  /** [[retract]] for an already-materialized id frame
-    * ([[ReleaseFlow.retractAll]]'s one-pin discipline). */
-  private[graft] def retractPinned(spark: SparkSession, ids: DataFrame,
-      base: String): Unit =
-    Par.run(
-      () => Compaction.retract(spark, s"${bytehashDir(base)}/payload_hashes",
-        ids)(_.repartitionByRange(col("h")).sortWithinPartitions("h")),
-      () => StreamingMediaDedup.retractIndexPinned(spark, ids, phashDir(base)))
+    indexes(base).retract(spark, docIds)
 
   /** Compact both artifacts — [[ReleaseFlow.compact]]'s maintenance op
     * for the media lifecycle (see [[Compaction]]). */
   def compact(spark: SparkSession, base: String): Unit =
-    Par.run(
-      () => Compaction.rewrite(spark, s"${bytehashDir(base)}/payload_hashes")(
-        _.repartitionByRange(col("h")).sortWithinPartitions("h")),
-      () => StreamingMediaDedup.compactIndex(spark, phashDir(base)))
+    indexes(base).compact(spark)
 
   /** The release audit rollup — decisions per reason with an identity
     * checksum, the accounting row a media release report carries. */

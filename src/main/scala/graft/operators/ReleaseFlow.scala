@@ -69,18 +69,23 @@ object ReleaseFlow {
   def substrDir(base: String): String  = s"$base/substr"
   def winnowDir(base: String): String  = s"$base/winnow"
 
+  /** The release's four indexes, each under its own dir — THE artifact
+    * list: init, the release appends, [[compact]] and [[retract]] all
+    * iterate it, so it is the one place that knows every artifact a
+    * release writes. */
+  private[operators] def indexes(base: String): IndexSet =
+    IndexSet(DedupIndex -> dedupDir(base),
+      StreamingNearDup -> neardupDir(base),
+      SubstringIndex -> substrDir(base),
+      WinnowIndex -> winnowDir(base))
+
   /** Initialize the artifact set from the first corpus version.
     * `corpus` must carry (lang, doc_id, text). The four builds are
     * independent single-writer jobs over disjoint directories — they
     * run concurrently ([[Par]], guide §2.6) so wall clock is the
     * slowest build, not the sum of four. */
   def init(corpus: DataFrame, base: String): Unit =
-    Par.run(
-      () => DedupIndex.write(corpus, dedupDir(base)),
-      () => StreamingNearDup.writeIndex(StreamingNearDup.buildIndex(corpus),
-        neardupDir(base)),
-      () => SubstringIndex.write(corpus, substrDir(base)),
-      () => WinnowIndex.write(corpus, winnowDir(base)))
+    indexes(base).write(corpus)
 
   /** Opt-in screens beyond the three standing artifacts — the two
     * decision arms that need caller-supplied state: `contaminated`
@@ -177,11 +182,7 @@ object ReleaseFlow {
     // the winnow append keeping the tier's coverage invariant
     // regardless of completion order; the returned join is where "ALL
     // artifacts landed" becomes true
-    val joinAppends = Par.deferred(Seq(
-      () => DedupIndex.append(admitted, dedupDir(base)),
-      () => StreamingNearDup.appendIndex(admitted, neardupDir(base)),
-      () => SubstringIndex.append(admitted, substrDir(base)),
-      () => WinnowIndex.append(admitted, winnowDir(base))))
+    val joinAppends = indexes(base).appendDeferred(admitted)
     val decided = decidedFull
       .drop((AdmissionPipeline.GatePreCols ++
         (if (addChars) Seq("n_chars") else Seq.empty[String])): _*)
@@ -310,11 +311,7 @@ object ReleaseFlow {
     * CompactionSpec pins it through a live release). Offline op, like
     * the init/release calls themselves. */
   def compact(spark: SparkSession, base: String): Unit =
-    Par.run(
-      () => DedupIndex.compact(spark, dedupDir(base)),
-      () => StreamingNearDup.compactIndex(spark, neardupDir(base)),
-      () => SubstringIndex.compact(spark, substrDir(base)),
-      () => WinnowIndex.compact(spark, winnowDir(base)))
+    indexes(base).compact(spark)
 
   /** RETRACTION — the RECALL half of the release lifecycle: remove
     * every artifact row derived from `docIds` across all four indexes,
@@ -356,25 +353,12 @@ object ReleaseFlow {
     * transactional-format regime, where the format's own delete
     * vectors ARE the tombstone tier, applied uniformly at scan level
     * below every reader. */
-  def retract(spark: SparkSession, docIds: DataFrame, base: String): Unit = {
-    // pin the id list before the first swap: a caller may derive it
-    // from a frame whose lineage reads these very artifacts
-    val ids = docIds.select("doc_id").distinct().localCheckpoint()
-    retractPinnedAll(spark, ids, base)
-  }
-
-  /** The four release-artifact retractions over ONE pinned id set —
-    * independent versioned swaps on disjoint dirs, run concurrently
-    * ([[Par]]): each is its own discovery scan + rewrite + GC, and the
-    * substring rewrite (the largest artifact) dominates, so the other
-    * three ride inside its wall clock. */
-  private def retractPinnedAll(spark: SparkSession, ids: DataFrame,
-      base: String): Unit =
-    Par.run(
-      () => DedupIndex.retractPinned(spark, ids, dedupDir(base)),
-      () => StreamingNearDup.retractIndexPinned(spark, ids, neardupDir(base)),
-      () => SubstringIndex.retractPinned(spark, ids, substrDir(base)),
-      () => WinnowIndex.retractPinned(spark, ids, winnowDir(base)))
+  def retract(spark: SparkSession, docIds: DataFrame, base: String): Unit =
+    // the id list is pinned before the first swap: a caller may derive
+    // it from a frame whose lineage reads these very artifacts. The
+    // five swaps are independent and run concurrently; the span-gram
+    // rewrite (the largest artifact) dominates the wall clock.
+    indexes(base).retract(spark, docIds)
 
   /** A deployment's full artifact footprint, for [[retractAll]]. The
     * three artifact families a corpus deployment accumulates:
@@ -415,17 +399,17 @@ object ReleaseFlow {
     * (artifact, action) ledger of what moved. */
   def retractAll(spark: SparkSession, docIds: DataFrame,
       fp: Footprint): Seq[(String, String)] = {
-    val ids = docIds.select("doc_id").distinct().localCheckpoint()
+    val ids = IndexArtifact.pinIds(docIds)
     // every footprint member is an independent artifact root — one
     // concurrent task per root ([[Par]]); the ledger is assembled in
     // the fixed declaration order AFTER all tasks land, so its rows
     // are deterministic regardless of completion order
     val tasks = Seq.newBuilder[() => Unit]
     val out = Seq.newBuilder[(String, String)]
-    tasks += (() => retractPinnedAll(spark, ids, fp.release))
+    tasks += (() => indexes(fp.release).retractPinned(spark, ids))
     out += fp.release -> "retracted (dedup, neardup, substr, winnow)"
     fp.media.foreach { m =>
-      tasks += (() => MediaReleaseFlow.retractPinned(spark, ids, m))
+      tasks += (() => MediaReleaseFlow.indexes(m).retractPinned(spark, ids))
       out += m -> "retracted (bytehash, phash)"
     }
     fp.ann.foreach { a =>

@@ -331,7 +331,11 @@ object SamplingQueries {
         explode(array_distinct(col(LlmQueries.PreGrams))).as("gram"): _*)
     else if (hashed) {
       // native kernel, any width: same distinct hash set per doc as the
-      // string-distinct-then-hash form (see the pre-branch note)
+      // string-distinct-then-hash form (see the pre-branch note). This
+      // branch too changed meaning, from distinct-then-hash to
+      // hash-then-distinct: two distinct grams of one doc that collide
+      // in xxhash64 now yield one row, not two equal ones — every
+      // consumer dedups hashes anyway, so do not "restore" the old form
       graft.functions.NativeTextExprs.ensureRegistered(df.sparkSession)
       df.withColumn("ta", LlmQueries.tokensOf(df))
         .filter(size(col("ta")) >= k)

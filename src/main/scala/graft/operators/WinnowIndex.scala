@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** The PERSISTED winnowing-fingerprint index — l74's build/probe split,
   * the same lifecycle discipline as [[SubstringIndex]] but at 2/(w+1)
@@ -22,16 +21,16 @@ import org.apache.spark.sql.types.StructType
   * One row per selected fingerprint: (h, doc_id) — `h` the 32-bit
   * md5-prefix gram hash ([[AuditQueries.winnowSelect]]'s key div 2²⁰;
   * xxhash64 is the drop-in production key, same note as
-  * [[SubstringIndex]]). Files cluster by `h` (range partitioning +
-  * in-file sort) so parquet footer min/max carry real selectivity for
-  * hash-keyed probes.
+  * [[SubstringIndex]]). Files range-cluster by `h` (the layout is
+  * [[IndexArtifact]]'s) so parquet footer min/max carry real
+  * selectivity for hash-keyed probes.
   *
-  * Append contract (same as every index here): fingerprints are a PURE
-  * per-row function of a document — no trained state — so
-  * append-then-probe equals full rebuild exactly, provided appended
-  * doc_ids don't collide with indexed ones (the caller's id authority).
+  * Append/retract contract: [[DocIndex]]'s — winnow selection is
+  * per-doc (window-min inside one document, never across), so dropping
+  * a doc's rows equals a rebuild without it exactly.
   */
-object WinnowIndex {
+object WinnowIndex extends OneArtifactIndex(
+    IndexArtifact.rangeClustered(WinnowIndex.FmtDir, "h")) {
 
   /** The artifact's key-format VERSION, encoded in the directory name so
     * a format change fails LOUDLY at read (PATH_NOT_FOUND) instead of
@@ -41,7 +40,7 @@ object WinnowIndex {
     * error. v2 = masked xxhash64 keys (v1 was the md5-prefix stand-in,
     * retired in round 14). Bump this whenever [[fingerprints]]' key
     * derivation changes. */
-  private val FmtDir = "winnow_fp_v2"
+  private final val FmtDir = "winnow_fp_v2"
 
   /** One row per distinct selected fingerprint hash per document,
     * `keyCols` carried through. Per-doc dedup is a row-local
@@ -72,56 +71,21 @@ object WinnowIndex {
   def build(corpus: DataFrame): DataFrame =
     fingerprints(corpus, Seq("doc_id"))
 
-  def write(corpus: DataFrame, base: String): Unit =
-    build(corpus).repartitionByRange(col("h"))
-      .sortWithinPartitions("h")
-      .write.mode("overwrite").parquet(s"$base/$FmtDir")
-
-  def append(newDocs: DataFrame, base: String): Unit = {
+  override def append(newDocs: DataFrame, base: String): Unit = {
     // an append without a prior CURRENT-format write would silently
     // create a fresh partial artifact beside a retired-format one —
     // the tier would then read only post-upgrade docs and under-flag
     // verbatim repeats with no error (the exact failure the versioned
     // directory exists to prevent). Appends require the v-current dir.
-    val dir = new org.apache.hadoop.fs.Path(s"$base/$FmtDir")
+    val dir = new org.apache.hadoop.fs.Path(artifact.dir(base))
     val fs = dir.getFileSystem(
       newDocs.sparkSession.sparkContext.hadoopConfiguration)
     require(fs.exists(dir),
       s"winnow append: no $FmtDir artifact under $base — append requires a " +
         "prior init/write in the current key format; a retired-format " +
         "directory here means rebuild the artifact, don't append to it")
-    Compaction.appendInto(newDocs.sparkSession, s"$base/$FmtDir") { live =>
-      build(newDocs).repartitionByRange(col("h"))
-        .sortWithinPartitions("h")
-        .write.mode("append").parquet(live)
-    }
+    super.append(newDocs, base)
   }
-
-  def read(spark: SparkSession, base: String,
-      schema: Option[StructType] = None): DataFrame =
-    Compaction.readLive(spark, s"$base/$FmtDir", schema)
-
-  /** Restore the range-clustered layout after an append chain — see
-    * [[Compaction]]. Row multiset unchanged. */
-  def compact(spark: SparkSession, base: String): Unit =
-    Compaction.rewrite(spark, s"$base/$FmtDir")(
-      _.repartitionByRange(col("h")).sortWithinPartitions("h"))
-
-  /** Remove every fingerprint row of documents in `ids` (a doc_id
-    * frame) — [[Compaction.retract]]'s contract on this artifact:
-    * winnow selection is per-doc (window-min inside one document,
-    * never across), so dropping a doc's rows equals a rebuild without
-    * it exactly. */
-  def retract(spark: SparkSession, ids: DataFrame, base: String): Unit =
-    retractPinned(spark, ids.select("doc_id").distinct().localCheckpoint(),
-      base)
-
-  /** [[retract]] for an already-materialized id frame (the combined
-    * [[ReleaseFlow.retract]] pins once across all four artifacts). */
-  private[graft] def retractPinned(spark: SparkSession, pinned: DataFrame,
-      base: String): Unit =
-    Compaction.retract(spark, s"$base/$FmtDir", pinned)(
-      _.repartitionByRange(col("h")).sortWithinPartitions("h"))
 
   /** Screen NEW documents against the indexed corpus: per probe doc,
     * the count of its selected fingerprints that exist in the index

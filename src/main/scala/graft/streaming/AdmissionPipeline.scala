@@ -360,7 +360,7 @@ object AdmissionPipeline {
   /** [[start]] with LIVE indexes: each microbatch re-resolves every
     * configured persisted index by PATH, and once the decisions land
     * the batch's admitted docs are appended to each of them
-    * ([[StreamingNearDup.appendIndex]], [[SubstringIndex.append]],
+    * ([[StreamingNearDup.append]], [[SubstringIndex.append]],
     * [[WinnowIndex.append]], [[DedupIndex.append]]) — so a doc
     * admitted in batch N flags its near-copy, its partial span lifts
     * and its byte-copies in batch N+1 without waiting for a corpus
@@ -379,7 +379,7 @@ object AdmissionPipeline {
     * a failed append fails the batch, which replays whole. A replayed
     * append lands duplicate index rows, which screens tolerate
     * (pair-level distinct) at the cost of index bytes until the next
-    * rebuild compacts them — the [[StreamingNearDup.appendIndex]]
+    * rebuild compacts them — the [[StreamingNearDup.append]]
     * contract, whichever appends had landed. Both index-backed dedup
     * arms are additionally replay-DECISION-idempotent: [[decide]]
     * anti-joins each screen's corpus-side owner ids against the batch's
@@ -429,6 +429,8 @@ object AdmissionPipeline {
     val spanSchema = substrIndexDir.map(SubstringIndex.read(spark, _).schema)
     val winnowSchema = winnowDir.map(WinnowIndex.read(spark, _).schema)
     val hashSchema = exactHashDir.map(DedupIndex.read(spark, _).schema)
+    val evalSchema =
+      evalVecsDir.map(StreamingSemanticDecontam.readIndex(spark, _).schema)
     deduped.writeStream
       .option("checkpointLocation", s"$outDir/_checkpoint")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -445,15 +447,15 @@ object AdmissionPipeline {
           corpusWinnow = winnowDir.map(WinnowIndex.read(spark, _, winnowSchema)),
           classifier = classifier,
           exactHashes = exactHashDir.map(DedupIndex.read(spark, _, hashSchema)),
-          evalVecs = evalVecsDir.map(d =>
-            StreamingSemanticDecontam.readIndex(spark, d)))
+          evalVecs = evalVecsDir.map(
+            StreamingSemanticDecontam.readIndex(spark, _, evalSchema)))
         // one decision checkpoint, five consumers (the sink and four
         // appends); it keeps the pre-columns so the appends project them
         val decisions = decide(gatePin(batch), gates).localCheckpoint()
         writeDecisions(decisions.drop(GatePreCols: _*), outDir, batchId)
         val admitted = decisions.filter(col("reason") === "admit")
         val appends = Seq.newBuilder[() => Unit]
-        appends += (() => StreamingNearDup.appendIndex(admitted, neardupIndexDir))
+        appends += (() => StreamingNearDup.append(admitted, neardupIndexDir))
         substrIndexDir.foreach { d =>
           val withLang =
             if (admitted.columns.contains("lang")) admitted

@@ -186,7 +186,7 @@ object MediaAdmission {
     * admits from flipping to `media_duplicate` against their own or
     * their batch-mates' index rows, and the duplicate
     * index rows the re-append lands are screen-tolerated — the
-    * [[StreamingMediaDedup.appendIndex]] contract. */
+    * [[StreamingMediaDedup.append]] contract. */
   def startLive(spark: SparkSession, stream: DataFrame,
       phashIndexDir: String, outDir: String, tsCol: String,
       delay: String): StreamingQuery = {
@@ -196,7 +196,7 @@ object MediaAdmission {
         val gates = Gates(StreamingMediaDedup.readIndex(spark, phashIndexDir))
         val decisions = decide(batch.localCheckpoint(), gates).localCheckpoint()
         writeDecisions(decisions, outDir, batchId)
-        StreamingMediaDedup.appendIndex(
+        StreamingMediaDedup.append(
           decisions.filter(col("reason") === "admit")
             .select("doc_id", "payload"), phashIndexDir)
       }

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Par
+
 /** Hash-partitioned latest-wins upsert — the 100 TB form of the
   * normalized sink.
   *
@@ -47,23 +49,14 @@ object PartitionedUpsert {
     // Bucket merges are independent (disjoint key spaces, disjoint
     // directories), so they run as concurrent Spark jobs — the
     // scheduler interleaves their stages instead of serializing
-    // read→merge→write per bucket. Any failure propagates.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(8, touched.size)))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.traverse(touched) { b =>
-          scala.concurrent.Future {
-            val inc = withBucket.filter(col("_b") === b).drop("_b")
-            val merged = IngestPipeline.latestWins(
-              IngestPipeline.existing(spark, bucketPath(path, b)), inc, pk, tieBreak)
-            IngestPipeline.swapWrite(spark, merged, bucketPath(path, b))
-          }
-        },
-        scala.concurrent.duration.Duration.Inf)
-    finally pool.shutdown()
+    // read→merge→write per bucket. A failure is rethrown only once
+    // every other bucket's swap has finished ([[Par.run]]).
+    Par.run(touched.map { b => () =>
+      val inc = withBucket.filter(col("_b") === b).drop("_b")
+      val merged = IngestPipeline.latestWins(
+        IngestPipeline.existing(spark, bucketPath(path, b)), inc, pk, tieBreak)
+      IngestPipeline.swapWrite(spark, merged, bucketPath(path, b))
+    })
     touched
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Multimodal
-import graft.operators.LlmQueries
+import graft.operators.{DocIndex, IndexArtifact, LlmQueries, Par}
 
 /** Streaming MEDIA near-duplicate screen — incoming media payloads
   * checked against the landed corpus' perceptual-hash index before
@@ -20,8 +20,9 @@ import graft.operators.LlmQueries
   *    their 4×16-bit band keys — built in batch by the SAME signature
   *    math as l53 ([[Multimodal.signatureOf]], shared down to the
   *    histogram fold, so batch and stream can never disagree) and
-  *    persisted as parquet: bands clustered by (band_id, bkey) for the
-  *    probe's equi-join, signatures by doc_id for the verify join.
+  *    persisted as parquet ([[artifacts]]): bands range-clustered by
+  *    (band_id, bkey) for the probe's equi-join, signatures by doc_id
+  *    for the verify join.
   *  - The STREAM side is stateless per row: signature computed in
   *    place ([[Multimodal.sigCol]] — a per-row JVM map, no shuffle),
   *    bands exploded map-side, candidates from STREAM-STATIC
@@ -37,7 +38,7 @@ import graft.operators.LlmQueries
   * the Hamming distance. Admission policy is the caller's sink
   * decision, as for the text gates.
   */
-object StreamingMediaDedup {
+object StreamingMediaDedup extends DocIndex {
 
   /** Batch-built corpus index: `sigs` = (doc_id, sig),
     * `bands` = (doc_id, band_id, bkey). */
@@ -50,78 +51,34 @@ object StreamingMediaDedup {
     Index(sigs, Multimodal.sigBandFrame(sigs))
   }
 
+  private val Sigs = IndexArtifact.rangeClustered("sigs", "doc_id")
+  private val Bands =
+    IndexArtifact.rangeClustered("bands", "band_id", "bkey")
+
+  def artifacts: Seq[IndexArtifact] = Seq(Sigs, Bands)
+
   /** Persist — the steady-state contract: the corpus is signed once
     * per refresh in batch; every streaming screen reads the SAME
-    * materialized frames. Band rows clustered by (band_id, bkey) so
-    * the probe equi-join scans clustered row groups; signatures by
-    * doc_id for the verify join. */
-  def writeIndex(idx: Index, base: String): Unit =
-    graft.operators.Par.run(
-      () => idx.sigs.sortWithinPartitions("doc_id")
-        .write.mode("overwrite").parquet(s"$base/sigs"),
-      () => idx.bands.sortWithinPartitions("band_id", "bkey")
-        .write.mode("overwrite").parquet(s"$base/bands"))
+    * materialized frames. */
+  def write(media: DataFrame, base: String): Unit = {
+    val idx = buildIndex(media)
+    Par.run(() => Sigs.write(idx.sigs, base),
+      () => Bands.write(idx.bands, base))
+  }
 
   def readIndex(spark: SparkSession, base: String): Index =
-    Index(
-      graft.operators.Compaction.readLive(spark, s"$base/sigs"),
-      graft.operators.Compaction.readLive(spark, s"$base/bands"))
-
-  /** Restore both frames' clustered layout after an append chain —
-    * [[StreamingNearDup.compactIndex]]'s contract on the media
-    * column. Row multisets unchanged. */
-  def compactIndex(spark: SparkSession, base: String): Unit =
-    graft.operators.Par.run(
-      () => graft.operators.Compaction.rewrite(spark, s"$base/sigs")(
-        _.repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id")),
-      () => graft.operators.Compaction.rewrite(spark, s"$base/bands")(
-        _.repartitionByRange(col("band_id"), col("bkey"))
-          .sortWithinPartitions("band_id", "bkey")))
-
-  /** Remove every signature and band row of items in `ids` (a doc_id
-    * frame) — [[StreamingNearDup.retractIndex]]'s contract on the
-    * media column: both row kinds are pure per-row functions of one
-    * payload, so the anti-join equals a rebuild without those items
-    * exactly. Ids pinned ONCE before the first swap, for the same
-    * lazy-lineage hazard [[StreamingNearDup.retractIndex]] documents. */
-  def retractIndex(spark: SparkSession, ids: DataFrame,
-      base: String): Unit =
-    retractIndexPinned(spark,
-      ids.select("doc_id").distinct().localCheckpoint(), base)
-
-  /** [[retractIndex]] for an ALREADY-materialized id frame (the
-    * combined [[graft.operators.MediaReleaseFlow.retract]] pins once
-    * across both artifacts). */
-  private[graft] def retractIndexPinned(spark: SparkSession,
-      pinned: DataFrame, base: String): Unit =
-    graft.operators.Par.run(
-      () => graft.operators.Compaction.retract(spark, s"$base/sigs", pinned)(
-        _.repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id")),
-      () => graft.operators.Compaction.retract(spark, s"$base/bands", pinned)(
-        _.repartitionByRange(col("band_id"), col("bkey"))
-          .sortWithinPartitions("band_id", "bkey")))
+    Index(Sigs.read(spark, base), Bands.read(spark, base))
 
   /** Incremental append — newly admitted media join the persisted
     * index without a rebuild. Signature and band rows are a PURE
     * per-row function of the payload, so append-then-read equals a
     * rebuild over the union corpus exactly; the replayed-batch
-    * tolerance contract is [[StreamingNearDup.appendIndex]]'s. */
-  def appendIndex(media: DataFrame, base: String): Unit = {
-    val spark = media.sparkSession
-    val idx = buildIndex(media)
-    val sigs = idx.sigs.localCheckpoint()
-    graft.operators.Par.run(
-      () => graft.operators.Compaction.appendInto(spark, s"$base/sigs") {
-        live =>
-          sigs.sortWithinPartitions("doc_id")
-            .write.mode("append").parquet(live)
-      },
-      () => graft.operators.Compaction.appendInto(spark, s"$base/bands") {
-        live =>
-          Multimodal.sigBandFrame(sigs)
-            .sortWithinPartitions("band_id", "bkey")
-            .write.mode("append").parquet(live)
-      })
+    * tolerance contract is [[StreamingNearDup.append]]'s. */
+  def append(media: DataFrame, base: String): Unit = {
+    // eager pin FIRST: both appends derive from the one signature frame
+    val sigs = buildIndex(media).sigs.localCheckpoint()
+    Par.run(() => Sigs.append(sigs, base),
+      () => Bands.append(Multimodal.sigBandFrame(sigs), base))
   }
 
   /** Screen a streaming media frame (doc_id, payload, `tsCol`) against

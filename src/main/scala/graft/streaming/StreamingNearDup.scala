@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.LlmQueries
+import graft.operators.{DocIndex, IndexArtifact, LlmQueries, Par}
 
 /** Streaming NEAR-duplicate screen — incoming documents checked against
   * the landed corpus before admission, the ingest-side counterpart of
@@ -16,9 +16,9 @@ import graft.operators.LlmQueries
   *    sketch stage as l9 ([[LlmQueries.docSketch]] — identical shingle
   *    hashing, identical `graft_minhash` signature by construction) and
   *    consists of two frames: the per-doc sketch and its 16×4 band
-  *    keys. At 100 TB both persist as parquet (the band index bucketed
-  *    by band key, the sketch by doc id) and are refreshed as batches
-  *    land; here they are frames so specs compose them directly.
+  *    keys. Both persist as parquet (each range-clustered by its join
+  *    key — [[artifacts]]) and are appended as batches land;
+  *    [[buildIndex]]'s frames let specs compose them directly.
   *  - The STREAM side is stateless per row until the final dedup: the
   *    incoming doc's sketch and band keys are computed map-side, then
   *    candidates come from STREAM-STATIC equi-joins — band keys against
@@ -36,7 +36,7 @@ import graft.operators.LlmQueries
   * is the caller's sink decision — typically `foreachBatch` anti-joining
   * the microbatch against the flagged ids before landing.
   */
-object StreamingNearDup {
+object StreamingNearDup extends DocIndex {
 
   /** Jaccard admission threshold ×10000 — l9's near-dup bar. */
   val DefaultThresholdE4 = 6000L
@@ -50,106 +50,49 @@ object StreamingNearDup {
     Index(sk, LlmQueries.minhashBuckets(sk.select("doc_id", "sig")))
   }
 
-  /** Persist an index — the steady-state contract: the corpus is
-    * sketched once per refresh in batch, and every streaming screen
+  /** The sketch frame, clustered by doc_id for the verify join. */
+  private val Sketch = IndexArtifact.rangeClustered("sketch", "doc_id")
+
+  /** The band keys, clustered by (band_id, bkey) for the probe
+    * equi-join. */
+  private val Bands =
+    IndexArtifact.rangeClustered("bands", "band_id", "bkey")
+
+  def artifacts: Seq[IndexArtifact] = Seq(Sketch, Bands)
+
+  /** Persist the corpus index — the steady-state contract: the corpus
+    * is sketched once per refresh in batch, and every streaming screen
     * reads the SAME materialized frames instead of re-sketching 100 TB
-    * per query start. Band rows are laid out sorted by (band_id, bkey)
-    * so a band-key equi-join scans clustered row groups; the sketch by
-    * doc_id for the verification join. */
-  def writeIndex(idx: Index, base: String): Unit =
-    graft.operators.Par.run(
-      () => idx.sketch.sortWithinPartitions("doc_id")
-        .write.mode("overwrite").parquet(s"$base/sketch"),
-      () => idx.bands.sortWithinPartitions("band_id", "bkey")
-        .write.mode("overwrite").parquet(s"$base/bands"))
+    * per query start. */
+  def write(corpus: DataFrame, base: String): Unit = {
+    val idx = buildIndex(corpus)
+    Par.run(() => Sketch.write(idx.sketch, base),
+      () => Bands.write(idx.bands, base))
+  }
 
   /** `like`: an earlier read of the same index, whose schemas this
     * read reuses instead of inferring them again. */
   def readIndex(spark: org.apache.spark.sql.SparkSession, base: String,
       like: Option[Index] = None): Index =
-    Index(
-      graft.operators.Compaction.readLive(spark, s"$base/sketch",
-        like.map(_.sketch.schema)),
-      graft.operators.Compaction.readLive(spark, s"$base/bands",
-        like.map(_.bands.schema)))
-
-  /** Restore both frames' clustered layout after an append chain —
-    * see [[graft.operators.Compaction]]: bands re-cluster by
-    * (band_id, bkey) for the probe equi-join, the sketch by doc_id
-    * for the verify join. Row multisets unchanged. */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession,
-      base: String): Unit =
-    graft.operators.Par.run(
-      () => graft.operators.Compaction.rewrite(spark, s"$base/sketch")(
-        _.repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id")),
-      () => graft.operators.Compaction.rewrite(spark, s"$base/bands")(
-        _.repartitionByRange(col("band_id"), col("bkey"))
-          .sortWithinPartitions("band_id", "bkey")))
-
-  /** Remove every sketch and band row of documents in `ids` (a doc_id
-    * frame) — [[graft.operators.Compaction.retract]]'s contract on both
-    * frames: sketch and band rows are pure per-row functions of one
-    * document, so the anti-join equals a rebuild without those
-    * documents exactly. The id set is pinned ONCE before the first
-    * swap ([[graft.operators.AnnIndexes.retract]]'s discipline): a
-    * lazy frame whose lineage reads the sketch artifact would
-    * otherwise re-evaluate after the sketch rewrite and silently
-    * under-retract the bands. */
-  def retractIndex(spark: org.apache.spark.sql.SparkSession,
-      ids: DataFrame, base: String): Unit =
-    retractIndexPinned(spark,
-      ids.select("doc_id").distinct().localCheckpoint(), base)
-
-  /** [[retractIndex]] for an ALREADY-materialized id frame — the
-    * combined-lifecycle callers ([[graft.operators.ReleaseFlow
-    * .retract]]) pin one id set across every artifact and must not pay
-    * a second materialization per index. */
-  private[graft] def retractIndexPinned(
-      spark: org.apache.spark.sql.SparkSession,
-      pinned: DataFrame, base: String): Unit =
-    graft.operators.Par.run(
-      () => graft.operators.Compaction.retract(spark, s"$base/sketch", pinned)(
-        _.repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id")),
-      () => graft.operators.Compaction.retract(spark, s"$base/bands", pinned)(
-        _.repartitionByRange(col("band_id"), col("bkey"))
-          .sortWithinPartitions("band_id", "bkey")))
+    Index(Sketch.read(spark, base, like.map(_.sketch.schema)),
+      Bands.read(spark, base, like.map(_.bands.schema)))
 
   /** Incremental append — newly admitted docs join the persisted corpus
-    * index without a rebuild (the [[graft.operators.AnnIndexes.appendLsh]]
-    * pattern for the document sketch index). Sketch and band rows are a
-    * PURE per-row function of the text (the same map-side stage as
-    * [[buildIndex]]), so append-then-read equals a rebuild over the
-    * union corpus exactly. Caller contract, as for `appendIvf`: `docs`
-    * should be disjoint from already-indexed doc_ids — a replayed
-    * overlapping batch lands duplicate rows, which downstream screens
-    * tolerate (the pair-level `distinct`/`dropDuplicates` collapses
-    * them, so DECISIONS are unaffected) but which cost index bytes
-    * until the next batch rebuild compacts them. */
-  def appendIndex(docs: DataFrame, base: String): Unit = {
-    val spark = docs.sparkSession
+    * index without a rebuild. Sketch and band rows are a PURE per-row
+    * function of the text (the same map-side stage as [[buildIndex]]),
+    * so append-then-read equals a rebuild over the union corpus
+    * exactly. Caller contract, as for `appendIvf`: `docs` should be
+    * disjoint from already-indexed doc_ids — a replayed overlapping
+    * batch lands duplicate rows, which downstream screens tolerate (the
+    * pair-level `distinct`/`dropDuplicates` collapses them, so
+    * DECISIONS are unaffected) but which cost index bytes until the
+    * next batch rebuild compacts them. */
+  def append(docs: DataFrame, base: String): Unit = {
     // eager pin FIRST: both appends derive from the one sketch frame
     val sk = LlmQueries.docSketch(docs).localCheckpoint()
-    graft.operators.Par.run(
-      () => graft.operators.Compaction.appendInto(spark, s"$base/sketch") {
-        live =>
-          // range-cluster like compactIndex (and like every other
-          // index's append): the probe layout holds without waiting
-          // for a compaction pass, AND the file count follows the
-          // APPEND'S bytes (AQE coalescing) instead of the input
-          // frame's partitioning — the release gates' pinned shard is
-          // session-parallelism wide, and inheriting its partitioning
-          // wrote one near-empty file per partition per append
-          sk.repartitionByRange(col("doc_id"))
-            .sortWithinPartitions("doc_id")
-            .write.mode("append").parquet(live)
-      },
-      () => graft.operators.Compaction.appendInto(spark, s"$base/bands") {
-        live =>
-          LlmQueries.minhashBuckets(sk.select("doc_id", "sig"))
-            .repartitionByRange(col("band_id"), col("bkey"))
-            .sortWithinPartitions("band_id", "bkey")
-            .write.mode("append").parquet(live)
-      })
+    Par.run(() => Sketch.append(sk, base),
+      () => Bands.append(LlmQueries.minhashBuckets(sk.select("doc_id", "sig")),
+        base))
   }
 
   /** Screen a streaming document frame (doc_id, text, `tsCol`) against

@@ -40,9 +40,10 @@ object StreamingSemanticDecontam {
 
   /** Manifest-aware ([[graft.operators.Compaction.readLive]]): a
     * retracted-into suite tree resolves to its live vectors
-    * (GateReadLiveSpec). */
-  def readIndex(spark: SparkSession, base: String): DataFrame =
-    graft.operators.Compaction.readLive(spark, s"$base/eval_vecs")
+    * (GateReadLiveSpec). `schema`, when given, skips inference. */
+  def readIndex(spark: SparkSession, base: String,
+      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
+    graft.operators.Compaction.readLive(spark, s"$base/eval_vecs", schema)
 
   /** Screen a streaming document frame (doc_id, v, `tsCol`): emits
     * (doc_id, `tsCol`) once per semantically contaminated doc. */

@@ -85,7 +85,7 @@ class AdmissionPipelineSpec extends AnyFunSuite {
       "opal ladder trumpet satchel willow compass anvil ribbon meadow " +
       "falcon zirconium mandolin"
     // the crash-replay state: the index already carries doc 50's own
-    // bands (appendIndex landed before the streaming commit)
+    // bands (append landed before the streaming commit)
     val idx = StreamingNearDup.buildIndex(corpus.unionByName(
       Seq((50L, admitText)).toDF("doc_id", "text")))
     val g = AdmissionPipeline.Gates(idx, gates.holdoutGrams)
@@ -352,7 +352,7 @@ class AdmissionPipelineSpec extends AnyFunSuite {
       StructField("v", ArrayType(DoubleType)),
       StructField("ts", TimestampType)))
     val ndDir = Files.createTempDirectory("graft_livex_nd_").toString
-    StreamingNearDup.writeIndex(StreamingNearDup.buildIndex(corpus), ndDir)
+    StreamingNearDup.write(corpus, ndDir)
     val xDir = Files.createTempDirectory("graft_livex_dd_").toString
     DedupIndex.write(corpus, xDir)
     val evDir = Files.createTempDirectory("graft_livex_ev_").toString
@@ -661,7 +661,7 @@ class AdmissionPipelineSpec extends AnyFunSuite {
       StructField("ts", TimestampType)))
     // seed BOTH persisted indexes with the 2-doc corpus
     val ndDir = Files.createTempDirectory("graft_live_nd_").toString
-    StreamingNearDup.writeIndex(StreamingNearDup.buildIndex(corpus), ndDir)
+    StreamingNearDup.write(corpus, ndDir)
     val ssDir = Files.createTempDirectory("graft_live_ss_").toString
     SubstringIndex.write(
       corpus.withColumn("lang", lit("und")).select("lang", "doc_id", "text"),
@@ -781,7 +781,7 @@ class AdmissionPipelineSpec extends AnyFunSuite {
       StructField("text", StringType),
       StructField("ts", TimestampType)))
     val ndDir = Files.createTempDirectory("graft_retr_nd_").toString
-    StreamingNearDup.writeIndex(StreamingNearDup.buildIndex(corpus), ndDir)
+    StreamingNearDup.write(corpus, ndDir)
     val xDir = Files.createTempDirectory("graft_retr_dd_").toString
     DedupIndex.write(corpus, xDir)
     val docA = "carburetor dovetail eiderdown flywheel grommet hawser " +
@@ -810,7 +810,7 @@ class AdmissionPipelineSpec extends AnyFunSuite {
     // re-resolves per batch
     val ids = { import spark.implicits._; Seq(45L).toDF("doc_id") }
     DedupIndex.retract(spark, ids, xDir)
-    StreamingNearDup.retractIndex(spark, ids, ndDir)
+    StreamingNearDup.retract(spark, ids, ndDir)
     assert(!DedupIndex.read(spark, xDir).select("doc_id")
       .collect().map(_.getLong(0)).contains(45L),
       "the retract must remove doc 45's hash rows")

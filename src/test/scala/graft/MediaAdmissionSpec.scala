@@ -73,7 +73,7 @@ class MediaAdmissionSpec extends AnyFunSuite {
     import spark.implicits._
     val idGood = idOfClass(500L, (w, h) => !small(w, h) && !extreme(w, h))
     // the index already contains the batch's own item (the crash-replay
-    // state: appendIndex landed before the streaming commit)
+    // state: append landed before the streaming commit)
     val indexed = corpusMedia.unionByName(
       Seq((30L, payloadOf(idGood))).toDF("doc_id", "payload"))
     val gates = MediaAdmission.Gates(StreamingMediaDedup.buildIndex(indexed))
@@ -157,8 +157,7 @@ class MediaAdmissionSpec extends AnyFunSuite {
       "batch 2 via the live index append") {
     import spark.implicits._
     val idxDir = Files.createTempDirectory("graft_madm_live_idx_").toString
-    StreamingMediaDedup.writeIndex(
-      StreamingMediaDedup.buildIndex(corpusMedia), idxDir)
+    StreamingMediaDedup.write(corpusMedia, idxDir)
     val idGood = idOfClass(500L, (w, h) => !small(w, h) && !extreme(w, h))
     val in = Files.createTempDirectory("graft_madm_live_in_").toString
     val out = Files.createTempDirectory("graft_madm_live_out_").toString

@@ -129,4 +129,42 @@ class PartitionedUpsertSpec extends AnyFunSuite {
       Seq("created_at", "_src_offset"), B)
     assert(PartitionedUpsert.readAll(spark, path, B).get.count() === 40)
   }
+
+  test("a failing bucket merge is rethrown only after every other bucket landed") {
+    val path = tmp()
+    val v1 = products(60, seed = 26)
+    val touched = PartitionedUpsert.upsert(spark, path, v1, "product_id",
+      Seq("created_at", "_src_offset"), B)
+    assert(touched.size > 2)
+    // the victim's prior table is one unreadable parquet file, so its
+    // merge throws as soon as it resolves the table
+    val victim = touched.head
+    val vdir = java.nio.file.Paths.get(s"$path/bucket=$victim")
+    Files.list(vdir).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .foreach(Files.delete)
+    Files.write(vdir.resolve("part-0.parquet"), "not parquet".getBytes)
+    val others = touched.filterNot(_ == victim)
+    // a swap writes fresh (uuid-named) part files, so a bucket whose
+    // file set changed has been swapped
+    def partFiles(b: Int): Set[String] =
+      new java.io.File(s"$path/bucket=$b").list().filter(_.endsWith(".parquet")).toSet
+    val prior = others.map(b => b -> partFiles(b)).toMap
+    val v2 = v1.withColumn("created_at", col("created_at") + expr("INTERVAL 10 DAYS"))
+    val minCreated = v2.agg(min("created_at")).collect()(0).getTimestamp(0)
+    intercept[Exception](PartitionedUpsert.upsert(spark, path, v2, "product_id",
+      Seq("created_at", "_src_offset"), B))
+    // the state at the moment upsert threw, read without a Spark job
+    val atThrow = others.map(b => b -> partFiles(b)).toMap
+    assert(!new java.io.File(path).list().exists(_.endsWith(".tmp")),
+      "no bucket swap may still be in flight once upsert has thrown")
+    val unswapped = others.filter(b => atThrow(b) == prior(b))
+    assert(unswapped.isEmpty, s"buckets not yet swapped when upsert threw: $unswapped")
+    others.foreach { b =>
+      val rows = spark.read.parquet(s"$path/bucket=$b")
+      val want = v2.filter(PartitionedUpsert.bucketOf(col("product_id"), B) === b)
+      assert(rows.count() === want.count(), s"bucket $b")
+      assert(rows.filter(col("created_at") < minCreated).count() === 0,
+        s"bucket $b must hold its merged rows")
+    }
+  }
 }

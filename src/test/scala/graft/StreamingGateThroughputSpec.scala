@@ -80,8 +80,7 @@ class StreamingGateThroughputSpec extends AnyFunSuite {
     // section prices sketch + band probe + verify join, not corpus
     // re-sketching.
     val idxBase = Files.createTempDirectory("graft_gate_idx_").toString
-    StreamingNearDup.writeIndex(
-      StreamingNearDup.buildIndex(Tables.documents(spark, sf1)), idxBase)
+    StreamingNearDup.write(Tables.documents(spark, sf1), idxBase)
     val idx = StreamingNearDup.readIndex(spark, idxBase)
     val (in, n) = dumpDocs()
     val stream = spark.readStream.schema(schema).json(in)
@@ -144,8 +143,7 @@ class StreamingGateThroughputSpec extends AnyFunSuite {
     val media = Tables.documents(spark, sf1).select(col("doc_id"),
       graft.functions.Multimodal.payloadCol(col("doc_id")).as("payload"))
     val idxBase = Files.createTempDirectory("graft_gate_media_idx_").toString
-    StreamingMediaDedup.writeIndex(
-      StreamingMediaDedup.buildIndex(media), idxBase)
+    StreamingMediaDedup.write(media, idxBase)
     val idx = StreamingMediaDedup.readIndex(spark, idxBase)
     val in = Files.createTempDirectory("graft_gate_media_in_").toString
     val withTs = media.withColumn("ts",

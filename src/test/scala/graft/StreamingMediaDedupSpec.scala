@@ -70,8 +70,8 @@ class StreamingMediaDedupSpec extends AnyFunSuite {
     val base = Files.createTempDirectory("graft_smedia_idx_").toString
     val half = corpusMedia.filter(col("doc_id") < 110L)
     val rest = corpusMedia.filter(col("doc_id") >= 110L)
-    StreamingMediaDedup.writeIndex(StreamingMediaDedup.buildIndex(half), base)
-    StreamingMediaDedup.appendIndex(rest, base)
+    StreamingMediaDedup.write(half, base)
+    StreamingMediaDedup.append(rest, base)
     val fromDisk = StreamingMediaDedup.readIndex(spark, base)
     val rebuilt = StreamingMediaDedup.buildIndex(corpusMedia)
 

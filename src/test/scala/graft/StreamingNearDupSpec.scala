@@ -63,7 +63,7 @@ class StreamingNearDupSpec extends AnyFunSuite {
 
   test("a persisted index screens identically to the in-memory one") {
     val base = Files.createTempDirectory("graft_sneardup_idx_").toString
-    StreamingNearDup.writeIndex(StreamingNearDup.buildIndex(corpus), base)
+    StreamingNearDup.write(corpus, base)
     val idx = StreamingNearDup.readIndex(spark, base)
 
     val in = Files.createTempDirectory("graft_sneardup_pidx_").toString

@@ -71,8 +71,8 @@ class GateReadLiveSpec extends AnyFunSuite {
     val base = tmp("graft_gate_neardup")
     val c1 = Seq((1L, words("a", 20))).toDF("doc_id", "text")
     val c2 = Seq((2L, words("b", 20))).toDF("doc_id", "text")
-    StreamingNearDup.writeIndex(StreamingNearDup.buildIndex(c1), base)
-    StreamingNearDup.appendIndex(c2, base)
+    StreamingNearDup.write(c1, base)
+    StreamingNearDup.append(c2, base)
     val batch = Seq((101L, words("a", 20)), (102L, words("b", 20)))
       .toDF("doc_id", "text")
     def flagged() = StreamingNearDup.screenRaw(batch,
@@ -80,7 +80,7 @@ class GateReadLiveSpec extends AnyFunSuite {
       .select("doc_id", "corpus_id").distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(flagged() === Set((101L, 1L), (102L, 2L)))
-    StreamingNearDup.retractIndex(spark, Seq(2L).toDF("doc_id"), base)
+    StreamingNearDup.retract(spark, Seq(2L).toDF("doc_id"), base)
     assert(manifested(s"$base/sketch") || manifested(s"$base/bands"),
       "retraction must have produced a manifest-bearing tree")
     assert(flagged() === Set((101L, 1L)),
@@ -94,15 +94,15 @@ class GateReadLiveSpec extends AnyFunSuite {
     val pb = Array.tabulate[Byte](64)(i => (i * 37 + 11).toByte)
     val m1 = Seq((1L, pa)).toDF("doc_id", "payload")
     val m2 = Seq((2L, pb)).toDF("doc_id", "payload")
-    StreamingMediaDedup.writeIndex(StreamingMediaDedup.buildIndex(m1), base)
-    StreamingMediaDedup.appendIndex(m2, base)
+    StreamingMediaDedup.write(m1, base)
+    StreamingMediaDedup.append(m2, base)
     def flagged() = StreamingMediaDedup.screenRaw(
         Seq((101L, pa), (102L, pb)).toDF("doc_id", "payload"),
         StreamingMediaDedup.readIndex(spark, base), Nil)
       .select("doc_id", "corpus_id").distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(flagged() === Set((101L, 1L), (102L, 2L)))
-    StreamingMediaDedup.retractIndex(spark, Seq(2L).toDF("doc_id"), base)
+    StreamingMediaDedup.retract(spark, Seq(2L).toDF("doc_id"), base)
     assert(manifested(s"$base/sigs") || manifested(s"$base/bands"),
       "retraction must have produced a manifest-bearing tree")
     assert(flagged() === Set((101L, 1L)))
@@ -189,11 +189,19 @@ class GateReadLiveSpec extends AnyFunSuite {
     def docs(ids: Range) =
       ids.map(i => ("und", i.toLong, words(s"s${i}w", 30))).toDF("lang", "doc_id", "text")
     ReleaseFlow.init(docs(1 to 4), base)
+    // the semantic-decontam suite, one vector per doc id
+    def evals(ids: Range) =
+      ids.map(i => (i.toLong, Seq(i.toDouble, 1.0))).toDF("vec_id", "v")
+    val evalBase = s"$base/eval"
+    val evalDir = s"$evalBase/eval_vecs"
+    StreamingSemanticDecontam.writeIndex(
+      StreamingSemanticDecontam.buildIndex(evals(1 to 4)), evalBase)
     // what a live query resolves once at start
     val nd0 = StreamingNearDup.readIndex(spark, ReleaseFlow.neardupDir(base))
     val sch = Seq(SubstringIndex.read(spark, ReleaseFlow.substrDir(base)),
       WinnowIndex.read(spark, ReleaseFlow.winnowDir(base)),
-      DedupIndex.read(spark, ReleaseFlow.dedupDir(base))).map(_.schema)
+      DedupIndex.read(spark, ReleaseFlow.dedupDir(base)),
+      StreamingSemanticDecontam.readIndex(spark, evalBase)).map(_.schema)
     def reads(pinned: Boolean): Seq[DataFrame] = {
       def s(i: Int) = if (pinned) Some(sch(i)) else None
       val nd = StreamingNearDup.readIndex(spark, ReleaseFlow.neardupDir(base),
@@ -201,7 +209,8 @@ class GateReadLiveSpec extends AnyFunSuite {
       Seq(nd.sketch, nd.bands,
         SubstringIndex.read(spark, ReleaseFlow.substrDir(base), s(0)),
         WinnowIndex.read(spark, ReleaseFlow.winnowDir(base), s(1)),
-        DedupIndex.read(spark, ReleaseFlow.dedupDir(base), s(2)))
+        DedupIndex.read(spark, ReleaseFlow.dedupDir(base), s(2)),
+        StreamingSemanticDecontam.readIndex(spark, evalBase, s(3)))
     }
     def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
     def same(step: String): Seq[Int] =
@@ -209,18 +218,25 @@ class GateReadLiveSpec extends AnyFunSuite {
         case ((p, i), k) =>
           assert(p.schema === i.schema, s"$step: read $k schema")
           assert(rows(p) === rows(i), s"$step: read $k rows")
-          p.select("doc_id").distinct().collect().length
+          p.select(p.columns.find(Set("doc_id", "vec_id")).get)
+            .distinct().collect().length
       }
     assert(same("init").forall(_ == 4))
     val shard = docs(5 to 6)
     DedupIndex.append(shard, ReleaseFlow.dedupDir(base))
-    StreamingNearDup.appendIndex(shard, ReleaseFlow.neardupDir(base))
+    StreamingNearDup.append(shard, ReleaseFlow.neardupDir(base))
     SubstringIndex.append(shard, ReleaseFlow.substrDir(base))
     WinnowIndex.append(shard, ReleaseFlow.winnowDir(base))
+    Compaction.appendInto(spark, evalDir)(
+      StreamingSemanticDecontam.buildIndex(evals(5 to 6))
+        .write.mode("append").parquet(_))
     assert(same("append").forall(_ == 6), "the pinned read must list afresh")
+    val evalLayout = (df: DataFrame) => df.coalesce(1).sortWithinPartitions("vec_id")
     ReleaseFlow.compact(spark, base)
+    Compaction.rewrite(spark, evalDir)(evalLayout)
     assert(same("compact").forall(_ == 6))
     ReleaseFlow.retract(spark, Seq(5L).toDF("doc_id"), base)
+    Compaction.retract(spark, evalDir, Seq(5L).toDF("vec_id"), "vec_id")(evalLayout)
     assert(same("retract").forall(_ == 5))
   }
 }
