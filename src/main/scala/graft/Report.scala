@@ -168,28 +168,22 @@ object Report {
         rowsJson(operators.AuditQueries.l73.fn(spark, sfDir))),
       "vocab_growth" -> (() => rowsJson(operators.AuditQueries.l75.fn(spark, sfDir))),
       "pii_by_source" -> (() => rowsJson(operators.AuditQueries.l78.fn(spark, sfDir))))
-    // Build the panels CONCURRENTLY: each is an independent bounded
-    // collect, the shared-subtree memos are ConcurrentHashMaps (one
-    // materialization however many panels race), and Spark's scheduler
+    // Build the panels CONCURRENTLY ([[operators.Par]]): each is an
+    // independent bounded collect, the shared-subtree memos are
+    // ConcurrentHashMaps (one materialization however many panels
+    // race), and Spark's scheduler
     // interleaves the jobs — a sequential build leaves the cluster idle
     // between one panel's stages and the next's (cold sf0.1 build
     // measured ~31 s sequential → ~12 s at width 8 on local[32]).
     // Output order stays the declaration order; per-panel seconds go
     // to stderr so a slow panel is observable without re-instrumenting.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    val panels =
-      try {
-        val futs = panelDefs.map { case (k, mk) =>
-          k -> pool.submit(new java.util.concurrent.Callable[(String, Double)] {
-            override def call(): (String, Double) = {
-              val t0 = System.nanoTime()
-              val v = mk()
-              (v, (System.nanoTime() - t0) / 1e9)
-            }
-          })
-        }
-        futs.map { case (k, f) => val (v, sec) = f.get(); (k, v, sec) }
-      } finally pool.shutdown()
+    val panels = new Array[(String, String, Double)](panelDefs.size)
+    operators.Par.run(panelDefs.zipWithIndex.map { case ((k, mk), i) =>
+      () =>
+        val t0 = System.nanoTime()
+        val v = mk()
+        panels(i) = (k, v, (System.nanoTime() - t0) / 1e9)
+    })
     Console.err.println("[report] panel seconds: " + panels.sortBy(-_._3)
       .map { case (k, _, sec) => f"$k=$sec%.1f" }.mkString(" "))
     val body = panels.map { case (k, v, _) => s""""$k":$v""" }.mkString(",")

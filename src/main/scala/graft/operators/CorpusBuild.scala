@@ -91,11 +91,12 @@ object CorpusBuild {
     // cleaned_out ledger arm and the gate's shard) and the C4+PII
     // battery is the dominant per-doc cost of a cleansing build — an
     // unpinned lineage would re-run it per consumer (the same
-    // multiplier the release's shard checkpoint exists to stop). Lazy;
-    // the first consumer materializes it. A raw passthrough needs no
-    // pin (plain scans re-read cheaply).
+    // multiplier the release's shard checkpoint exists to stop). Eager,
+    // like every pin on the release path: concurrent consumers race a
+    // lazy pin's materialization. A raw passthrough needs no pin (plain
+    // scans re-read cheaply).
     val staged =
-      if (cfg.cleanse) AdmissionPipeline.cleanse(raw).localCheckpoint(false)
+      if (cfg.cleanse) AdmissionPipeline.cleanse(raw).localCheckpoint()
       else raw
     // born-null and cleansed-to-null rows cannot be screened or indexed
     // (the release gate would drop them silently); the ledger accounts

@@ -80,19 +80,40 @@ object IndexArtifact {
 }
 
 /** A persisted document index: the artifacts it keeps under one dir and
-  * how a document frame becomes their rows. Index rows are a PURE
-  * per-doc function of a document (no trained state), so append ≡
-  * rebuild and retract ≡ rebuild-on-complement hold exactly, provided
-  * appended doc_ids don't collide with indexed ones (the caller's id
-  * authority). Compaction and retraction derive from [[artifacts]]. */
+  * how a document frame becomes their rows — one [[derive]]d per-doc
+  * frame, each artifact's rows a function of it ([[parts]]). Index rows
+  * are a PURE per-doc function of a document (no trained state), so
+  * append ≡ rebuild and retract ≡ rebuild-on-complement hold exactly,
+  * provided appended doc_ids don't collide with indexed ones (the
+  * caller's id authority). Write, append, compaction and retraction all
+  * derive from that one definition. */
 trait DocIndex {
-  def artifacts: Seq[IndexArtifact]
+
+  /** The per-doc frame every artifact's rows derive from. */
+  protected def derive(docs: DataFrame): DataFrame
+
+  /** Each artifact with its rows as a function of [[derive]]'s frame. */
+  protected def parts: Seq[(IndexArtifact, DataFrame => DataFrame)]
+
+  final def artifacts: Seq[IndexArtifact] = parts.map(_._1)
 
   /** Build from `docs` and write every artifact fresh under `base`. */
-  def write(docs: DataFrame, base: String): Unit
+  def write(docs: DataFrame, base: String): Unit = each(docs)(_.write(_, base))
 
   /** Build from `docs` and append to every artifact under `base`. */
-  def append(docs: DataFrame, base: String): Unit
+  def append(docs: DataFrame, base: String): Unit =
+    each(docs)(_.append(_, base))
+
+  /** Derive once — pinned eagerly when several artifacts read it, so
+    * the per-doc work (a sketch, a signature) runs once rather than
+    * once per artifact and per range-bound sample — then run each
+    * artifact's step concurrently ([[Par]]). */
+  private def each(docs: DataFrame)(
+      step: (IndexArtifact, DataFrame) => Unit): Unit = {
+    val derived =
+      if (parts.size > 1) derive(docs).localCheckpoint() else derive(docs)
+    Par.run(parts.map { case (a, rows) => () => step(a, rows(derived)) })
+  }
 
   def compact(spark: SparkSession, base: String): Unit =
     IndexSet(this -> base).compact(spark)
@@ -110,23 +131,20 @@ abstract class OneArtifactIndex(protected val artifact: IndexArtifact)
   /** The index frame of a document frame. */
   def build(docs: DataFrame): DataFrame
 
-  final def artifacts: Seq[IndexArtifact] = Seq(artifact)
+  protected def derive(docs: DataFrame): DataFrame = build(docs)
 
-  def write(docs: DataFrame, base: String): Unit =
-    artifact.write(build(docs), base)
-
-  def append(docs: DataFrame, base: String): Unit =
-    artifact.append(build(docs), base)
+  protected final def parts: Seq[(IndexArtifact, DataFrame => DataFrame)] =
+    Seq(artifact -> identity)
 
   def read(spark: SparkSession, base: String,
       schema: Option[StructType] = None): DataFrame =
     artifact.read(spark, base, schema)
 }
 
-/** The indexes a release holds, each placed under its own dir — THE
-  * list a release flow's init, appends, compaction and retraction
-  * iterate, so one place knows every artifact a release writes. Members
-  * write disjoint dirs, so each step runs them concurrently ([[Par]]). */
+/** The indexes a release or a live stream holds, each placed under its
+  * own dir — THE list its init, appends, compaction and retraction
+  * iterate, so one place knows every artifact it writes. Members write
+  * disjoint dirs, so each step runs them concurrently ([[Par]]). */
 final case class IndexSet(members: (DocIndex, String)*) {
 
   def write(docs: DataFrame): Unit =
@@ -137,7 +155,22 @@ final case class IndexSet(members: (DocIndex, String)*) {
   def appendDeferred(docs: DataFrame): () => Unit =
     Par.deferred(members.map { case (ix, d) => () => ix.append(docs, d) })
 
-  def append(docs: DataFrame): Unit = appendDeferred(docs)()
+  /** THE admission step — every decide → pin → append path runs it
+    * (`AdmissionPipeline.startLive`, `MediaAdmission.startLive`,
+    * [[ReleaseFlow.release]], [[MediaReleaseFlow.release]]): pin a
+    * batch's `decisions` (its columns plus `reason`) with one EAGER
+    * checkpoint, so every reader of them sees the PRE-append index
+    * state, then start every member's append of the `reason = admit`
+    * slice (`reason` dropped, then shaped by `slice`). Returns (pinned
+    * decisions, join); the caller must join before anything reads or
+    * re-appends the indexes, also when its own work on the decisions
+    * throws. The one place a per-step commit record would hook. */
+  def admitDeferred(decisions: DataFrame,
+      slice: DataFrame => DataFrame = identity): (DataFrame, () => Unit) = {
+    val pinned = decisions.localCheckpoint()
+    (pinned, appendDeferred(
+      slice(pinned.filter(col("reason") === "admit").drop("reason"))))
+  }
 
   def compact(spark: SparkSession): Unit = each(_.compact(spark, _))
 

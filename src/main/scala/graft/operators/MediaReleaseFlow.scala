@@ -90,19 +90,19 @@ object MediaReleaseFlow {
     // four subtrees (decode, perceptual screen, byte screen, final
     // join), so an unpinned shard LINEAGE re-executes per arm — a
     // multiplier whenever the lineage carries compute (a planted
-    // construction, an upstream decode). One lazy materialization,
-    // bounded by SHARD size, never the corpus.
-    val shard = shard0.localCheckpoint(false)
+    // construction, an upstream decode). Eager, like every admission
+    // pin; bounded by SHARD size, never the corpus.
+    val shard = shard0.localCheckpoint()
     val gates = MediaAdmission.Gates(
       StreamingMediaDedup.readIndex(spark, phashDir(base)),
       exactHashes = Some(readByteIndex(spark, base).select("h")))
-    val decided = MediaAdmission.decide(shard, gates)
-      .withColumnRenamed("reason", "decision")
-      .localCheckpoint() // pin decisions BEFORE the appends mutate state
-    val admitted = decided.filter(col("decision") === "admit")
-      .select("doc_id", "payload")
-    indexes(base).append(admitted)
-    decided
+    // the admission step ([[IndexSet.admitDeferred]]): decisions pinned
+    // BEFORE the appends mutate state, the admitted slice appended to
+    // both artifacts
+    val (decisions, joinAppends) =
+      indexes(base).admitDeferred(MediaAdmission.decide(shard, gates))
+    joinAppends()
+    decisions.withColumnRenamed("reason", "decision")
   }
 
   /** RETRACTION on the media column — [[ReleaseFlow.retract]]'s

@@ -168,22 +168,15 @@ object ReleaseFlow {
       classifier = screens.classifier,
       exactHashes = Some(DedupIndex.read(spark, dedupDir(base)).select("h")),
       docQuality = screens.docQuality)
-    // pin decisions BEFORE the appends mutate state; the checkpoint
-    // still carries the pre-tokens so the appends read them for free
-    val decidedFull = AdmissionPipeline.decide(pinned, gates)
-      .withColumnRenamed("reason", "decision")
-      .localCheckpoint()
-    val admitted = decidedFull.filter(col("decision") === "admit")
-      .drop("decision")
-    // the four appends read the pinned admitted slice (pre-tokens
-    // included — each builder projects its own columns, so the extra
-    // column never lands in an artifact) and write four disjoint
-    // artifact dirs — concurrent jobs started NOW ([[Par.deferred]]),
-    // the winnow append keeping the tier's coverage invariant
-    // regardless of completion order; the returned join is where "ALL
-    // artifacts landed" becomes true
-    val joinAppends = indexes(base).appendDeferred(admitted)
-    val decided = decidedFull
+    // the admission step ([[IndexSet.admitDeferred]]): decisions pinned
+    // BEFORE the appends mutate state — the pin still carries the
+    // pre-tokens, so each builder projects its own columns for free —
+    // then the four appends start NOW, the winnow append keeping the
+    // tier's coverage invariant regardless of completion order; the
+    // returned join is where "ALL artifacts landed" becomes true
+    val (decisions, joinAppends) =
+      indexes(base).admitDeferred(AdmissionPipeline.decide(pinned, gates))
+    val decided = decisions.withColumnRenamed("reason", "decision")
       .drop((AdmissionPipeline.GatePreCols ++
         (if (addChars) Seq("n_chars") else Seq.empty[String])): _*)
     (decided, joinAppends)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.{CleaningQueries, DedupIndex, LlmQueries, Par,
+import graft.operators.{CleaningQueries, DedupIndex, IndexSet, LlmQueries,
   SubstringIndex, WinnowIndex}
 
 /** Composed streaming ADMISSION pipeline — the ingest-side counterpart
@@ -103,24 +103,6 @@ object AdmissionPipeline {
         * no join, no shuffle. */
       docQuality: Boolean = false)
 
-  /** The per-batch decision frame: `batch`'s columns plus `reason`.
-    * Pure function of (batch, gates) — spec-tested directly and reused
-    * by [[start]]'s foreachBatch. Precedence: near_duplicate >
-    * verbatim_repeat (when a corpus span index is configured) >
-    * contaminated > low_quality > repetitive > admit (duplicate-family
-    * first, mirroring l19/l29 so quality counts describe admissible
-    * docs; the repetition screen — batch [[LlmQueries.l27]]'s published
-    * Gopher 2-gram rule, the SAME shared threshold — runs AFTER the
-    * vocabulary/length rule because the top-2-gram share is only
-    * meaningful past the length bar: a 4-token fragment has a ~33%
-    * share by pigeonhole, and labeling it `repetitive` would bury the
-    * actual defect. A doc that passes quality but repeats one 2-gram —
-    * the generation-loop artifact the Gopher rule exists for — is
-    * exactly what this arm catches, since such docs are long and
-    * vocabulary-diverse enough to admit otherwise). The repetition arm
-    * is row-local (native `graft_topgram_stats`), so unlike the index
-    * screens it costs no join and screens each doc against itself —
-    * stateless and trivially streaming-safe. */
   /** Opt-in PRE-GATE cleaning — the C4/CCNet ordering: clean text
     * FIRST, then let every downstream screen (exact dedup, near-dup,
     * contamination, quality, repetition) judge the text a release
@@ -193,6 +175,24 @@ object AdmissionPipeline {
   private val VrBit = 8L  // verbatim_repeat (span index, opt-in)
   private val XdBit = 16L // corpus_duplicate (exact hash, opt-in)
 
+  /** The per-batch decision frame: `batch`'s columns plus `reason`.
+    * Pure function of (batch, gates) — spec-tested directly and reused
+    * by both entry points and releases. Precedence: near_duplicate >
+    * verbatim_repeat (when a corpus span index is configured) >
+    * contaminated > low_quality > repetitive > admit (duplicate-family
+    * first, mirroring l19/l29 so quality counts describe admissible
+    * docs; the repetition screen — batch [[LlmQueries.l27]]'s published
+    * Gopher 2-gram rule, the SAME shared threshold — runs AFTER the
+    * vocabulary/length rule because the top-2-gram share is only
+    * meaningful past the length bar: a 4-token fragment has a ~33%
+    * share by pigeonhole, and labeling it `repetitive` would bury the
+    * actual defect. A doc that passes quality but repeats one 2-gram —
+    * the generation-loop artifact the Gopher rule exists for — is
+    * exactly what this arm catches, since such docs are long and
+    * vocabulary-diverse enough to admit otherwise). The repetition arm
+    * is row-local (native `graft_topgram_stats`), so unlike the index
+    * screens it costs no join and screens each doc against itself —
+    * stateless and trivially streaming-safe. */
   def decide(batch: DataFrame, gates: Gates): DataFrame = {
     // batch-ownership guard: a crash REPLAY under [[startLive]] screens
     // against an index already holding the batch's OWN append — so
@@ -342,52 +342,47 @@ object AdmissionPipeline {
     * [[startLive]] closes the cross-BATCH part of that window. */
   def start(spark: SparkSession, stream: DataFrame, gates: Gates,
       outDir: String, tsCol: String, delay: String,
-      clean: Boolean = false): StreamingQuery = {
-    // cleaning runs BEFORE the stateful dedup so the content-hash state
-    // keys on cleaned text — see [[cleanse]]
-    val in = if (clean) cleanse(stream) else stream
-    val deduped = StreamingDedup.withinWatermark(
-      withNChars(in), tsCol, delay)
-    deduped.writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeDecisions(decide(gatePin(batch), gates).drop(GatePreCols: _*),
-          outDir, batchId)
-      }
-      .start()
-  }
+      clean: Boolean = false): StreamingQuery =
+    drive(deduped(stream, tsCol, delay, clean), outDir)(batch =>
+      (decide(gatePin(batch), gates), () => ()))
 
   /** [[start]] with LIVE indexes: each microbatch re-resolves every
-    * configured persisted index by PATH, and once the decisions land
-    * the batch's admitted docs are appended to each of them
-    * ([[StreamingNearDup.append]], [[SubstringIndex.append]],
-    * [[WinnowIndex.append]], [[DedupIndex.append]]) — so a doc
-    * admitted in batch N flags its near-copy, its partial span lifts
-    * and its byte-copies in batch N+1 without waiting for a corpus
-    * rebuild. What remains open, by design, is the INTRA-batch window:
-    * two novel near-identical docs inside one microbatch still both
-    * admit (the batch l9/l28 sweep is that backstop). The per-batch
-    * re-read costs one plan construction against the index directory —
-    * file listing, no data scan beyond what the screen join reads
-    * anyway; each index's schema resolves once, at start.
+    * configured persisted index by PATH, and the batch's admitted docs
+    * are appended to each of them — one [[graft.operators.IndexSet]]
+    * built from the configured dirs ([[StreamingNearDup]], plus
+    * [[SubstringIndex]] and [[WinnowIndex]] with `substrIndexDir`, plus
+    * [[DedupIndex]] with `exactHashDir`) — so a doc admitted in batch N
+    * flags its near-copy, its partial span lifts and its byte-copies in
+    * batch N+1 without waiting for a corpus rebuild. What remains open,
+    * by design, is the INTRA-batch window: two novel near-identical
+    * docs inside one microbatch still both admit (the batch l9/l28
+    * sweep is that backstop). The per-batch re-read costs one plan
+    * construction against the index directory — file listing, no data
+    * scan beyond what the screen join reads anyway; each index's schema
+    * resolves once, at start.
     *
-    * Per microbatch: [[graft.operators.ReleaseFlow]]'s recipe — one
-    * [[gatePin]] (the stateful dedup runs once), [[decide]] on it, and
-    * the appends to disjoint dirs run concurrently ([[Par.run]]).
+    * Per microbatch: one [[gatePin]] (the stateful dedup runs once),
+    * [[decide]] on it, then the admission step every release runs too
+    * ([[graft.operators.IndexSet.admitDeferred]]): the decisions are
+    * pinned, the appends start, and the decisions land while the
+    * appends run ([[drive]] joins them before the batch ends).
     *
     * Replay: decisions stay exactly-once via the batch-dir overwrite;
-    * a failed append fails the batch, which replays whole. A replayed
-    * append lands duplicate index rows, which screens tolerate
-    * (pair-level distinct) at the cost of index bytes until the next
-    * rebuild compacts them — the [[StreamingNearDup.append]]
-    * contract, whichever appends had landed. Both index-backed dedup
-    * arms are additionally replay-DECISION-idempotent: [[decide]]
-    * anti-joins each screen's corpus-side owner ids against the batch's
-    * own id set, so a replayed batch whose appends survived the crash
-    * re-admits its docs — including mutually-near-duplicate pairs
-    * admitted together, which a self-id-only guard would flip to
-    * duplicates of EACH OTHER — instead of flagging them against
-    * their own surviving index rows. */
+    * a failed append or decisions write fails the batch, which replays
+    * whole. A replayed append lands duplicate index rows, which screens
+    * tolerate (pair-level distinct) at the cost of index bytes until
+    * the next rebuild compacts them — the [[StreamingNearDup]] append
+    * contract, whichever appends had landed. Every index-backed arm is
+    * additionally replay-DECISION-idempotent: [[decide]] anti-joins each
+    * screen's corpus-side owner ids (the exact-hash arm's too: the live
+    * frame carries `doc_id`) against the batch's own id set, so a
+    * replayed batch whose appends survived the crash re-admits its docs
+    * — including mutually-near-duplicate pairs admitted together, which
+    * a self-id-only guard would flip to duplicates of EACH OTHER —
+    * instead of flagging them against their own surviving index rows.
+    * That guard is also why the decisions write may overlap the
+    * appends: whichever of them a crash cut short, the replay decides
+    * the same. */
   def startLive(spark: SparkSession, stream: DataFrame,
       neardupIndexDir: String, holdoutGrams: DataFrame,
       outDir: String, tsCol: String, delay: String,
@@ -417,12 +412,16 @@ object AdmissionPipeline {
         * path picks up a new eval release without a restart). No
         * append: the eval suite is not grown by admissions. */
       evalVecsDir: Option[String] = None): StreamingQuery = {
-    val in = if (clean) cleanse(stream) else stream
-    val deduped = StreamingDedup.withinWatermark(
-      withNChars(in), tsCol, delay)
     // "ignored unless substrIndexDir is set": a set-but-unseeded winnow
     // dir must not PATH_NOT_FOUND for a gate decide() never consults
     val winnowDir = substrIndexDir.flatMap(_ => winnowIndexDir)
+    // the winnow member rides the SAME conditional as the substring
+    // member — one cannot grow without the other, the coverage
+    // invariant's operational form
+    val indexes = IndexSet(Seq(StreamingNearDup -> neardupIndexDir) ++
+      substrIndexDir.map(SubstringIndex -> _) ++
+      winnowDir.map(WinnowIndex -> _) ++
+      exactHashDir.map(DedupIndex -> _): _*)
     // each index's schema, inferred ONCE here: the per-batch reads
     // re-list the live files by path but skip the footer-inference job
     val ndLike = StreamingNearDup.readIndex(spark, neardupIndexDir)
@@ -431,59 +430,61 @@ object AdmissionPipeline {
     val hashSchema = exactHashDir.map(DedupIndex.read(spark, _).schema)
     val evalSchema =
       evalVecsDir.map(StreamingSemanticDecontam.readIndex(spark, _).schema)
+    drive(deduped(stream, tsCol, delay, clean), outDir) { batch =>
+      // all live indexes re-resolve by PATH per microbatch; the
+      // substring gate's screen set is a projection of the SAME
+      // persisted artifact batch l33 probes (SubstringIndex — the
+      // caller seeds it with the corpus, possibly recency-scoped,
+      // before start)
+      val gates = Gates(
+        StreamingNearDup.readIndex(spark, neardupIndexDir, Some(ndLike)),
+        holdoutGrams,
+        corpusSpans = substrIndexDir.map(d =>
+          StreamingSubstring.fromPersisted(spark, d, spanSchema)),
+        corpusWinnow = winnowDir.map(WinnowIndex.read(spark, _, winnowSchema)),
+        classifier = classifier,
+        exactHashes = exactHashDir.map(DedupIndex.read(spark, _, hashSchema)),
+        evalVecs = evalVecsDir.map(
+          StreamingSemanticDecontam.readIndex(spark, _, evalSchema)))
+      // the pinned decisions keep the pre-columns, so the appends
+      // project them; the span index keys on `lang`, which a stream
+      // may not carry
+      indexes.admitDeferred(decide(gatePin(batch), gates), admitted =>
+        if (admitted.columns.contains("lang")) admitted
+        else admitted.withColumn("lang", lit("und")))
+    }
+  }
+
+  /** The stream prelude every text entry point shares: cleaning runs
+    * BEFORE the stateful dedup so the content-hash state keys on
+    * cleaned text — see [[cleanse]]. */
+  private def deduped(stream: DataFrame, tsCol: String, delay: String,
+      clean: Boolean): DataFrame =
+    StreamingDedup.withinWatermark(
+      withNChars(if (clean) cleanse(stream) else stream), tsCol, delay)
+
+  /** THE stream driver of every admission entry point (text and media,
+    * static and live): per microbatch, `step` decides and returns
+    * (decisions, join of any appends it started); the decisions land
+    * under their own `_batch_id=N` dir with [[GatePreCols]] dropped —
+    * fully overwritten on replay, see [[start]]'s idempotence note —
+    * and the join runs before the batch ends, also when the decisions
+    * write throws, so no append still writes while the batch fails.
+    * The directory name carries `_batch_id` as a discovered partition
+    * column, so readers of `decisions/` see the same schema as
+    * in-write partitioning would give. */
+  private[streaming] def drive(deduped: DataFrame, outDir: String)(
+      step: DataFrame => (DataFrame, () => Unit)): StreamingQuery =
     deduped.writeStream
       .option("checkpointLocation", s"$outDir/_checkpoint")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // all live indexes re-resolve by PATH per microbatch; the
-        // substring gate's screen set is a projection of the SAME
-        // persisted artifact batch l33 probes (SubstringIndex — the
-        // caller seeds it with the corpus, possibly recency-scoped,
-        // before start)
-        val gates = Gates(
-          StreamingNearDup.readIndex(spark, neardupIndexDir, Some(ndLike)),
-          holdoutGrams,
-          corpusSpans = substrIndexDir.map(d =>
-            StreamingSubstring.fromPersisted(spark, d, spanSchema)),
-          corpusWinnow = winnowDir.map(WinnowIndex.read(spark, _, winnowSchema)),
-          classifier = classifier,
-          exactHashes = exactHashDir.map(DedupIndex.read(spark, _, hashSchema)),
-          evalVecs = evalVecsDir.map(
-            StreamingSemanticDecontam.readIndex(spark, _, evalSchema)))
-        // one decision checkpoint, five consumers (the sink and four
-        // appends); it keeps the pre-columns so the appends project them
-        val decisions = decide(gatePin(batch), gates).localCheckpoint()
-        writeDecisions(decisions.drop(GatePreCols: _*), outDir, batchId)
-        val admitted = decisions.filter(col("reason") === "admit")
-        val appends = Seq.newBuilder[() => Unit]
-        appends += (() => StreamingNearDup.append(admitted, neardupIndexDir))
-        substrIndexDir.foreach { d =>
-          val withLang =
-            if (admitted.columns.contains("lang")) admitted
-            else admitted.withColumn("lang", lit("und"))
-          appends += (() => SubstringIndex.append(withLang, d))
-          // the winnow append rides the SAME conditional as the
-          // substring append — one cannot grow without the other, the
-          // coverage invariant's operational form
-          winnowIndexDir.foreach(w =>
-            appends += (() => WinnowIndex.append(admitted, w)))
-        }
-        exactHashDir.foreach(d =>
-          appends += (() => DedupIndex.append(admitted, d)))
-        Par.run(appends.result())
+        val (decisions, join) = step(batch)
+        try decisions.drop(GatePreCols: _*).write.mode("overwrite")
+          .partitionBy("reason")
+          .parquet(s"$outDir/decisions/_batch_id=$batchId")
+        finally join()
       }
       .start()
-  }
-
-  /** One batch's decisions land under their own `_batch_id=N` dir,
-    * fully overwritten on replay — see [[start]]'s idempotence note.
-    * The directory name carries `_batch_id` as a discovered partition
-    * column, so readers of `decisions/` see the same schema as the old
-    * in-write partitioning. */
-  private def writeDecisions(decisions: DataFrame, outDir: String,
-      batchId: Long): Unit =
-    decisions.write.mode("overwrite")
-      .partitionBy("reason")
-      .parquet(s"$outDir/decisions/_batch_id=$batchId")
 
   private def withNChars(df: DataFrame): DataFrame =
     if (df.columns.contains("n_chars")) df

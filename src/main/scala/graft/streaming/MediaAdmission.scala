@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.Multimodal
-import graft.operators.LlmQueries
+import graft.operators.{IndexSet, LlmQueries}
 
 /** Composed streaming MEDIA admission — [[AdmissionPipeline]]'s shape
   * for the media column: every gate a multimodal ingest runs at the
@@ -81,7 +81,8 @@ object MediaAdmission {
 
   /** The per-batch decision frame: `batch`'s columns plus `reason`.
     * Pure function of (batch, gates) — spec-tested directly and reused
-    * by [[start]]'s foreachBatch. Precedence: corrupt >
+    * by [[start]], [[startLive]] and [[graft.operators.MediaReleaseFlow
+    * .release]]. Precedence: corrupt >
     * corpus_duplicate (opt-in) > media_duplicate > too_small >
     * extreme_aspect > admit.
     *
@@ -145,11 +146,6 @@ object MediaAdmission {
       .select(batch.columns.map(col) :+ col("reason"): _*)
   }
 
-  /** Wire the pipeline over a streaming media frame (doc_id, payload,
-    * `tsCol`): watermark-bounded exact byte dedup, per-batch decision,
-    * one parquet sink partitioned by (batch, reason) with the same
-    * replay-idempotence contract as [[AdmissionPipeline.start]] (a
-    * replayed microbatch overwrites its whole `_batch_id=N` dir). */
   /** The shared stream prelude: watermark-bounded exact byte dedup on
     * [[itemKey]] — one definition for [[start]] and [[startLive]] so
     * the entry points cannot key differently. */
@@ -161,22 +157,24 @@ object MediaAdmission {
       .dropDuplicatesWithinWatermark("_mh")
       .drop("_mh")
 
+  /** Wire the pipeline over a streaming media frame (doc_id, payload,
+    * `tsCol`): watermark-bounded exact byte dedup, per-batch decision,
+    * one parquet sink partitioned by (batch, reason) — the text
+    * pipeline's driver ([[AdmissionPipeline.drive]]), so the same
+    * replay-idempotence contract as [[AdmissionPipeline.start]] (a
+    * replayed microbatch overwrites its whole `_batch_id=N` dir). The
+    * batch is pinned once, eagerly: decide() reads it from several
+    * arms, and each read of the unpinned frame re-runs the dedup. */
   def start(spark: SparkSession, stream: DataFrame, gates: Gates,
-      outDir: String, tsCol: String, delay: String): StreamingQuery = {
-    dedupedStream(stream, tsCol, delay).writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // pinned once, eagerly: decide() reads the batch from several
-        // arms, and each read of the unpinned frame re-runs the dedup
-        writeDecisions(decide(batch.localCheckpoint(), gates), outDir, batchId)
-      }
-      .start()
-  }
+      outDir: String, tsCol: String, delay: String): StreamingQuery =
+    AdmissionPipeline.drive(dedupedStream(stream, tsCol, delay), outDir)(
+      batch => (decide(batch.localCheckpoint(), gates), () => ()))
 
   /** [[start]] with a LIVE index — the [[AdmissionPipeline.startLive]]
     * contract on the media column: each microbatch re-resolves the
     * persisted perceptual-hash index by PATH, and the batch's admitted
-    * media are appended to it after the decision lands — so an item
+    * media are appended to it through the admission step every release
+    * runs too ([[graft.operators.IndexSet.admitDeferred]]) — so an item
     * admitted in batch N flags its re-encode in batch N+1 without
     * waiting for a corpus rebuild. The INTRA-batch window stays open
     * by design (two novel near-identical items in one microbatch both
@@ -184,31 +182,18 @@ object MediaAdmission {
     * decision-idempotent: the replayed batch sees its own prior append
     * in the index, but [[decide]]'s batch-ownership guard keeps the
     * admits from flipping to `media_duplicate` against their own or
-    * their batch-mates' index rows, and the duplicate
-    * index rows the re-append lands are screen-tolerated — the
-    * [[StreamingMediaDedup.append]] contract. */
+    * their batch-mates' index rows — which is also why the decisions
+    * write may overlap the append — and the duplicate index rows the
+    * re-append lands are screen-tolerated (the [[StreamingMediaDedup]]
+    * append contract). */
   def startLive(spark: SparkSession, stream: DataFrame,
       phashIndexDir: String, outDir: String, tsCol: String,
       delay: String): StreamingQuery = {
-    dedupedStream(stream, tsCol, delay).writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val indexes = IndexSet(StreamingMediaDedup -> phashIndexDir)
+    AdmissionPipeline.drive(dedupedStream(stream, tsCol, delay), outDir) {
+      batch =>
         val gates = Gates(StreamingMediaDedup.readIndex(spark, phashIndexDir))
-        val decisions = decide(batch.localCheckpoint(), gates).localCheckpoint()
-        writeDecisions(decisions, outDir, batchId)
-        StreamingMediaDedup.append(
-          decisions.filter(col("reason") === "admit")
-            .select("doc_id", "payload"), phashIndexDir)
-      }
-      .start()
+        indexes.admitDeferred(decide(batch.localCheckpoint(), gates))
+    }
   }
-
-  /** One batch's decisions land under their own `_batch_id=N` dir,
-    * fully overwritten on replay — [[AdmissionPipeline]]'s idempotence
-    * contract. */
-  private def writeDecisions(decisions: DataFrame, outDir: String,
-      batchId: Long): Unit =
-    decisions.write.mode("overwrite")
-      .partitionBy("reason")
-      .parquet(s"$outDir/decisions/_batch_id=$batchId")
 }

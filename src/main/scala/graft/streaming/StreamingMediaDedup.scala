@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Multimodal
-import graft.operators.{DocIndex, IndexArtifact, LlmQueries, Par}
+import graft.operators.{DocIndex, IndexArtifact, LlmQueries}
 
 /** Streaming MEDIA near-duplicate screen — incoming media payloads
   * checked against the landed corpus' perceptual-hash index before
@@ -46,8 +46,7 @@ object StreamingMediaDedup extends DocIndex {
 
   /** Build from a (doc_id, payload) media frame. */
   def buildIndex(media: DataFrame): Index = {
-    val sigs = media.select(col("doc_id"),
-      Multimodal.sigCol(col("payload")).as("sig"))
+    val sigs = derive(media)
     Index(sigs, Multimodal.sigBandFrame(sigs))
   }
 
@@ -55,31 +54,22 @@ object StreamingMediaDedup extends DocIndex {
   private val Bands =
     IndexArtifact.rangeClustered("bands", "band_id", "bkey")
 
-  def artifacts: Seq[IndexArtifact] = Seq(Sigs, Bands)
+  /** Persisted form — the steady-state contract: the corpus is signed
+    * once per refresh in batch (both artifacts derive from the one
+    * pinned signature frame, [[DocIndex]]); every streaming screen
+    * reads the SAME materialized frames. Appends land newly admitted
+    * media without a rebuild: signature and band rows are a PURE
+    * per-row function of the payload, so append-then-read equals a
+    * rebuild over the union corpus exactly; the replayed-batch
+    * tolerance contract is [[StreamingNearDup]]'s. */
+  protected def derive(media: DataFrame): DataFrame =
+    media.select(col("doc_id"), Multimodal.sigCol(col("payload")).as("sig"))
 
-  /** Persist — the steady-state contract: the corpus is signed once
-    * per refresh in batch; every streaming screen reads the SAME
-    * materialized frames. */
-  def write(media: DataFrame, base: String): Unit = {
-    val idx = buildIndex(media)
-    Par.run(() => Sigs.write(idx.sigs, base),
-      () => Bands.write(idx.bands, base))
-  }
+  protected def parts: Seq[(IndexArtifact, DataFrame => DataFrame)] =
+    Seq(Sigs -> identity, Bands -> (Multimodal.sigBandFrame(_)))
 
   def readIndex(spark: SparkSession, base: String): Index =
     Index(Sigs.read(spark, base), Bands.read(spark, base))
-
-  /** Incremental append — newly admitted media join the persisted
-    * index without a rebuild. Signature and band rows are a PURE
-    * per-row function of the payload, so append-then-read equals a
-    * rebuild over the union corpus exactly; the replayed-batch
-    * tolerance contract is [[StreamingNearDup.append]]'s. */
-  def append(media: DataFrame, base: String): Unit = {
-    // eager pin FIRST: both appends derive from the one signature frame
-    val sigs = buildIndex(media).sigs.localCheckpoint()
-    Par.run(() => Sigs.append(sigs, base),
-      () => Bands.append(Multimodal.sigBandFrame(sigs), base))
-  }
 
   /** Screen a streaming media frame (doc_id, payload, `tsCol`) against
     * `idx`. Emits flagged pairs (doc_id, corpus_id, hamming, `tsCol`);

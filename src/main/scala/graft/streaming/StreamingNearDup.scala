@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{DocIndex, IndexArtifact, LlmQueries, Par}
+import graft.operators.{DocIndex, IndexArtifact, LlmQueries}
 
 /** Streaming NEAR-duplicate screen — incoming documents checked against
   * the landed corpus before admission, the ingest-side counterpart of
@@ -47,8 +47,11 @@ object StreamingNearDup extends DocIndex {
 
   def buildIndex(corpus: DataFrame): Index = {
     val sk = LlmQueries.docSketch(corpus)
-    Index(sk, LlmQueries.minhashBuckets(sk.select("doc_id", "sig")))
+    Index(sk, bandsOf(sk))
   }
+
+  private def bandsOf(sk: DataFrame): DataFrame =
+    LlmQueries.minhashBuckets(sk.select("doc_id", "sig"))
 
   /** The sketch frame, clustered by doc_id for the verify join. */
   private val Sketch = IndexArtifact.rangeClustered("sketch", "doc_id")
@@ -58,17 +61,26 @@ object StreamingNearDup extends DocIndex {
   private val Bands =
     IndexArtifact.rangeClustered("bands", "band_id", "bkey")
 
-  def artifacts: Seq[IndexArtifact] = Seq(Sketch, Bands)
+  /** Persisted form — the steady-state contract: the corpus is sketched
+    * ONCE per refresh in batch (both artifacts derive from the one
+    * pinned sketch, [[DocIndex]]), and every streaming screen reads the
+    * SAME materialized frames instead of re-sketching 100 TB per query
+    * start.
+    *
+    * Incremental append — newly admitted docs join the persisted corpus
+    * index without a rebuild. Sketch and band rows are a PURE per-row
+    * function of the text (the same map-side stage as [[buildIndex]]),
+    * so append-then-read equals a rebuild over the union corpus
+    * exactly. Caller contract, as for `appendIvf`: appended docs should
+    * be disjoint from already-indexed doc_ids — a replayed overlapping
+    * batch lands duplicate rows, which downstream screens tolerate (the
+    * pair-level `distinct`/`dropDuplicates` collapses them, so
+    * DECISIONS are unaffected) but which cost index bytes until the
+    * next batch rebuild compacts them. */
+  protected def derive(docs: DataFrame): DataFrame = LlmQueries.docSketch(docs)
 
-  /** Persist the corpus index — the steady-state contract: the corpus
-    * is sketched once per refresh in batch, and every streaming screen
-    * reads the SAME materialized frames instead of re-sketching 100 TB
-    * per query start. */
-  def write(corpus: DataFrame, base: String): Unit = {
-    val idx = buildIndex(corpus)
-    Par.run(() => Sketch.write(idx.sketch, base),
-      () => Bands.write(idx.bands, base))
-  }
+  protected def parts: Seq[(IndexArtifact, DataFrame => DataFrame)] =
+    Seq(Sketch -> identity, Bands -> bandsOf)
 
   /** `like`: an earlier read of the same index, whose schemas this
     * read reuses instead of inferring them again. */
@@ -76,24 +88,6 @@ object StreamingNearDup extends DocIndex {
       like: Option[Index] = None): Index =
     Index(Sketch.read(spark, base, like.map(_.sketch.schema)),
       Bands.read(spark, base, like.map(_.bands.schema)))
-
-  /** Incremental append — newly admitted docs join the persisted corpus
-    * index without a rebuild. Sketch and band rows are a PURE per-row
-    * function of the text (the same map-side stage as [[buildIndex]]),
-    * so append-then-read equals a rebuild over the union corpus
-    * exactly. Caller contract, as for `appendIvf`: `docs` should be
-    * disjoint from already-indexed doc_ids — a replayed overlapping
-    * batch lands duplicate rows, which downstream screens tolerate (the
-    * pair-level `distinct`/`dropDuplicates` collapses them, so
-    * DECISIONS are unaffected) but which cost index bytes until the
-    * next batch rebuild compacts them. */
-  def append(docs: DataFrame, base: String): Unit = {
-    // eager pin FIRST: both appends derive from the one sketch frame
-    val sk = LlmQueries.docSketch(docs).localCheckpoint()
-    Par.run(() => Sketch.append(sk, base),
-      () => Bands.append(LlmQueries.minhashBuckets(sk.select("doc_id", "sig")),
-        base))
-  }
 
   /** Screen a streaming document frame (doc_id, text, `tsCol`) against
     * `idx`. Emits flagged pairs (doc_id, corpus_id, jac_e4, `tsCol`);

@@ -80,6 +80,27 @@ class StreamingNearDupSpec extends AnyFunSuite {
       s"got ${rows.mkString("; ")}")
   }
 
+  test("write and append sketch each document once: both artifacts derive " +
+      "from one pinned sketch") {
+    // counts evaluations of the doc text; nondeterministic, so the
+    // optimizer neither duplicates nor reorders it within one pass
+    val seen = spark.sparkContext.longAccumulator("sneardup_sketched")
+    val touch = udf { (t: String) => seen.add(1L); t }.asNondeterministic()
+    def docs(offset: Long) =
+      corpus.select((col("doc_id") + offset).as("doc_id"),
+        touch(col("text")).as("text"))
+    val base = Files.createTempDirectory("graft_sneardup_once_").toString
+    // each range-clustered write would otherwise run its input twice
+    // (range-bound sampling, then the shuffle), once per artifact
+    StreamingNearDup.write(docs(0L), base)
+    assert(seen.value === 2L)
+    StreamingNearDup.append(docs(10L), base)
+    assert(seen.value === 4L)
+    val idx = StreamingNearDup.readIndex(spark, base)
+    assert(idx.sketch.count() === 4L)
+    assert(idx.bands.select("doc_id").distinct().count() === 4L)
+  }
+
   test("sf0.1: screening a microbatch against the bench-scale corpus index " +
       "stays candidate-bounded and flags the planted re-crawl") {
     val sf01 = "/root/testdata/sf0.1"
