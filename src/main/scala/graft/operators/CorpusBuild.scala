@@ -117,8 +117,9 @@ object CorpusBuild {
       else ReleaseFlow.releaseDeferred(spark, survivorsIn, base, cfg.screens))
     // everything between fork and join is wrapped so a curation/shard
     // failure still joins (or observes) the in-flight appends instead
-    // of leaving them racing past the exception
-    try {
+    // of leaving them racing past the exception; that failure, not an
+    // append's, is the one thrown
+    Par.joinAfter(joinAppends) {
     val gateOut = decided.filter(col("decision") =!= "admit")
       .select(col("lang"), col("doc_id"),
         lit("gate").as("stage"), col("decision").as("outcome"))
@@ -183,6 +184,6 @@ object CorpusBuild {
         cfg.epoch, sb)
     }
     Result(ledger, manifest, decided)
-    } finally joinAppends() // all artifacts landed before build returns
+    } // all artifacts landed before build returns
   }
 }

@@ -68,4 +68,22 @@ private[graft] object Par {
       futs.flatMap(_.value.get.failed.toOption).headOption.foreach(throw _)
     }
   }
+
+  /** Run `body`, then `join` — also when `body` throws, like a
+    * `finally`, but the FIRST failure wins: when both throw, `body`'s
+    * exception propagates with the join's attached as suppressed,
+    * where a `finally` would replace it with the join's. For the
+    * fork → work → join compositions over [[deferred]]. */
+  def joinAfter[A](join: () => Unit)(body: => A): A = {
+    val result =
+      try body
+      catch {
+        case t: Throwable =>
+          try join()
+          catch { case j: Throwable => if (j ne t) t.addSuppressed(j) }
+          throw t
+      }
+    join()
+    result
+  }
 }

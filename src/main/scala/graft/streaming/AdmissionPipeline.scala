@@ -37,10 +37,14 @@ import graft.operators.{CleaningQueries, DedupIndex, IndexSet, LlmQueries,
   *    so a doc flagged by several gates gets ONE reason by the same
   *    precedence as l19/l29: duplicate-family dominates quality.
   *
-  * Scale shape: both screens are index equi-joins (eval-set-sized gram
-  * index; banded corpus index), the reason join keys on doc_id within
-  * the microbatch, and nothing aggregates stream-wide — per-batch cost
-  * is O(batch × index-hit-rate), independent of corpus size.
+  * Scale shape: every screen is an index equi-join (eval-set-sized gram
+  * index; banded corpus index; the opt-in span, winnow and hash
+  * indexes). Each index is streamed once per batch against
+  * broadcast batch-side keys, with no index-wide shuffle or
+  * aggregation: the ownership guards and de-duplication run on the
+  * HITS, never on an index. The reason join keys on doc_id within the
+  * microbatch, against broadcast flags — per-batch cost is O(batch ×
+  * index-hit-rate) plus one scan of each index.
   */
 object AdmissionPipeline {
 
@@ -58,7 +62,7 @@ object AdmissionPipeline {
         * `h`): L17's stream state only covers the watermark horizon,
         * and the L18 sketch cannot see sub-3-token docs or trim-only
         * copies (l29's belt-and-braces argument, at ingest). One
-        * hash-keyed semi join per batch; None runs the pipeline
+        * hash-keyed probe per batch; None runs the pipeline
         * unchanged. */
       exactHashes: Option[DataFrame] = None,
       /** Opt-in SEMANTIC decontamination for batches carrying an
@@ -205,9 +209,10 @@ object AdmissionPipeline {
     // owner ids against the batch's id set restores the pre-crash
     // decisions exactly; it also preserves the open-intra-batch-window
     // semantics (novel same-batch near-pairs still both admit — batch
-    // l9/l28 is that backstop). One anti-join per screen, keyed on a
-    // batch-sized distinct set — per-batch bounded.
-    val batchOwned = batch.select(col("doc_id").as("corpus_id")).distinct()
+    // l9/l28 is that backstop). ONE id frame serves all three guards:
+    // the pin's own column, no `distinct` (an anti join ignores
+    // duplicates on its build side), so the plan broadcasts it once.
+    val batchOwned = batch.select(col("doc_id").as("corpus_id"))
     def arm(df: DataFrame, bit: Long): DataFrame =
       df.select(col("doc_id"), lit(bit).as("_arm"))
     val arms = Seq.newBuilder[DataFrame]
@@ -241,16 +246,18 @@ object AdmissionPipeline {
     // h-only frame is UNguarded — [[graft.operators.ReleaseFlow]]
     // passes that shape so re-releasing a shard re-labels its own
     // landed bytes corpus_duplicate (idempotence by the artifact's own
-    // semantics).
-    gates.exactHashes.foreach { ix0 =>
-      val ix =
-        if (ix0.columns.contains("doc_id"))
-          ix0.join(batch.select("doc_id").distinct(),
-            Seq("doc_id"), "left_anti")
-        else ix0
-      arms += arm(batch
-        .withColumn("_h", graft.operators.DedupIndex.contentHash)
-        .join(ix.select(col("h").as("_h")).distinct(), Seq("_h"), "left_semi"),
+    // semantics). Either way the index is probed, never reshaped: the
+    // guard drops batch-owned HITS after the hash match, and duplicate
+    // index rows only repeat a hit the flag word collapses.
+    gates.exactHashes.foreach { ix =>
+      val hashed = batch.select(col("doc_id"),
+        graft.operators.DedupIndex.contentHash.as("_h"))
+      arms += arm(
+        if (ix.columns.contains("doc_id"))
+          hashed.join(ix.select(col("h").as("_h"),
+              col("doc_id").as("corpus_id")), Seq("_h"))
+            .join(batchOwned, Seq("corpus_id"), "left_anti")
+        else hashed.join(ix.select(col("h").as("_h")), Seq("_h"), "left_semi"),
         XdBit)
     }
     // ONE flag word per flagged doc (unflagged docs are absent and read
@@ -260,8 +267,10 @@ object AdmissionPipeline {
       .groupBy("doc_id").agg(bit_or(col("_arm")).as("_fl"))
     // null _fl => null test => the `when` skips, same as the old nulls
     def hit(bits: Long) = col("_fl").bitwiseAND(lit(bits)) =!= 0L
+    // the flags hold at most one row per batch doc: broadcast them, so
+    // the pinned batch streams through the join instead of shuffling
     LlmQueries.withStopBp(batch)
-      .join(flags, Seq("doc_id"), "left")
+      .join(broadcast(flags), Seq("doc_id"), "left")
       .withColumn("reason",
         // byte-exact copy of the LANDED corpus is the strongest
         // duplicate claim — ahead of the sketch's near_duplicate
@@ -469,7 +478,9 @@ object AdmissionPipeline {
     * under their own `_batch_id=N` dir with [[GatePreCols]] dropped —
     * fully overwritten on replay, see [[start]]'s idempotence note —
     * and the join runs before the batch ends, also when the decisions
-    * write throws, so no append still writes while the batch fails.
+    * write throws, so no append still writes while the batch fails
+    * (the write's failure is the one thrown, [[graft.operators.Par
+    * .joinAfter]]).
     * The directory name carries `_batch_id` as a discovered partition
     * column, so readers of `decisions/` see the same schema as
     * in-write partitioning would give. */
@@ -479,10 +490,11 @@ object AdmissionPipeline {
       .option("checkpointLocation", s"$outDir/_checkpoint")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val (decisions, join) = step(batch)
-        try decisions.drop(GatePreCols: _*).write.mode("overwrite")
-          .partitionBy("reason")
-          .parquet(s"$outDir/decisions/_batch_id=$batchId")
-        finally join()
+        graft.operators.Par.joinAfter(join) {
+          decisions.drop(GatePreCols: _*).write.mode("overwrite")
+            .partitionBy("reason")
+            .parquet(s"$outDir/decisions/_batch_id=$batchId")
+        }
       }
       .start()
 

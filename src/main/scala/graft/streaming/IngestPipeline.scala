@@ -149,15 +149,18 @@ object IngestPipeline {
           graft.operators.Normalize.atRest(incoming, moneyCols),
           pk, Seq(versionCol, "_src_offset"), n)
       case None =>
-        val upserted = latestWins(existing(spark, sinks.normalized), incoming, pk,
-          Seq(versionCol, "_src_offset"))
         // Money lands as DECIMAL(10,2) (the reference's at-rest DDL
-        // type); the union above coerces prior decimals back to wire
-        // doubles, which is lossless for 2-decimal money, and this
-        // single cast restores the exact at-rest representation for
-        // whatever key wins.
-        swapWrite(spark, graft.operators.Normalize.atRest(upserted, moneyCols),
-          sinks.normalized)
+        // type); the union coerces prior decimals back to wire doubles,
+        // which is lossless for 2-decimal money, and this single cast
+        // restores the exact at-rest representation for whatever key
+        // wins.
+        def upserted(prior: Option[DataFrame]) = graft.operators.Normalize
+          .atRest(latestWins(prior, incoming, pk, Seq(versionCol, "_src_offset")),
+            moneyCols)
+        // the prior table holds what this batch writes, so it is read
+        // with that schema (resolved on the driver, no inference job)
+        swapWrite(spark, upserted(existing(spark, sinks.normalized,
+          Some(upserted(None).schema))), sinks.normalized)
     }
 
     // ---- A8/S9: processing stats append (`02:134-141` analog).
@@ -277,8 +280,12 @@ object IngestPipeline {
     fs.delete(bak, true)
   }
 
-  private[streaming] def existing(spark: SparkSession, path: String): Option[DataFrame] =
-    liveDir(spark, path).map(d => spark.read.parquet(d.toString))
+  /** The table at `path` (or its mid-swap backup), if any; `schema`,
+    * when known, skips the footer-inference job. */
+  private[streaming] def existing(spark: SparkSession, path: String,
+      schema: Option[StructType] = None): Option[DataFrame] =
+    liveDir(spark, path).map(d =>
+      schema.fold(spark.read)(spark.read.schema).parquet(d.toString))
 
   /** The directory holding a table's parquet files: `path`, or in the
     * crash window of [[swapWrite]] (table mid-rotation) the backup that

@@ -118,14 +118,16 @@ object MediaAdmission {
     //    and it is UNguarded, so a re-released shard flags against its
     //    own landed bytes (batch idempotence) where the perceptual arm
     //    would not.
+    // Neither arm reshapes its index or the batch: semi and anti joins
+    // ignore repeats on their build side, so no `distinct` feeds them.
     val dup = StreamingMediaDedup.screenRaw(ok, gates.phash,
       keep = Seq("_k"))
-      .join(ok.select(col("doc_id").as("corpus_id")).distinct(),
-        Seq("corpus_id"), "left_anti")
+      .join(ok.select(col("doc_id").as("corpus_id")), Seq("corpus_id"),
+        "left_anti")
       .select(col("_k"), lit(1L).as("_arm"))
     val arms = gates.exactHashes
       .map(ix => dup.unionByName(ok.select(col("_k"))
-        .join(ix.select(col("h").as("_k")).distinct(), Seq("_k"), "left_semi")
+        .join(ix.select(col("h").as("_k")), Seq("_k"), "left_semi")
         .select(col("_k"), lit(2L).as("_arm"))))
       .getOrElse(dup)
     val flags = arms.groupBy("_k").agg(bit_or(col("_arm")).as("_fl"))
@@ -190,9 +192,13 @@ object MediaAdmission {
       phashIndexDir: String, outDir: String, tsCol: String,
       delay: String): StreamingQuery = {
     val indexes = IndexSet(StreamingMediaDedup -> phashIndexDir)
+    // the index schemas, inferred ONCE here: the per-batch reads re-list
+    // the live files by path but skip the footer-inference job
+    val like = StreamingMediaDedup.readIndex(spark, phashIndexDir)
     AdmissionPipeline.drive(dedupedStream(stream, tsCol, delay), outDir) {
       batch =>
-        val gates = Gates(StreamingMediaDedup.readIndex(spark, phashIndexDir))
+        val gates = Gates(
+          StreamingMediaDedup.readIndex(spark, phashIndexDir, Some(like)))
         indexes.admitDeferred(decide(batch.localCheckpoint(), gates))
     }
   }

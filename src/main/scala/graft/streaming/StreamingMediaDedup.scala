@@ -68,8 +68,12 @@ object StreamingMediaDedup extends DocIndex {
   protected def parts: Seq[(IndexArtifact, DataFrame => DataFrame)] =
     Seq(Sigs -> identity, Bands -> (Multimodal.sigBandFrame(_)))
 
-  def readIndex(spark: SparkSession, base: String): Index =
-    Index(Sigs.read(spark, base), Bands.read(spark, base))
+  /** `like`: an earlier read of the same index, whose schemas this
+    * read reuses instead of inferring them again. */
+  def readIndex(spark: SparkSession, base: String,
+      like: Option[Index] = None): Index =
+    Index(Sigs.read(spark, base, like.map(_.sigs.schema)),
+      Bands.read(spark, base, like.map(_.bands.schema)))
 
   /** Screen a streaming media frame (doc_id, payload, `tsCol`) against
     * `idx`. Emits flagged pairs (doc_id, corpus_id, hamming, `tsCol`);

@@ -75,15 +75,18 @@ object StreamingSubstring {
     * index ([[SubstringIndex]] — the same artifact batch l33 probes),
     * so the streaming gate and the batch audit share provenance: one
     * build job signs the corpus once, both consumers read it. Same
-    * distinct (gram, owner) set as [[buildIndex]] on the same corpus
-    * by construction (positional grams distinct per doc ≡
-    * per-doc-distinct grams). */
+    * (gram, owner) SET as [[buildIndex]] on the same corpus, not
+    * de-duplicated: a gram at several positions of one doc, or a
+    * replayed append, repeats its row, so callers dedup their hits
+    * ([[screenRaw]]'s contract). A `distinct` here would aggregate the
+    * whole index on every probe. */
   def indexFrom(spanGrams: DataFrame): DataFrame =
-    spanGrams.select(col("gram"), col("doc_id").as("corpus_id")).distinct()
+    spanGrams.select(col("gram"), col("doc_id").as("corpus_id"))
 
   /** [[indexFrom]] over [[SubstringIndex.read]]: resolve the gate's
     * screen set from the persisted index directory by path (`schema`:
-    * the span-gram schema, when already resolved). */
+    * the span-gram schema, when already resolved). Same (gram, owner)
+    * set as [[buildIndex]]; callers dedup. */
   def fromPersisted(spark: SparkSession, base: String,
       schema: Option[StructType] = None): DataFrame =
     indexFrom(SubstringIndex.read(spark, base, schema))
@@ -142,9 +145,10 @@ object StreamingSubstring {
     // artifact for the common (quiet) case.
     val candidates = winnow match {
       case Some(widx) =>
+        // a semi join ignores repeats on its build side: no distinct
         val flagged = graft.operators.WinnowIndex.build(df)
           .join(widx.select("h"), Seq("h"), "left_semi")
-          .select("doc_id").distinct()
+          .select("doc_id")
         df.join(flagged, Seq("doc_id"), "left_semi")
       case None => df
     }
@@ -152,8 +156,8 @@ object StreamingSubstring {
         SamplingQueries.SpanK, hashed = true)
       .join(index, Seq("gram"))
     excludeOwners
-      .map(own => hits.join(own.select("corpus_id").distinct(),
-        Seq("corpus_id"), "left_anti"))
+      .map(own => hits.join(own.select("corpus_id"), Seq("corpus_id"),
+        "left_anti"))
       .getOrElse(hits.filter(col("corpus_id") =!= col("doc_id")))
       .select("doc_id", keep: _*)
   }

@@ -1002,4 +1002,53 @@ class AdmissionPipelineSpec extends AnyFunSuite {
       case ((live, re), k) => assert(live === re, s"artifact $k")
     }
   }
+
+  test("decide + pin on a pinned batch with all four index gates stays " +
+      "within its Spark job budget") {
+    // The measured count: the indexes are probed, never reshaped (no
+    // index-wide distinct), the three ownership guards share one
+    // broadcast batch-id set, and the reason join broadcasts the flags.
+    import graft.operators.{DedupIndex, ReleaseFlow, WinnowIndex}
+    val Budget = 14
+    val base = Files.createTempDirectory("graft_decide_budget_").toString
+    ReleaseFlow.init(corpus.withColumn("lang", lit("und")), base)
+    val g = gates.copy(
+      neardup = StreamingNearDup.readIndex(spark, ReleaseFlow.neardupDir(base)),
+      corpusSpans = Some(StreamingSubstring.fromPersisted(spark,
+        ReleaseFlow.substrDir(base))),
+      corpusWinnow = Some(WinnowIndex.read(spark, ReleaseFlow.winnowDir(base))),
+      exactHashes = Some(DedupIndex.read(spark, ReleaseFlow.dedupDir(base))))
+    val batch = AdmissionPipeline.gatePin(mkBatch(Seq(
+      1L -> longCorpusText.split(" ").drop(1).mkString(" "),
+      2L -> longCorpusText.toUpperCase,
+      3L -> "leaked the benchmark answer to question seven is forty two",
+      4L -> novel("b4"),
+      5L -> (longCorpusText.split(" ").take(16).mkString(" ") + " " +
+        novel("b5")))))
+    val sc = spark.sparkContext
+    val group = s"decide-budget-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val decided = try {
+      sc.setJobGroup(group, "decide + pin on one pinned batch")
+      try AdmissionPipeline.decide(batch, g).localCheckpoint()
+      finally sc.clearJobGroup()
+    } finally {
+      org.apache.spark.graftbridge.ListenerBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    val got = decided.select("doc_id", "reason").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got === Map(1L -> "near_duplicate", 2L -> "corpus_duplicate",
+      3L -> "contaminated", 4L -> "admit", 5L -> "verbatim_repeat"),
+      got.toString)
+    assert(jobs.get() > 0)
+    assert(jobs.get() <= Budget,
+      s"${jobs.get()} Spark jobs for decide + pin on one pinned batch")
+  }
 }

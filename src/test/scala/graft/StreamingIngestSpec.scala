@@ -362,10 +362,11 @@ class StreamingIngestSpec extends AnyFunSuite {
 
   test("a fresh microbatch stays within its Spark job budget") {
     // pin: dedup shuffle stage + checkpoint (2); per-partition tally (1);
-    // mark (1); raw (1); rejects (1); normalized: prior read, merge
-    // shuffle stage, write (3); stats (1). No lineage lookup: every
-    // offset is above the mark.
-    val Budget = 10
+    // mark (1); raw (1); rejects (1); normalized: merge shuffle stage,
+    // write (2) — the prior table is read with the batch's own schema,
+    // so no inference job; stats (1). No lineage lookup: every offset is
+    // above the mark.
+    val Budget = 9
     val base = tmp()
     val sinks = IngestPipeline.Sinks(s"$base/raw", s"$base/norm", s"$base/rej",
       s"$base/stats", s"$base/ckpt")

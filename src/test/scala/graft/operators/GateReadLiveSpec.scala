@@ -196,8 +196,15 @@ class GateReadLiveSpec extends AnyFunSuite {
     val evalDir = s"$evalBase/eval_vecs"
     StreamingSemanticDecontam.writeIndex(
       StreamingSemanticDecontam.buildIndex(evals(1 to 4)), evalBase)
+    // the media perceptual index, one payload per doc id
+    def media(ids: Range) = ids.map(i =>
+      (i.toLong, Array.tabulate[Byte](64)(j => (j * i + 7 * i).toByte)))
+      .toDF("doc_id", "payload")
+    val mediaBase = s"$base/media"
+    StreamingMediaDedup.write(media(1 to 4), mediaBase)
     // what a live query resolves once at start
     val nd0 = StreamingNearDup.readIndex(spark, ReleaseFlow.neardupDir(base))
+    val md0 = StreamingMediaDedup.readIndex(spark, mediaBase)
     val sch = Seq(SubstringIndex.read(spark, ReleaseFlow.substrDir(base)),
       WinnowIndex.read(spark, ReleaseFlow.winnowDir(base)),
       DedupIndex.read(spark, ReleaseFlow.dedupDir(base)),
@@ -206,7 +213,9 @@ class GateReadLiveSpec extends AnyFunSuite {
       def s(i: Int) = if (pinned) Some(sch(i)) else None
       val nd = StreamingNearDup.readIndex(spark, ReleaseFlow.neardupDir(base),
         if (pinned) Some(nd0) else None)
-      Seq(nd.sketch, nd.bands,
+      val md = StreamingMediaDedup.readIndex(spark, mediaBase,
+        if (pinned) Some(md0) else None)
+      Seq(nd.sketch, nd.bands, md.sigs, md.bands,
         SubstringIndex.read(spark, ReleaseFlow.substrDir(base), s(0)),
         WinnowIndex.read(spark, ReleaseFlow.winnowDir(base), s(1)),
         DedupIndex.read(spark, ReleaseFlow.dedupDir(base), s(2)),
@@ -227,15 +236,18 @@ class GateReadLiveSpec extends AnyFunSuite {
     StreamingNearDup.append(shard, ReleaseFlow.neardupDir(base))
     SubstringIndex.append(shard, ReleaseFlow.substrDir(base))
     WinnowIndex.append(shard, ReleaseFlow.winnowDir(base))
+    StreamingMediaDedup.append(media(5 to 6), mediaBase)
     Compaction.appendInto(spark, evalDir)(
       StreamingSemanticDecontam.buildIndex(evals(5 to 6))
         .write.mode("append").parquet(_))
     assert(same("append").forall(_ == 6), "the pinned read must list afresh")
     val evalLayout = (df: DataFrame) => df.coalesce(1).sortWithinPartitions("vec_id")
     ReleaseFlow.compact(spark, base)
+    StreamingMediaDedup.compact(spark, mediaBase)
     Compaction.rewrite(spark, evalDir)(evalLayout)
     assert(same("compact").forall(_ == 6))
     ReleaseFlow.retract(spark, Seq(5L).toDF("doc_id"), base)
+    StreamingMediaDedup.retract(spark, Seq(5L).toDF("doc_id"), mediaBase)
     Compaction.retract(spark, evalDir, Seq(5L).toDF("vec_id"), "vec_id")(evalLayout)
     assert(same("retract").forall(_ == 5))
   }

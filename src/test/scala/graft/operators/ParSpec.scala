@@ -70,6 +70,23 @@ class ParSpec extends AnyFunSuite {
       "deferred's join threw while a sibling task was still running")
   }
 
+  test("joinAfter: when the body and the join both throw, the body's " +
+      "failure is thrown with the join's attached as suppressed") {
+    val join = Par.deferred(Seq(
+      () => throw new RuntimeException("append failed")))
+    val boom = intercept[RuntimeException] {
+      Par.joinAfter(join) { throw new RuntimeException("decisions write failed") }
+    }
+    assert(boom.getMessage === "decisions write failed")
+    assert(boom.getSuppressed.map(_.getMessage).toSeq === Seq("append failed"))
+    // a body that succeeds still surfaces the join's failure, and a
+    // clean pair returns the body's value after the join
+    assert(intercept[RuntimeException](Par.joinAfter(join)(1))
+      .getMessage === "append failed")
+    var joined = false
+    assert(Par.joinAfter(() => joined = true)(2) === 2 && joined)
+  }
+
   test("empty and single-task arities: no pool, same semantics") {
     Par.run(Seq.empty) // no-op, must not throw
     var ran = false
