@@ -30,7 +30,7 @@ object BenchDecide {
     ReleaseFlow.init(corpus, base)
     // the shard pin releaseDeferred builds (disjoint ids)
     val shard = AdmissionPipeline.gatePin(
-      corpus.withColumn("doc_id", col("doc_id") + lit(10000000L)))
+      corpus.withColumn("doc_id", col("doc_id") + lit(10000000L)))(identity)
     val neardup = StreamingNearDup.readIndex(spark, ReleaseFlow.neardupDir(base))
     val spans = StreamingSubstring.fromPersisted(spark, ReleaseFlow.substrDir(base))
     val winnow = WinnowIndex.read(spark, ReleaseFlow.winnowDir(base))

@@ -30,7 +30,7 @@ object PlanDecide {
     ReleaseFlow.init(corpus, base)
     // the shard pin releaseDeferred builds (disjoint ids)
     val shard = AdmissionPipeline.gatePin(
-      corpus.withColumn("doc_id", col("doc_id") + lit(10000000L)))
+      corpus.withColumn("doc_id", col("doc_id") + lit(10000000L)))(identity)
     val gates = AdmissionPipeline.Gates(
       StreamingNearDup.readIndex(spark, ReleaseFlow.neardupDir(base)),
       spark.emptyDataFrame.select(lit(0L).as("gram")).limit(0),

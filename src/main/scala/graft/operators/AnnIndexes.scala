@@ -65,9 +65,9 @@ object AnnIndexes {
     * existing index files. The LSH signature is a PURE per-row function
     * of the vector — no trained state — so append-then-probe equals a
     * full rebuild EXACTLY (AnnIndexSpec pins row equality), and a daily
-    * refresh only signs the new vectors. New files cluster by band key
-    * like the original write; row-group skipping still applies per
-    * file. */
+    * refresh only signs the new vectors. The new rows land as one file
+    * sorted by (band_id, bval); its footer spans every band, so a probe
+    * opens it until compaction restores one band per file. */
   def appendLsh(newVecs: DataFrame, base: String): Unit =
     LshArtifact.append(lshBands(newVecs), base)
 

@@ -9,11 +9,12 @@ import org.apache.spark.sql.types.StructType
   * append contract. Every release appends new parquet files to the
   * persisted indexes ([[ReleaseFlow.release]] → four appends per
   * shard); append-≡-rebuild holds semantically at any append count,
-  * but the PHYSICAL layout decays: after N releases each index is N
-  * overlapping range-clustered file sets, so footer min/max spans
-  * widen back toward the whole key domain and a key-ranged probe
-  * stops skipping files (the selectivity the range clustering was
-  * built for — see [[IndexArtifact]]'s layout argument). The
+  * but the PHYSICAL layout decays: after N releases each index is its
+  * clustered files plus N appended key-sorted ones, each of whose
+  * footer min/max spans about the whole key domain, so a key-ranged
+  * probe opens every appended file (it loses the selectivity the
+  * range clustering was built for — see [[IndexArtifact]]'s layout
+  * argument). The
   * 100 TB story needs the maintenance op that restores the layout:
   * read → re-cluster → rewrite, each index by its own probe key.
   *

@@ -18,9 +18,14 @@ import org.apache.spark.sql.types.StructType
   * just row groups (a hash-partitioned file's min/max spans ~the whole
   * key domain). The LSH bands hash-partition instead — a probe pushes
   * literal band keys, so one band per file is the selectivity it needs.
-  * Appends write the same layout, so the probe layout holds between
-  * compactions and the file count follows the appended bytes (AQE
-  * coalescing), not the input frame's partitioning.
+  * An append lands ONE file per step, sorted by the artifact's keys: a
+  * live microbatch appends ~100 documents, and partitioning those rows
+  * costs more scheduling (a range-bound sampling job, then a shuffled
+  * write) than the rows it orders. An appended file's keys (hashes,
+  * band keys, grams) spread over the whole key domain, so its footer
+  * min/max do not let a probe skip it, and a microbatch-sized file is
+  * one row group; probe selectivity comes back only once [[compact]]
+  * restores the clustered layout across the whole chain.
   *
   * Retraction takes an id frame the caller already PINNED
   * ([[IndexArtifact.pinIds]]): [[Compaction.retract]] evaluates it more
@@ -28,7 +33,13 @@ import org.apache.spark.sql.types.StructType
   * would re-evaluate after the swap and silently under-retract.
   */
 final class IndexArtifact private (sub: String, idCol: String,
-    layout: DataFrame => DataFrame) {
+    cluster: DataFrame => DataFrame, keys: Seq[String]) {
+
+  private def sorted(rows: DataFrame): DataFrame =
+    rows.sortWithinPartitions(keys.map(col): _*)
+
+  /** Clustered by `cluster`, each file sorted by `keys`. */
+  private def layout(rows: DataFrame): DataFrame = sorted(cluster(rows))
 
   def dir(base: String): String = s"$base/$sub"
 
@@ -37,11 +48,12 @@ final class IndexArtifact private (sub: String, idCol: String,
   def write(rows: DataFrame, base: String): Unit =
     layout(rows).write.mode("overwrite").parquet(dir(base))
 
-  /** Land `rows` beside the live files, manifest-extended when the live
-    * tree carries one ([[Compaction.appendInto]]). */
+  /** Land `rows` beside the live files as ONE file sorted by `keys` —
+    * one job, no shuffle — manifest-extended when the live tree carries
+    * one ([[Compaction.appendInto]]). */
   def append(rows: DataFrame, base: String): Unit =
     Compaction.appendInto(rows.sparkSession, dir(base))(
-      layout(rows).write.mode("append").parquet(_))
+      sorted(rows.coalesce(1)).write.mode("append").parquet(_))
 
   /** The live rows; `schema` skips inference ([[Compaction.readLive]]). */
   def read(spark: SparkSession, base: String,
@@ -63,14 +75,12 @@ object IndexArtifact {
   /** Range-partitioned on `keys` and sorted within each file — every
     * document index's layout. */
   def rangeClustered(sub: String, keys: String*): IndexArtifact =
-    new IndexArtifact(sub, "doc_id",
-      _.repartitionByRange(keys.map(col): _*).sortWithinPartitions(keys.map(col): _*))
+    new IndexArtifact(sub, "doc_id", _.repartitionByRange(keys.map(col): _*), keys)
 
   /** Hash-partitioned on `part`, sorted within each file by `sort`. */
   def hashClustered(sub: String, idCol: String, part: String,
       sort: String*): IndexArtifact =
-    new IndexArtifact(sub, idCol,
-      _.repartition(col(part)).sortWithinPartitions(sort.map(col): _*))
+    new IndexArtifact(sub, idCol, _.repartition(col(part)), sort)
 
   /** The distinct ids of `ids`, materialized once — what a retraction
     * across one or more artifacts takes, so every swap sees the same
@@ -106,8 +116,8 @@ trait DocIndex {
 
   /** Derive once — pinned eagerly when several artifacts read it, so
     * the per-doc work (a sketch, a signature) runs once rather than
-    * once per artifact and per range-bound sample — then run each
-    * artifact's step concurrently ([[Par]]). */
+    * once per artifact (and, on a write, per range-bound sample) —
+    * then run each artifact's step concurrently ([[Par]]). */
   private def each(docs: DataFrame)(
       step: (IndexArtifact, DataFrame) => Unit): Unit = {
     val derived =

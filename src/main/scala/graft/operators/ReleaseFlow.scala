@@ -150,32 +150,34 @@ object ReleaseFlow {
     // screen drops them up front.
     val shard = shard0.filter(col("text").isNotNull)
     val addChars = !shard.columns.contains("n_chars")
-    // one eager gate pin ([[AdmissionPipeline.gatePin]]): decide()'s
-    // arms and the four appends below all project its pre-columns
-    val pinned = AdmissionPipeline.gatePin(shard)
-    val gates = AdmissionPipeline.Gates(
-      StreamingNearDup.readIndex(spark, neardupDir(base)),
-      // an empty LONG gram frame leaves the contaminated arm inert
-      // while keeping the decision chain's shape identical
-      screens.holdoutGrams.getOrElse(spark.emptyDataFrame
-        .select(lit(0L).as("gram")).limit(0)),
-      corpusSpans = Some(StreamingSubstring.fromPersisted(spark, substrDir(base))),
-      // the opt-in tier-1 winnow pre-gate: decision-identical either
-      // way (coverage holds by construction — see the object scaladoc
-      // and the [[Screens.tieredVerbatim]] pricing note)
-      corpusWinnow = if (screens.tieredVerbatim)
-        Some(WinnowIndex.read(spark, winnowDir(base))) else None,
-      classifier = screens.classifier,
-      exactHashes = Some(DedupIndex.read(spark, dedupDir(base)).select("h")),
-      docQuality = screens.docQuality)
+    // one gate pin ([[AdmissionPipeline.gatePin]]): decide()'s arms and
+    // the four appends below all project its pre-columns; the gates
+    // resolve and decide() plans while the pin's job runs
+    val decisionPlan = AdmissionPipeline.gatePin(shard) { pinned =>
+      val gates = AdmissionPipeline.Gates(
+        StreamingNearDup.readIndex(spark, neardupDir(base)),
+        // an empty LONG gram frame leaves the contaminated arm inert
+        // while keeping the decision chain's shape identical
+        screens.holdoutGrams.getOrElse(spark.emptyDataFrame
+          .select(lit(0L).as("gram")).limit(0)),
+        corpusSpans = Some(StreamingSubstring.fromPersisted(spark, substrDir(base))),
+        // the opt-in tier-1 winnow pre-gate: decision-identical either
+        // way (coverage holds by construction — see the object scaladoc
+        // and the [[Screens.tieredVerbatim]] pricing note)
+        corpusWinnow = if (screens.tieredVerbatim)
+          Some(WinnowIndex.read(spark, winnowDir(base))) else None,
+        classifier = screens.classifier,
+        exactHashes = Some(DedupIndex.read(spark, dedupDir(base)).select("h")),
+        docQuality = screens.docQuality)
+      AdmissionPipeline.decide(pinned, gates)
+    }
     // the admission step ([[IndexSet.admitDeferred]]): decisions pinned
     // BEFORE the appends mutate state — the pin still carries the
     // pre-tokens, so each builder projects its own columns for free —
     // then the four appends start NOW, the winnow append keeping the
     // tier's coverage invariant regardless of completion order; the
     // returned join is where "ALL artifacts landed" becomes true
-    val (decisions, joinAppends) =
-      indexes(base).admitDeferred(AdmissionPipeline.decide(pinned, gates))
+    val (decisions, joinAppends) = indexes(base).admitDeferred(decisionPlan)
     val decided = decisions.withColumnRenamed("reason", "decision")
       .drop((AdmissionPipeline.GatePreCols ++
         (if (addChars) Seq("n_chars") else Seq.empty[String])): _*)
@@ -296,9 +298,10 @@ object ReleaseFlow {
   }
 
   /** Compact all four artifacts — the maintenance op a release
-    * schedule runs every N shards: each append lands a new
-    * range-clustered file set beside the old ones, so after N releases
-    * footer min/max selectivity has decayed N-fold; this rewrite
+    * schedule runs every N shards: each append lands one key-sorted
+    * file beside the clustered ones, and its footer min/max span about
+    * the whole key domain, so after N releases a probe opens N files it
+    * cannot skip; this rewrite
     * restores each index's probe-keyed layout without touching a row
     * ([[Compaction]]'s contract — compact ≡ rebuild ≡ append-chain,
     * CompactionSpec pins it through a live release). Offline op, like

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{CleaningQueries, DedupIndex, IndexSet, LlmQueries,
-  SubstringIndex, WinnowIndex}
+  Par, SubstringIndex, WinnowIndex}
 
 /** Composed streaming ADMISSION pipeline — the ingest-side counterpart
   * of batch l29: every admission gate a training-data ingest runs at
@@ -144,20 +144,40 @@ object AdmissionPipeline {
       })
       .withColumn("n_chars", length(col("text")).cast("long"))
 
-  /** THE gate pin: one EAGER checkpoint of a batch plus every screen's
+  /** THE gate pin: one checkpoint of a batch plus every screen's
     * per-doc pre-computation (`n_chars` if absent, [[LlmQueries
     * .PreTokens]], then [[LlmQueries.withGatePre]]). [[decide]] reads
     * its batch from about seven arm subtrees, so an unpinned lineage (a
     * stateful dedup, a cure) re-runs per arm; on the pin the arms and
     * the four index appends project the computed columns (bit-identical
-    * to recomputing them). Eager, because AQE races a lazy pin's cache
-    * with parallel task waves (~10x the pin's CPU on r1's gate). Keeps
-    * every row — a null-text doc still lands `low_quality`. Drop
-    * [[GatePreCols]] before a frame lands. */
-  private[graft] def gatePin(df: DataFrame): DataFrame =
-    LlmQueries.withGatePre(withNChars(df)
+    * to recomputing them). Keeps every row — a null-text doc still
+    * lands `low_quality`. Drop [[GatePreCols]] before a frame lands.
+    *
+    * The pin's one job starts NOW, and `plan` gets the pinned frame on
+    * the calling thread WHILE that job runs: it resolves the gates and
+    * builds [[decide]], and gatePin builds the physical plan of its
+    * result — driver-only work (index listing, analysis, optimization)
+    * that would otherwise sit between the pin and decide's first job;
+    * the later action on the result reuses that plan. `plan` must run
+    * no job that reads the pinned frame: its result returns only once
+    * the pin has landed (also when `plan` throws), so every consumer's
+    * first job reads the materialized pin. That is the contract the
+    * eager pin existed for: AQE races an unmaterialized pin's cache
+    * with parallel task waves (~10x the pin's CPU on r1's gate). */
+  private[graft] def gatePin(df: DataFrame)(
+      plan: DataFrame => DataFrame): DataFrame = {
+    val pinned = LlmQueries.withGatePre(withNChars(df)
         .withColumn(LlmQueries.PreTokens, split(lower(col("text")), "\\s+")))
-      .localCheckpoint()
+      .localCheckpoint(eager = false)
+    // the one job an eager checkpoint runs inline: computing every
+    // partition caches it and truncates the lineage
+    val landed = Par.deferred(Seq(() => pinned.queryExecution.toRdd.count()))
+    Par.joinAfter(landed) {
+      val out = plan(pinned)
+      out.queryExecution.executedPlan
+      out
+    }
+  }
 
   private[graft] val GatePreCols = Seq(LlmQueries.PreTokens,
     LlmQueries.PreShs, LlmQueries.PreSig, LlmQueries.PreGrams,
@@ -353,7 +373,7 @@ object AdmissionPipeline {
       outDir: String, tsCol: String, delay: String,
       clean: Boolean = false): StreamingQuery =
     drive(deduped(stream, tsCol, delay, clean), outDir)(batch =>
-      (decide(gatePin(batch), gates), () => ()))
+      (gatePin(batch)(decide(_, gates)), () => ()))
 
   /** [[start]] with LIVE indexes: each microbatch re-resolves every
     * configured persisted index by PATH, and the batch's admitted docs
@@ -371,10 +391,13 @@ object AdmissionPipeline {
     * resolves once, at start.
     *
     * Per microbatch: one [[gatePin]] (the stateful dedup runs once),
-    * [[decide]] on it, then the admission step every release runs too
-    * ([[graft.operators.IndexSet.admitDeferred]]): the decisions are
-    * pinned, the appends start, and the decisions land while the
-    * appends run ([[drive]] joins them before the batch ends).
+    * with the gates re-resolved and [[decide]] built and planned while
+    * the pin's job runs, then the admission step every release runs
+    * too ([[graft.operators.IndexSet.admitDeferred]]): the decisions
+    * are pinned, the appends start — one job per artifact, each landing
+    * one key-sorted file ([[graft.operators.IndexArtifact]]) — and the
+    * decisions land while the appends run ([[drive]] joins them before
+    * the batch ends).
     *
     * Replay: decisions stay exactly-once via the batch-dir overwrite;
     * a failed append or decisions write fails the batch, which replays
@@ -440,25 +463,28 @@ object AdmissionPipeline {
     val evalSchema =
       evalVecsDir.map(StreamingSemanticDecontam.readIndex(spark, _).schema)
     drive(deduped(stream, tsCol, delay, clean), outDir) { batch =>
-      // all live indexes re-resolve by PATH per microbatch; the
-      // substring gate's screen set is a projection of the SAME
-      // persisted artifact batch l33 probes (SubstringIndex — the
-      // caller seeds it with the corpus, possibly recency-scoped,
-      // before start)
-      val gates = Gates(
-        StreamingNearDup.readIndex(spark, neardupIndexDir, Some(ndLike)),
-        holdoutGrams,
-        corpusSpans = substrIndexDir.map(d =>
-          StreamingSubstring.fromPersisted(spark, d, spanSchema)),
-        corpusWinnow = winnowDir.map(WinnowIndex.read(spark, _, winnowSchema)),
-        classifier = classifier,
-        exactHashes = exactHashDir.map(DedupIndex.read(spark, _, hashSchema)),
-        evalVecs = evalVecsDir.map(
-          StreamingSemanticDecontam.readIndex(spark, _, evalSchema)))
+      val decisions = gatePin(batch) { pinned =>
+        // all live indexes re-resolve by PATH per microbatch, while the
+        // pin runs; the substring gate's screen set is a projection of
+        // the SAME persisted artifact batch l33 probes (SubstringIndex
+        // — the caller seeds it with the corpus, possibly
+        // recency-scoped, before start)
+        val gates = Gates(
+          StreamingNearDup.readIndex(spark, neardupIndexDir, Some(ndLike)),
+          holdoutGrams,
+          corpusSpans = substrIndexDir.map(d =>
+            StreamingSubstring.fromPersisted(spark, d, spanSchema)),
+          corpusWinnow = winnowDir.map(WinnowIndex.read(spark, _, winnowSchema)),
+          classifier = classifier,
+          exactHashes = exactHashDir.map(DedupIndex.read(spark, _, hashSchema)),
+          evalVecs = evalVecsDir.map(
+            StreamingSemanticDecontam.readIndex(spark, _, evalSchema)))
+        decide(pinned, gates)
+      }
       // the pinned decisions keep the pre-columns, so the appends
       // project them; the span index keys on `lang`, which a stream
       // may not carry
-      indexes.admitDeferred(decide(gatePin(batch), gates), admitted =>
+      indexes.admitDeferred(decisions, admitted =>
         if (admitted.columns.contains("lang")) admitted
         else admitted.withColumn("lang", lit("und")))
     }
@@ -490,7 +516,7 @@ object AdmissionPipeline {
       .option("checkpointLocation", s"$outDir/_checkpoint")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val (decisions, join) = step(batch)
-        graft.operators.Par.joinAfter(join) {
+        Par.joinAfter(join) {
           decisions.drop(GatePreCols: _*).write.mode("overwrite")
             .partitionBy("reason")
             .parquet(s"$outDir/decisions/_batch_id=$batchId")

@@ -46,6 +46,10 @@ object PartitionedUpsert {
       .localCheckpoint(true) // one materialization feeds every bucket's merge
     val touched = withBucket.select("_b").distinct()
       .collect().map(_.getInt(0)).sorted.toIndexedSeq
+    // each bucket holds what its merge writes, so it is read with that
+    // schema (resolved on the driver, no per-bucket inference job)
+    val bucketSchema = Some(IngestPipeline.latestWins(None,
+      withBucket.drop("_b"), pk, tieBreak).schema)
     // Bucket merges are independent (disjoint key spaces, disjoint
     // directories), so they run as concurrent Spark jobs — the
     // scheduler interleaves their stages instead of serializing
@@ -54,7 +58,8 @@ object PartitionedUpsert {
     Par.run(touched.map { b => () =>
       val inc = withBucket.filter(col("_b") === b).drop("_b")
       val merged = IngestPipeline.latestWins(
-        IngestPipeline.existing(spark, bucketPath(path, b)), inc, pk, tieBreak)
+        IngestPipeline.existing(spark, bucketPath(path, b), bucketSchema),
+        inc, pk, tieBreak)
       IngestPipeline.swapWrite(spark, merged, bucketPath(path, b))
     })
     touched

@@ -1024,7 +1024,7 @@ class AdmissionPipelineSpec extends AnyFunSuite {
       3L -> "leaked the benchmark answer to question seven is forty two",
       4L -> novel("b4"),
       5L -> (longCorpusText.split(" ").take(16).mkString(" ") + " " +
-        novel("b5")))))
+        novel("b5")))))(identity)
     val sc = spark.sparkContext
     val group = s"decide-budget-${System.nanoTime()}"
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
@@ -1050,5 +1050,104 @@ class AdmissionPipelineSpec extends AnyFunSuite {
     assert(jobs.get() > 0)
     assert(jobs.get() <= Budget,
       s"${jobs.get()} Spark jobs for decide + pin on one pinned batch")
+  }
+
+  test("one startLive microbatch with all four live indexes stays within " +
+      "its Spark job budget") {
+    // The measured count: the pin, decide's jobs (planned while the pin
+    // runs), the decisions write, the near-dup derive pin, and one job
+    // per artifact append (one key-sorted file each, no range sampling
+    // and no shuffle).
+    val Budget = 19
+    val in = Files.createTempDirectory("graft_live_budget_in_").toString
+    val out = Files.createTempDirectory("graft_live_budget_out_").toString
+    jsonLines(in, "f1.json", Seq(
+      (41L, longCorpusText.split(" ").drop(1).mkString(" "), "10:00:00Z"),
+      (42L, longCorpusText, "10:00:01Z"),
+      (43L, "leaked the benchmark answer to question seven is forty two",
+        "10:00:02Z"),
+      (44L, novel("w4"), "10:00:03Z"),
+      (45L, longCorpusText.split(" ").take(16).mkString(" ") + " " +
+        novel("w5"), "10:00:04Z")))
+    val sc = spark.sparkContext
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(noData, "false")
+    val q = try startAll(in, out,
+      Files.createTempDirectory("graft_live_budget_ix_").toString)
+    finally spark.conf.unset(noData)
+    // every job of the query's data batch, on the stream thread and on
+    // the pin and append threads alike (they inherit its properties)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("sql.streaming.queryId") == q.id.toString &&
+              p.getProperty("streaming.sql.batchId") == "0"))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      q.processAllAvailable()
+      q.stop()
+    } finally {
+      org.apache.spark.graftbridge.ListenerBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    val got = spark.read.parquet(s"$out/decisions").select("doc_id", "reason")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got === Map(41L -> "near_duplicate", 42L -> "corpus_duplicate",
+      43L -> "contaminated", 44L -> "admit", 45L -> "verbatim_repeat"),
+      got.toString)
+    assert(jobs.get() > 0)
+    assert(jobs.get() <= Budget,
+      s"${jobs.get()} Spark jobs for one live microbatch")
+  }
+
+  test("gatePin computes each document's pre-columns once: decide is " +
+      "planned while the pin runs and its jobs and the appends read the " +
+      "landed pin") {
+    import graft.operators.{DedupIndex, IndexSet, ReleaseFlow, SubstringIndex,
+      WinnowIndex}
+    // counts evaluations of the doc text; nondeterministic, so the
+    // optimizer neither duplicates nor reorders it within one pass
+    val seen = spark.sparkContext.longAccumulator("gate_pin_computed")
+    val touch = udf { (t: String) => seen.add(1L); t }.asNondeterministic()
+    val base = Files.createTempDirectory("graft_pin_once_").toString
+    ReleaseFlow.init(corpus.withColumn("lang", lit("und")), base)
+    val docs = Seq(
+      1L -> longCorpusText.split(" ").drop(1).mkString(" "),
+      2L -> longCorpusText,
+      3L -> "leaked the benchmark answer to question seven is forty two",
+      4L -> novel("p4"),
+      5L -> novel("p5"))
+    // an RDD-backed, multi-partition batch like a stream's: a local
+    // relation's projection would be evaluated once while optimizing
+    val batch = {
+      import spark.implicits._
+      spark.sparkContext.parallelize(docs, 3).toDF("doc_id", "text")
+    }.withColumn("text", touch(col("text")))
+      .withColumn("n_chars", length(col("text")).cast("long"))
+      .withColumn("lang", lit("und"))
+    val live = IndexSet(DedupIndex -> ReleaseFlow.dedupDir(base),
+      StreamingNearDup -> ReleaseFlow.neardupDir(base),
+      SubstringIndex -> ReleaseFlow.substrDir(base),
+      WinnowIndex -> ReleaseFlow.winnowDir(base))
+    val decisions = AdmissionPipeline.gatePin(batch) { pinned =>
+      val g = gates.copy(
+        neardup = StreamingNearDup.readIndex(spark, ReleaseFlow.neardupDir(base)),
+        corpusSpans = Some(StreamingSubstring.fromPersisted(spark,
+          ReleaseFlow.substrDir(base))),
+        exactHashes = Some(DedupIndex.read(spark, ReleaseFlow.dedupDir(base))))
+      AdmissionPipeline.decide(pinned, g)
+    }
+    assert(seen.value === docs.size.toLong, "the pin has landed on return")
+    val (pinnedDecisions, join) = live.admitDeferred(decisions)
+    join()
+    val got = pinnedDecisions.select("doc_id", "reason").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got === Map(1L -> "near_duplicate", 2L -> "corpus_duplicate",
+      3L -> "contaminated", 4L -> "admit", 5L -> "admit"), got.toString)
+    assert(seen.value === docs.size.toLong,
+      "decide's arms and the appends must read the pin, not recompute it")
   }
 }

@@ -314,9 +314,28 @@ class StreamingIngestSpec extends AnyFunSuite {
   private lazy val productSchema = Generator.products(spark, 1, seed = 31).schema
 
   private def ingest(sinks: IngestPipeline.Sinks, batch: org.apache.spark.sql.DataFrame,
-      batchId: Long): Unit =
+      batchId: Long, normalizedBuckets: Option[Int] = None): Unit =
     IngestPipeline.processBatch(batch, batchId, sinks, productSchema, "product_id",
-      "created_at", Validation.productRules)
+      "created_at", Validation.productRules, normalizedBuckets = normalizedBuckets)
+
+  /** The Spark jobs `body` runs on this thread and the threads it starts. */
+  private def jobsOf(label: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"$label-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, label)
+      try body finally sc.clearJobGroup()
+      org.apache.spark.graftbridge.ListenerBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get()
+  }
 
   test("a crash between the raw and rejects appends is recovered on replay") {
     val base = tmp()
@@ -373,23 +392,31 @@ class StreamingIngestSpec extends AnyFunSuite {
     ingest(sinks, productBatch(40, seed = 75, offsetBase = 0), 0)
     val second = productBatch(40, seed = 77, offsetBase = 1000)
 
-    val sc = spark.sparkContext
-    val group = s"ingest-budget-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "one fresh ingest microbatch")
-      try ingest(sinks, second, 1) finally sc.clearJobGroup()
-      org.apache.spark.graftbridge.ListenerBus.drain(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get() > 0)
-    assert(jobs.get() <= Budget, s"${jobs.get()} Spark jobs for one fresh microbatch")
+    val jobs = jobsOf("ingest-budget")(ingest(sinks, second, 1))
+    assert(jobs > 0)
+    assert(jobs <= Budget, s"$jobs Spark jobs for one fresh microbatch")
     assert(spark.read.parquet(sinks.raw).count() === 80)
+  }
+
+  test("a fresh bucketed microbatch stays within its Spark job budget") {
+    // the whole-table budget's shape, with the normalized upsert per
+    // touched bucket: merge shuffle stage, write (2) — each bucket is
+    // read with the schema its merge writes, so no inference job
+    val Buckets = 4
+    val Budget = 18
+    val base = tmp()
+    val sinks = IngestPipeline.Sinks(s"$base/raw", s"$base/norm", s"$base/rej",
+      s"$base/stats", s"$base/ckpt")
+    ingest(sinks, productBatch(40, seed = 75, offsetBase = 0), 0, Some(Buckets))
+    val second = productBatch(40, seed = 77, offsetBase = 1000)
+
+    val jobs = jobsOf("bucketed-ingest-budget")(
+      ingest(sinks, second, 1, Some(Buckets)))
+    assert(jobs > 0)
+    assert(jobs <= Budget, s"$jobs Spark jobs for one fresh bucketed microbatch")
+    val norm = graft.streaming.PartitionedUpsert.readAll(spark, sinks.normalized,
+      Buckets).get
+    assert(norm.count() === norm.select("product_id").distinct().count())
   }
 
   test("a batch mixing replayed and fresh offsets lands exactly the fresh rows") {

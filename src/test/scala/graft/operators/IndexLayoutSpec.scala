@@ -10,6 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * lifecycle: after the release flows' init and again after their
   * compaction, each range-clustered artifact's live files cover
   * pairwise-disjoint key ranges, and each LSH band lives in one file.
+  * An append lands one key-sorted file per artifact, and compaction
+  * restores the range layout over the append chain.
   * The corpus is multi-partition with doc_ids interleaved across
   * partitions, so a layout that only sorts within the input partitions
   * shows as overlapping files. */
@@ -77,6 +79,53 @@ class IndexLayoutSpec extends AnyFunSuite {
       check()
       ReleaseFlow.compact(spark, base)
       check()
+    }
+  }
+
+  test("ReleaseFlow: each append lands one key-sorted file per artifact; " +
+      "compact restores the range layout and the rows equal a rebuild") {
+    def docs(offset: Long) = ids.select((col("doc_id") + offset).as("doc_id"),
+      lit("en").as("lang"),
+      expr("concat_ws(' ', transform(sequence(1, 40), " +
+        "i -> concat('w', (doc_id * 7 + i * 13) % 97)))").as("text"))
+    val artifacts = Seq(
+      (ReleaseFlow.dedupDir _, "content_hashes", Seq("h")),
+      (ReleaseFlow.neardupDir _, "sketch", Seq("doc_id")),
+      (ReleaseFlow.neardupDir _, "bands", Seq("band_id", "bkey")),
+      (ReleaseFlow.substrDir _, "span_grams", Seq("gram")),
+      (ReleaseFlow.winnowDir _, "winnow_fp_v2", Seq("h")))
+    def rows(base: String): Seq[Seq[String]] = artifacts.map { case (d, sub, _) =>
+      Compaction.readLive(spark, s"${d(base)}/$sub").collect()
+        .map(_.toString).sorted.toSeq
+    }
+    val base = tmp("graft_layout_append_")
+    multiFile {
+      ReleaseFlow.init(docs(0L), base)
+      for (offset <- Seq(1000L, 2000L)) {
+        val before = artifacts.map { case (d, sub, _) =>
+          Compaction.liveFilesRelative(spark, s"${d(base)}/$sub").toSet }
+        ReleaseFlow.indexes(base).appendDeferred(docs(offset))()
+        artifacts.zip(before).foreach { case ((d, sub, keys), old) =>
+          val dir = s"${d(base)}/$sub"
+          val added = Compaction.liveFilesRelative(spark, dir).filterNot(old)
+          assert(added.size === 1, s"$dir: files landed by one append: $added")
+          val file = spark.read.parquet(s"$dir/${added.head}")
+            .select(keys.map(col): _*)
+          assert(file.collect().toSeq ===
+            file.orderBy(keys.map(col): _*).collect().toSeq,
+            s"$dir: the appended file is not sorted by ${keys.mkString(", ")}")
+        }
+      }
+      ReleaseFlow.compact(spark, base)
+      artifacts.foreach { case (d, sub, keys) =>
+        assertRangeDisjoint(s"${d(base)}/$sub", keys: _*)
+      }
+      val rebuilt = tmp("graft_layout_rebuilt_")
+      ReleaseFlow.init(docs(0L).unionByName(docs(1000L)).unionByName(docs(2000L)),
+        rebuilt)
+      rows(base).zip(rows(rebuilt)).zip(artifacts).foreach {
+        case ((live, re), (_, sub, _)) => assert(live === re, sub)
+      }
     }
   }
 
