@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.streaming.{AdmissionPipeline, StreamingDecontam, StreamingNearDup, StreamingSubstring}
-import graft.operators.{DedupIndex, LlmQueries, ReleaseFlow, WinnowIndex}
+import graft.streaming.{AdmissionPipeline, StreamingNearDup, StreamingSubstring}
+import graft.operators.{DedupIndex, LlmQueries, ReleaseFlow}
 
 /** Per-arm cost profile of the gate ladder's decide() — the round-19
   * measure-first companion to [[PlanDecide]]: the lifecycle gates'
@@ -33,7 +33,6 @@ object BenchDecide {
       corpus.withColumn("doc_id", col("doc_id") + lit(10000000L)))(identity)
     val neardup = StreamingNearDup.readIndex(spark, ReleaseFlow.neardupDir(base))
     val spans = StreamingSubstring.fromPersisted(spark, ReleaseFlow.substrDir(base))
-    val winnow = WinnowIndex.read(spark, ReleaseFlow.winnowDir(base))
     val hashes = DedupIndex.read(spark, ReleaseFlow.dedupDir(base)).select("h")
     val gates = AdmissionPipeline.Gates(neardup,
       spark.emptyDataFrame.select(lit(0L).as("gram")).limit(0),
@@ -50,10 +49,6 @@ object BenchDecide {
 
     val batchOwned = shard.select(col("doc_id").as("corpus_id")).distinct()
     minOf("full_decide") { AdmissionPipeline.decide(shard, gates) }
-    minOf("arm_neardup_stream_form") {
-      StreamingNearDup.screenRaw(shard, neardup, keep = Nil)
-        .join(batchOwned, Seq("corpus_id"), "left_anti")
-    }
     minOf("arm_neardup_batch_form") {
       StreamingNearDup.screenBatch(shard, neardup, keep = Nil)
         .join(batchOwned, Seq("corpus_id"), "left_anti")
@@ -61,10 +56,6 @@ object BenchDecide {
     minOf("arm_span_exact") {
       StreamingSubstring.screenRaw(shard, spans,
         excludeOwners = Some(batchOwned))
-    }
-    minOf("arm_span_tiered") {
-      StreamingSubstring.screenRaw(shard, spans,
-        excludeOwners = Some(batchOwned), winnow = Some(winnow))
     }
     // sub-parts of the near-dup arm: where inside the screen the time is
     minOf("nd_docSketch") { LlmQueries.docSketch(shard) }

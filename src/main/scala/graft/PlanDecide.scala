@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.streaming.{AdmissionPipeline, StreamingNearDup, StreamingSubstring}
-import graft.operators.{DedupIndex, ReleaseFlow, WinnowIndex}
+import graft.operators.{DedupIndex, ReleaseFlow}
 
 /** Dump the physical plan of the gate ladder's DECISION frame — the
   * round-19 plan-evidence companion to [[PlanDump]]. Every lifecycle
@@ -14,12 +14,11 @@ import graft.operators.{DedupIndex, ReleaseFlow, WinnowIndex}
   * builds (same gates, same shard pin, pre-tokens included), and
   * explains it WITHOUT executing it through a sink.
   *
-  * Usage: runMain graft.PlanDecide <outFile> [tiered]
+  * Usage: runMain graft.PlanDecide <outFile>
   */
 object PlanDecide {
   def main(args: Array[String]): Unit = {
-    val out = args.headOption.getOrElse("plans/r19/decide_screens_after.txt")
-    val tiered = args.lift(1).contains("tiered")
+    val out = args.headOption.getOrElse("plans/r20/decide_screens.txt")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.get()
     val base = java.nio.file.Files
@@ -36,8 +35,6 @@ object PlanDecide {
       spark.emptyDataFrame.select(lit(0L).as("gram")).limit(0),
       corpusSpans = Some(
         StreamingSubstring.fromPersisted(spark, ReleaseFlow.substrDir(base))),
-      corpusWinnow = if (tiered)
-        Some(WinnowIndex.read(spark, ReleaseFlow.winnowDir(base))) else None,
       exactHashes = Some(
         DedupIndex.read(spark, ReleaseFlow.dedupDir(base)).select("h")))
     val decided = AdmissionPipeline.decide(shard, gates)

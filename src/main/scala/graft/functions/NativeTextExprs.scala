@@ -207,9 +207,9 @@ object TopGramStats {
   * position — O(tokens × k) bytes of allocation + copy per document;
   * this is O(tokens) copy + O(tokens × k) pure hashing, no per-gram
   * garbage. It is the shared gram-hash kernel of the release gates'
-  * pre-computed pin columns (sketch shingles k=3, winnow grams k=5,
-  * span grams k=15 — [[graft.operators.LlmQueries.withGatePre]]) and of
-  * every hashed gram frame builder.
+  * pre-computed pin columns (sketch shingles k=3, span grams k=15 —
+  * [[graft.operators.LlmQueries.withGatePre]]) and of every hashed gram
+  * frame builder.
   *
   * Returns NULL when the doc has fewer than k tokens — exactly the rows
   * the HOF form's `size(ta) >= k` guards drop — and null-poisons on a

@@ -780,10 +780,10 @@ object AuditQueries {
     * and the only non-doc-grain work is the selected-fingerprint
     * explode feeding the cross-doc shared-hash agg. The
     * 2²⁰ position packing bounds docs at 1M tokens — the catalog's
-    * standing okey encoding (l65). At 100 TB the fingerprint frame is
-    * the PERSISTED artifact (2/(w+1) the size of l33's index); the
-    * md5-prefix hash here is the oracle-portable stand-in for
-    * xxhash64 (the production key, same as [[SubstringIndex]]). */
+    * standing okey encoding (l65). The fingerprint frame is 2/(w+1)
+    * the size of l33's every-position index; the md5-prefix hash here
+    * is the oracle-portable stand-in for xxhash64 (the production key,
+    * same as [[SubstringIndex]]). */
   /** The winnowing SELECTION — one row per window start with its
     * selected `minkey` (h·2²⁰ + 2²⁰−1−pos of the window's minimum,
     * rightmost on ties). ROW-LOCAL by construction: winnowing is a
@@ -801,61 +801,22 @@ object AuditQueries {
     * with its full `minkeys` array — the shape every consumer derives
     * from row-locally (window counts, per-doc distinct fingerprints)
     * so a checkpoint of it is document-count-sized, never gram-sized. */
-  /** `hashed = false` (l74's DQ form) keys windows on the md5 32-bit
-    * prefix — the oracle-portable stand-in, exactly replayable in
-    * DuckDB. `hashed = true` (the [[WinnowIndex]] PRODUCTION form, the
-    * same split as [[SamplingQueries.docGramsK]]/[[SubstringIndex]])
-    * keys on xxhash64 masked to 43 bits: the winnowing guarantee is
-    * HASH-AGNOSTIC (it needs only a deterministic total order on
-    * (gram hash, position)), the mask keeps the h·2²⁰ position packing
-    * inside a non-negative long, and the codegen'd hash is ~3× cheaper
-    * than md5-hex-parse — which is the tier-1 cost a screen pays on
-    * every shard doc. */
-  private[graft] def winnowArrays(corpus: DataFrame,
-      keyCols: Seq[String] = Seq("lang", "doc_id"),
-      hashed: Boolean = false): DataFrame = {
-    // production keys route through the native gram-hash kernel (same
-    // masked xxhash64 values — graft_gram_hash64 is byte-identical to
-    // the concat_ws form); the md5 stand-in stays the oracle-replayed
-    // l74 arm, its gram STRINGS built by graft_grams (identical bytes
-    // in, identical md5 out — only the per-gram concat allocation goes)
+  /** Windows key on the md5 32-bit prefix — the oracle-portable form,
+    * exactly replayable in DuckDB. */
+  private[graft] def winnowArrays(corpus: DataFrame): DataFrame = {
+    // gram STRINGS built by graft_grams (identical bytes in, identical
+    // md5 out — only the per-gram concat allocation goes)
     graft.functions.NativeTextExprs.ensureRegistered(corpus.sparkSession)
-    val keysExpr =
-      if (hashed)
-        s"transform(graft_gram_hash64(ta, $WinnowK), (h, i) -> " +
-          "(h & 8796093022207L) * 1048576L + (1048575L - i))"
-      else
-        s"transform(graft_grams(ta, $WinnowK), (g, i) -> " +
-          "cast(conv(substring(md5(g), 1, 8), 16, 10) as bigint) " +
-          "* 1048576L + (1048575L - i))"
     corpus.filter(col("text").isNotNull)
       .withColumn("ta", LlmQueries.tokensOf(corpus))
       .filter(size(col("ta")) >= WinnowK + WinnowW - 1)
-      .withColumn("keys", expr(keysExpr))
-      .select(keyCols.map(col) :+ expr(
+      .withColumn("keys", expr(
+        s"transform(graft_grams(ta, $WinnowK), (g, i) -> " +
+          "cast(conv(substring(md5(g), 1, 8), 16, 10) as bigint) " +
+          "* 1048576L + (1048575L - i))"))
+      .select(col("lang"), col("doc_id"), expr(
         s"transform(sequence(0, size(keys) - $WinnowW), s -> " +
-          s"array_min(slice(keys, s + 1, $WinnowW)))").as("minkeys"): _*)
-  }
-
-  /** Per-doc DISTINCT winnow fingerprint hashes (production xxhash64
-    * keys) as ONE array column `out` over a pre-tokenized column — the
-    * winnow family's member of the gate pin's compute-once columns
-    * ([[LlmQueries.withGatePre]]): [[WinnowIndex]]'s build (tier-1
-    * screen AND index append) projects it instead of re-running the
-    * gram-hash + window-min chain per consumer. Same keys, same masks,
-    * same window arithmetic as [[winnowArrays]]`(hashed = true)`; null
-    * where that form's `size(ta) >= k + w - 1` filter drops the doc. */
-  private[graft] def winnowDocHashes(df: DataFrame, toks: String,
-      out: String): DataFrame = {
-    graft.functions.NativeTextExprs.ensureRegistered(df.sparkSession)
-    df.withColumn("_wk_pre", when(size(col(toks)) >= WinnowK + WinnowW - 1,
-        expr(s"transform(graft_gram_hash64($toks, $WinnowK), (h, i) -> " +
-          "(h & 8796093022207L) * 1048576L + (1048575L - i))")))
-      .withColumn(out, when(col("_wk_pre").isNotNull, expr(
-        s"array_distinct(transform(transform(sequence(0, size(_wk_pre) - " +
-          s"$WinnowW), s -> array_min(slice(_wk_pre, s + 1, $WinnowW))), " +
-          "k -> k div 1048576))")))
-      .drop("_wk_pre")
+          s"array_min(slice(keys, s + 1, $WinnowW)))").as("minkeys"))
   }
 
   private[graft] def winnowSelect(corpus: DataFrame): DataFrame =

@@ -7,10 +7,11 @@ import org.apache.spark.sql.types.StructType
 
 /** Artifact COMPACTION — the maintenance half of the index family's
   * append contract. Every release appends new parquet files to the
-  * persisted indexes ([[ReleaseFlow.release]] → four appends per
-  * shard); append-≡-rebuild holds semantically at any append count,
-  * but the PHYSICAL layout decays: after N releases each index is its
-  * clustered files plus N appended key-sorted ones, each of whose
+  * persisted indexes ([[ReleaseFlow.release]] → one append per
+  * artifact per shard); append-≡-rebuild holds semantically at any
+  * append count, but the PHYSICAL layout decays: after N releases
+  * each index is its clustered files plus N appended key-sorted ones,
+  * each of whose
   * footer min/max spans about the whole key domain, so a key-ranged
   * probe opens every appended file (it loses the selectivity the
   * range clustering was built for — see [[IndexArtifact]]'s layout

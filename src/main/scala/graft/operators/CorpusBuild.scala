@@ -106,7 +106,7 @@ object CorpusBuild {
         lit("cleanse").as("stage"), lit("cleaned_out").as("outcome"))
     val survivorsIn = staged.filter(col("text").isNotNull)
     // deferred-append release (guide §2.6 one level up): the gate
-    // ladder's four artifact appends run CONCURRENTLY with the
+    // ladder's artifact appends run CONCURRENTLY with the
     // curation/sampling stages below, which read only the eagerly
     // checkpointed decision frame — never the artifacts. The join
     // before Result keeps build's contract ("appends the admitted

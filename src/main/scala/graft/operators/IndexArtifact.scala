@@ -102,6 +102,10 @@ trait DocIndex {
   /** The per-doc frame every artifact's rows derive from. */
   protected def derive(docs: DataFrame): DataFrame
 
+  /** Whether [[derive]] computes per-doc work on `docs` (a sketch, a
+    * signature) rather than projecting columns `docs` already carries. */
+  protected def derives(docs: DataFrame): Boolean = true
+
   /** Each artifact with its rows as a function of [[derive]]'s frame. */
   protected def parts: Seq[(IndexArtifact, DataFrame => DataFrame)]
 
@@ -114,14 +118,16 @@ trait DocIndex {
   def append(docs: DataFrame, base: String): Unit =
     each(docs)(_.append(_, base))
 
-  /** Derive once — pinned eagerly when several artifacts read it, so
-    * the per-doc work (a sketch, a signature) runs once rather than
-    * once per artifact (and, on a write, per range-bound sample) —
-    * then run each artifact's step concurrently ([[Par]]). */
+  /** Derive once — pinned eagerly when several artifacts read it and
+    * [[derives]] holds, so the per-doc work (a sketch, a signature)
+    * runs once rather than once per artifact (and, on a write, per
+    * range-bound sample); a projection of pinned columns is not pinned
+    * again — then run each artifact's step concurrently ([[Par]]). */
   private def each(docs: DataFrame)(
       step: (IndexArtifact, DataFrame) => Unit): Unit = {
     val derived =
-      if (parts.size > 1) derive(docs).localCheckpoint() else derive(docs)
+      if (parts.size > 1 && derives(docs)) derive(docs).localCheckpoint()
+      else derive(docs)
     Par.run(parts.map { case (a, rows) => () => step(a, rows(derived)) })
   }
 

@@ -41,9 +41,9 @@ object LlmQueries {
     * checkpoint) lets every tokenizing helper reuse it instead of
     * re-running the regex split per consumer. [[graft.operators
     * .ReleaseFlow.releaseDeferred]] pins it on the shard: decide()'s
-    * screen arms (sketch, grams, winnow, stop-word stats) and the four
-    * artifact appends each read the same token arrays from the
-    * checkpoint — one split instead of seven. The column name is
+    * screen arms (sketch, grams, stop-word stats) and the three
+    * indexes' appends each read the same token arrays from the
+    * checkpoint — one split instead of six. The column name is
     * reserved (leading underscore, never a data column), and the value
     * is BY CONSTRUCTION the same expression the helpers would compute,
     * so reuse is bit-identical. */
@@ -429,7 +429,7 @@ object LlmQueries {
     // per release before this). Bit-identical by construction:
     // [[withSketchPre]] builds the same expressions, nulled exactly
     // where this branch's size(toks) >= 3 filter drops.
-    if (dd.columns.contains(PreShs) && dd.columns.contains(PreSig))
+    if (carriesSketch(dd))
       dd.filter(col(PreShs).isNotNull)
         .select(Seq(col("doc_id"), col(PreShs).as("shs")) ++ keep.map(col) ++
           Seq(size(col(PreShs)).cast("long").as("n_sh"),
@@ -454,25 +454,23 @@ object LlmQueries {
   private[graft] val PreShs = "_shs_pre"
   private[graft] val PreSig = "_sig_pre"
 
+  private[graft] def carriesSketch(df: DataFrame): Boolean =
+    df.columns.contains(PreShs) && df.columns.contains(PreSig)
+
   /** Reserved positional SpanK-gram-hash array ([[SamplingQueries
-    * .spanGramHashes]]) and per-doc distinct winnow fingerprint array
-    * ([[AuditQueries.winnowDocHashes]]) — the remaining two compute-
-    * heavy per-doc derivations the release gates re-ran per consumer. */
+    * .spanGramHashes]]) — the remaining compute-heavy per-doc
+    * derivation the release gates re-ran per consumer. */
   private[graft] val PreGrams = "_grams_pre"
-  private[graft] val PreWinnow = "_winnow_pre"
 
   /** The full gate-pin pre-computation: [[withSketchPre]] plus the
-    * span-gram and winnow arrays. One pinned materialization then
-    * serves the near-dup screen (bands + verify), the verbatim screen
-    * (tiered or exact), and three of the four artifact appends
-    * (neardup sketch/bands, substring positional grams, winnow
-    * fingerprints) — each consumer a projection of the checkpoint
-    * instead of its own gram/shingle pass. */
+    * span-gram array. One pinned materialization then serves the
+    * near-dup screen (bands + verify), the verbatim screen, and the
+    * neardup sketch/bands and substring positional-gram appends — each
+    * consumer a projection of the checkpoint instead of its own
+    * gram/shingle pass. */
   private[graft] def withGatePre(df: DataFrame): DataFrame =
-    AuditQueries.winnowDocHashes(
-      withSketchPre(df)
-        .withColumn(PreGrams, SamplingQueries.spanGramHashes(PreTokens)),
-      PreTokens, PreWinnow)
+    withSketchPre(df)
+      .withColumn(PreGrams, SamplingQueries.spanGramHashes(PreTokens))
 
   /** Append [[PreShs]]/[[PreSig]] — the same expressions [[docSketch]]
     * computes (same shingle hashing, same native signature), nulled

@@ -7,7 +7,7 @@ import graft.streaming.{AdmissionPipeline, StreamingNearDup, StreamingSubstring}
 
 /** One corpus RELEASE, end-to-end, over the persisted index artifacts —
   * the composition the whole index family exists for, as a callable
-  * instead of a runbook. A release pipeline holds four standing
+  * instead of a runbook. A release pipeline holds three standing
   * artifacts per corpus version (each with its own build/probe/append
   * split, all spec-pinned append ≡ rebuild):
   *
@@ -15,21 +15,8 @@ import graft.streaming.{AdmissionPipeline, StreamingNearDup, StreamingSubstring}
   *  - the MinHash band index ([[StreamingNearDup]]'s persisted form —
   *    l9/L18/l49's probe side),
   *  - the substring span-gram index ([[SubstringIndex]] — l33's probe
-  *    side and the streaming verbatim gate's source),
-  *  - the winnowing-fingerprint index ([[WinnowIndex]] — l74's
-  *    persisted form, the verbatim arm's opt-in TIER-1 screen
-  *    ([[Screens.tieredVerbatim]]): only shard docs sharing a selected
-  *    fingerprint with the corpus pay the 15-gram explode and the
-  *    span-index probe, decision-identically by the k+w−1 guarantee —
-  *    a measured cost knob, ON for the index-bigger-than-cache regime,
-  *    OFF (the default, per BENCH_NOTES' pricing) when both artifacts
-  *    are page-cached). Because init builds it from the same
-  *    corpus as the span index and every release appends the same
-  *    admitted slice to both, the tier's COVERAGE invariant — the
-  *    winnow artifact covers every doc the span index holds — is true
-  *    by construction here (see [[graft.streaming.AdmissionPipeline
-  *    .Gates.corpusWinnow]] for the caller-managed case), whichever
-  *    way the knob points.
+  *    side and the streaming verbatim gate's source; the verbatim arm
+  *    probes it exactly, one span-gram join per shard).
   *
   * [[release]] labels every shard row by CALLING the streaming
   * pipeline's own decision function ([[AdmissionPipeline.decide]]) over
@@ -67,23 +54,24 @@ object ReleaseFlow {
   def dedupDir(base: String): String   = s"$base/dedup"
   def neardupDir(base: String): String = s"$base/neardup"
   def substrDir(base: String): String  = s"$base/substr"
+
+  /** No-op: no artifact is written or read here; kept so older callers compile. */
   def winnowDir(base: String): String  = s"$base/winnow"
 
-  /** The release's four indexes, each under its own dir — THE artifact
+  /** The release's three indexes, each under its own dir — THE artifact
     * list: init, the release appends, [[compact]] and [[retract]] all
     * iterate it, so it is the one place that knows every artifact a
     * release writes. */
   private[operators] def indexes(base: String): IndexSet =
     IndexSet(DedupIndex -> dedupDir(base),
       StreamingNearDup -> neardupDir(base),
-      SubstringIndex -> substrDir(base),
-      WinnowIndex -> winnowDir(base))
+      SubstringIndex -> substrDir(base))
 
   /** Initialize the artifact set from the first corpus version.
-    * `corpus` must carry (lang, doc_id, text). The four builds are
+    * `corpus` must carry (lang, doc_id, text). The three builds are
     * independent single-writer jobs over disjoint directories — they
     * run concurrently ([[Par]], guide §2.6) so wall clock is the
-    * slowest build, not the sum of four. */
+    * slowest build, not the sum of three. */
   def init(corpus: DataFrame, base: String): Unit =
     indexes(base).write(corpus)
 
@@ -99,24 +87,7 @@ object ReleaseFlow {
       /** Opt-in Gopher doc-quality ladder (l69's rules) — the same
         * flag as [[AdmissionPipeline.Gates.docQuality]], so a corpus
         * ingested under the ladder releases under it too. */
-      docQuality: Boolean = false,
-      /** Probe the verbatim arm (and [[releaseCut]]'s cure) through
-        * the winnow TIER instead of the exact span probe directly.
-        * Decision- and cut-IDENTICAL either way (the k+w−1 coverage
-        * guarantee; ReleaseFlowSpec pins both modes), so this is a
-        * measured COST knob, not semantics: the tier wins when the
-        * span index dwarfs the page cache (the index-side 100 TB
-        * regime it was built for — the quiet majority of a shard then
-        * stops at the 2/(w+1)-sized fingerprint artifact instead of
-        * probing the big index), and LOSES ~1.1–1.5× when both
-        * artifacts are page-cached (BENCH_NOTES round 14's
-        * measurement: "deployments at THIS scale should run the exact
-        * probe directly"). Default follows that guidance — exact
-        * probe; flip it on when the span index outgrows memory. The
-        * winnow ARTIFACT is initialized and appended regardless, so
-        * the coverage invariant stays true and the knob can change
-        * per release call. */
-      tieredVerbatim: Boolean = false)
+      docQuality: Boolean = false)
 
   /** Screen `shard` (lang, doc_id, text) against the persisted
     * artifacts, append the admitted slice to each, return the labeled
@@ -151,7 +122,7 @@ object ReleaseFlow {
     val shard = shard0.filter(col("text").isNotNull)
     val addChars = !shard.columns.contains("n_chars")
     // one gate pin ([[AdmissionPipeline.gatePin]]): decide()'s arms and
-    // the four appends below all project its pre-columns; the gates
+    // the appends below all project its pre-columns; the gates
     // resolve and decide() plans while the pin's job runs
     val decisionPlan = AdmissionPipeline.gatePin(shard) { pinned =>
       val gates = AdmissionPipeline.Gates(
@@ -161,11 +132,6 @@ object ReleaseFlow {
         screens.holdoutGrams.getOrElse(spark.emptyDataFrame
           .select(lit(0L).as("gram")).limit(0)),
         corpusSpans = Some(StreamingSubstring.fromPersisted(spark, substrDir(base))),
-        // the opt-in tier-1 winnow pre-gate: decision-identical either
-        // way (coverage holds by construction — see the object scaladoc
-        // and the [[Screens.tieredVerbatim]] pricing note)
-        corpusWinnow = if (screens.tieredVerbatim)
-          Some(WinnowIndex.read(spark, winnowDir(base))) else None,
         classifier = screens.classifier,
         exactHashes = Some(DedupIndex.read(spark, dedupDir(base)).select("h")),
         docQuality = screens.docQuality)
@@ -174,9 +140,8 @@ object ReleaseFlow {
     // the admission step ([[IndexSet.admitDeferred]]): decisions pinned
     // BEFORE the appends mutate state — the pin still carries the
     // pre-tokens, so each builder projects its own columns for free —
-    // then the four appends start NOW, the winnow append keeping the
-    // tier's coverage invariant regardless of completion order; the
-    // returned join is where "ALL artifacts landed" becomes true
+    // then the three appends start NOW; the returned join is where "ALL
+    // artifacts landed" becomes true
     val (decisions, joinAppends) = indexes(base).admitDeferred(decisionPlan)
     val decided = decisions.withColumnRenamed("reason", "decision")
       .drop((AdmissionPipeline.GatePreCols ++
@@ -216,16 +181,7 @@ object ReleaseFlow {
     *
     * Scale shape: one extra shard-side tokenize + hash and a
     * distinct-gram projection scan of the persisted index on top of
-    * [[release]]'s own probes — the corpus never reshuffles. With
-    * [[Screens.tieredVerbatim]] on, the cut probe runs TIERED
-    * ([[SubstringIndex.spansAgainstTiered]]'s shape): a winnow screen
-    * against the 2/(w+1)-sized fingerprint artifact picks the
-    * candidate docs, and only those pay the 15-gram explode and the
-    * span-index probe — cut-identical, because any doc with a
-    * [[SamplingQueries.SpanK]]-token indexed span shares a
-    * ≥ k+w−1-token run with that span's owner (15 ≥ 8) and is
-    * therefore winnow-flagged. Default is the exact probe (the knob's
-    * pricing note). */
+    * [[release]]'s own probes — the corpus never reshuffles. */
   def releaseCut(spark: SparkSession, shard0: DataFrame, base: String,
       screens: Screens = Screens()): DataFrame = {
     val (decided, joinAppends) =
@@ -241,48 +197,28 @@ object ReleaseFlow {
       shard0: DataFrame, base: String,
       screens: Screens = Screens()): (DataFrame, () => Unit) = {
     // same shard-pinning argument as [[release]], needed HERE as well
-    // because the cure path walks the shard three more times (hash
-    // exemption, winnow screen, cut) before release() ever sees it —
-    // r2's gate measured ~38 s from the unpinned composite. Pre-tokens
-    // ride in this pin too (winnow screen + span cut reuse them);
-    // releaseDeferred RE-tokenizes the cured text below, so a cut doc
-    // never screens against its stale pre-cure tokens.
-    // the cut pin carries exactly the pre-computations ITS consumers
-    // project — tokens (cut application), positional span-gram hashes
-    // (the cut probe), and the winnow fingerprints only under the
-    // tiered knob — never the MinHash sketch (no screen runs here; the
-    // decision pin inside releaseDeferred carries that). The cured
-    // text re-pins through releaseDeferred, which OVERWRITES every
-    // pre-column from the fresh tokens — a cut doc never screens
-    // against its stale pre-cure derivations (the standing contract).
-    val pinBase = shard0.filter(col("text").isNotNull)
+    // because the cure path walks the shard twice more (hash exemption,
+    // cut) before release() ever sees it — r2's gate measured ~38 s
+    // from the unpinned composite; eager for the same concurrent-
+    // recompute reason as the decision pin. The cut pin carries exactly
+    // the pre-computations ITS consumers project — tokens (cut
+    // application) and positional span-gram hashes (the cut probe) —
+    // never the MinHash sketch (no screen runs here; the decision pin
+    // inside releaseDeferred carries that). The cured text re-pins
+    // through releaseDeferred, which OVERWRITES every pre-column from
+    // the fresh tokens — a cut doc never screens against its stale
+    // pre-cure derivations (the standing contract).
+    val shard = shard0.filter(col("text").isNotNull)
       .withColumn(LlmQueries.PreTokens, split(lower(col("text")), "\\s+"))
       .withColumn(LlmQueries.PreGrams,
         SamplingQueries.spanGramHashes(LlmQueries.PreTokens))
-    // eager for the same concurrent-recompute reason as the decision
-    // pin: the cure chain's arms (hash exemption, winnow screen, cut
-    // probe, the no-op-cure re-join) race through this frame
-    val shard =
-      (if (screens.tieredVerbatim)
-        AuditQueries.winnowDocHashes(pinBase, LlmQueries.PreTokens,
-          LlmQueries.PreWinnow)
-      else pinBase).localCheckpoint()
+      .localCheckpoint()
     val fresh = shard
       .withColumn("_h", DedupIndex.contentHash)
       .join(DedupIndex.read(spark, dedupDir(base))
         .select(col("h").as("_h")).distinct(), Seq("_h"), "left_anti")
       .drop("_h")
-    // cut-identical either way — see [[Screens.tieredVerbatim]]: the
-    // winnow pre-screen only prunes docs the k+w−1 guarantee proves
-    // span-free
-    val cutCandidates =
-      if (screens.tieredVerbatim) {
-        val flagged = WinnowIndex.screenAgainst(fresh,
-            WinnowIndex.read(spark, winnowDir(base)))
-          .select("doc_id")
-        fresh.join(flagged, Seq("doc_id"), "left_semi")
-      } else fresh
-    val cured = SamplingQueries.cutAgainstIndex(cutCandidates,
+    val cured = SamplingQueries.cutAgainstIndex(fresh,
         SubstringIndex.read(spark, substrDir(base)), SamplingQueries.SpanK)
       .filter(col("n_cut_tokens") > 0L)
       .select(col("doc_id"), col("text_clean"), col("n_cut_tokens"))
@@ -297,7 +233,7 @@ object ReleaseFlow {
     releaseDeferred(spark, shardCured, base, screens)
   }
 
-  /** Compact all four artifacts — the maintenance op a release
+  /** Compact all three artifacts — the maintenance op a release
     * schedule runs every N shards: each append lands one key-sorted
     * file beside the clustered ones, and its footer min/max span about
     * the whole key domain, so after N releases a probe opens N files it
@@ -310,7 +246,7 @@ object ReleaseFlow {
     indexes(base).compact(spark)
 
   /** RETRACTION — the RECALL half of the release lifecycle: remove
-    * every artifact row derived from `docIds` across all four indexes,
+    * every artifact row derived from `docIds` across all three indexes,
     * as if those documents had never been released. The operation a
     * real corpus deployment cannot live without — a takedown request,
     * a post-release contamination discovery, a licensing recall — and
@@ -328,7 +264,7 @@ object ReleaseFlow {
     *    kept, not index state); re-release the shard to re-decide
     *    against the post-retraction corpus;
     *  - cost = one [[Compaction]]-grade rewrite per artifact
-    *    directory — five across the four artifacts, the neardup index
+    *    directory — four across the three indexes, the neardup index
     *    being a sketch + bands pair; the span-gram rewrite
     *    dominates — so batch recalls into one call —
     *    the id list is shard-bounded (hence broadcast), never
@@ -352,7 +288,7 @@ object ReleaseFlow {
   def retract(spark: SparkSession, docIds: DataFrame, base: String): Unit =
     // the id list is pinned before the first swap: a caller may derive
     // it from a frame whose lineage reads these very artifacts. The
-    // five swaps are independent and run concurrently; the span-gram
+    // four swaps are independent and run concurrently; the span-gram
     // rewrite (the largest artifact) dominates the wall clock.
     indexes(base).retract(spark, docIds)
 
@@ -381,8 +317,8 @@ object ReleaseFlow {
       rebuildClass: Seq[String] = Nil)
 
   /** THE one-call takedown — [[retract]] extended across the whole
-    * deployment footprint with ONE pinned id set: the four release
-    * artifacts, the media pair, the ANN indexes, every materialized
+    * deployment footprint with ONE pinned id set: the three release
+    * indexes, the media pair, the ANN indexes, every materialized
     * epoch-shard order ([[EpochShards.retractShards]] — per-doc pure,
     * so the in-place refresh equals a complement rebuild exactly,
     * replay order included), and a staleness marker on each
@@ -403,7 +339,7 @@ object ReleaseFlow {
     val tasks = Seq.newBuilder[() => Unit]
     val out = Seq.newBuilder[(String, String)]
     tasks += (() => indexes(fp.release).retractPinned(spark, ids))
-    out += fp.release -> "retracted (dedup, neardup, substr, winnow)"
+    out += fp.release -> "retracted (dedup, neardup, substr)"
     fp.media.foreach { m =>
       tasks += (() => MediaReleaseFlow.indexes(m).retractPinned(spark, ids))
       out += m -> "retracted (bytehash, phash)"

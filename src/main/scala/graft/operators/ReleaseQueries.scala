@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** Release-lifecycle gate query — the m1 discipline
   * ([[MartQueries]]) applied to [[ReleaseFlow]]: the one major
   * composition that had no oracle-gated row. r1 routes a PLANTED shard
-  * through the FULL release lifecycle — init the four persisted
+  * through the FULL release lifecycle — init the three persisted
   * artifacts from a corpus slice, release shard 1, release shard 2
   * against the APPENDED artifacts — and returns the audit matrix
   * ([[ReleaseFlow.audit]] per release). Its DuckDB oracle replays every
@@ -20,9 +20,7 @@ import org.apache.spark.sql.functions._
   *    worked);
   *  - `verbatim_repeat` — replayed: shared 15-gram
   *    ([[SamplingQueries.SpanK]]) against the corpus gram set, l47's
-  *    machinery (and since [[ReleaseFlow.release]] runs the winnow
-  *    TIER over this arm, a green row is also an oracle-grade pin of
-  *    tiered ≡ untiered on real-corpus data);
+  *    machinery;
   *  - `low_quality` / `repetitive` / `admit` — replayed:
   *    [[LlmQueries.qualityKeep]] (l6's SQL), top-2-gram share (l27's
   *    SQL) and the Gopher ladder (l27b's SQL) in the decision chain's
@@ -47,8 +45,7 @@ import org.apache.spark.sql.functions._
   * near-dup pair sharing 8-grams — rules out any corpus neighbor near
   * the 0.6 verify bar (constructed shard rows measure ≤ 0.15). The
   * verbatim class then re-ADDS a quote: 16 consecutive tokens of one
-  * corpus doc, ≥ 15 = SpanK so the span probe must hit and
-  * ≥ k+w−1 so the winnow tier must pass it through.
+  * corpus doc, ≥ 15 = SpanK so the span probe must hit.
   *
   * Shard classes (`o` = max(doc_id)+1; class k's ids = source + k·o,
   * all ranges disjoint from each other and from every indexed id):
@@ -91,10 +88,10 @@ object ReleaseQueries {
   private def gateBase(d: String): String =
     s"${sys.props("java.io.tmpdir")}/graft_release_gate_${nonce}_${d.replaceAll("[^A-Za-z0-9.]", "_")}"
 
-  /** One PRISTINE four-artifact init per (JVM, source dir), shared by
+  /** One PRISTINE three-index init per (JVM, source dir), shared by
     * the r1/r2 gates: both init IDENTICAL artifact sets from the same
     * 75% corpus slice (same [[inCorpus]] rule, same projection), so
-    * re-running [[ReleaseFlow.init]]'s four index builds per gate was
+    * re-running [[ReleaseFlow.init]]'s three index builds per gate was
     * pure duplicated setup — ~24% of every official bench (VERDICT
     * r14 #1). The first gate to run builds the master once; every
     * caller then gets a parquet FILE COPY of it to mutate (releases
@@ -127,9 +124,9 @@ object ReleaseQueries {
       val fs = dst.getFileSystem(conf)
       if (fs.exists(dst)) fs.delete(dst, true)
       // per-artifact concurrent copy ([[Par]]'s overlap discipline):
-      // the master holds four independent index trees, and a serial
+      // the master holds three independent index trees, and a serial
       // FileUtil.copy walks them file-by-file — driver-side I/O every
-      // gate invocation pays, four-way parallel since round 18
+      // gate invocation pays, one copy per tree in parallel
       val srcFs = src.getFileSystem(conf)
       fs.mkdirs(dst)
       Par.run(srcFs.listStatus(src).toSeq.map(s => () => {
@@ -196,7 +193,7 @@ object ReleaseQueries {
       val off = LlmQueries.plantedOffset(all, "doc_id")
       // the quote source: the lowest-id corpus doc with >= 16 tokens;
       // its first 16 lowercase tokens are the planted verbatim lift
-      // (16 >= SpanK = 15, and >= k+w-1 so the winnow tier must flag)
+      // (16 >= SpanK = 15)
       val quote = corpus.filter(size(col("ta")) >= 16)
         .orderBy("doc_id").limit(1)
         .select(concat_ws(" ", slice(col("ta"), 1, 16)).as("_q"))
@@ -218,11 +215,7 @@ object ReleaseQueries {
       // wipe + populate from the shared pristine init (see [[InitMemo]])
       InitMemo.cloneInto(s, d, base)(m =>
         ReleaseFlow.init(corpus.select("lang", "doc_id", "text"), m))
-      // the tier stays ON here (non-default since round 15): a green r1
-      // is then an oracle-grade pin of tiered ≡ untiered on real-corpus
-      // data, while r2 covers the exact-probe default
-      val d1 = ReleaseFlow.release(s, shard1, base,
-        ReleaseFlow.Screens(tieredVerbatim = true))
+      val d1 = ReleaseFlow.release(s, shard1, base)
       // release 2 probes the APPENDED artifacts: copies of release-1
       // admissions must now read as landed corpus
       val admitted = d1.filter(col("decision") === "admit")
@@ -232,8 +225,7 @@ object ReleaseQueries {
         .withColumn("ta", split(lower(col("text")), "\\s+"))
         .filter(size(col("ta")) >= 3 && instr(col("text"), " ") > 0),
         2, wsVariant)
-      val d2 = ReleaseFlow.release(s, c6.unionByName(c7), base,
-        ReleaseFlow.Screens(tieredVerbatim = true))
+      val d2 = ReleaseFlow.release(s, c6.unionByName(c7), base)
       ReleaseFlow.audit(d1).withColumn("release", lit(1L))
         .unionByName(ReleaseFlow.audit(d2).withColumn("release", lit(2L)))
         .select("release", "lang", "decision", "n_docs", "doc_id_sum")
@@ -421,11 +413,7 @@ object ReleaseQueries {
     * rather than construction-pinned, even the pathological mixed
     * boundary gram (≤ 7 base tokens + a quote prefix that happens to
     * appear verbatim in the corpus) cannot desynchronize the gate —
-    * both engines would cut it. Since round 15 this gate runs the
-    * DEFAULT exact span probe ([[ReleaseFlow.Screens.tieredVerbatim]]
-    * off, per BENCH_NOTES' local-scale pricing) while r1 runs tier-ON
-    * — so the gate pair oracle-covers both probe modes, and the
-    * untiered oracle replay here is exact trivially. The output adds
+    * both engines would cut it. The output adds
     * the cure's accounting columns to the audit matrix: docs cut and
     * tokens cut per (lang, decision). */
   val r2 = DQ(
@@ -455,9 +443,7 @@ object ReleaseQueries {
       val cd = cls(clean.filter(col("doc_id") % 3 === 2), 4, col("text"))
       val shard = ca.unionByName(cb).unionByName(cc).unionByName(cd)
       // same corpus slice as r1 → the same pristine init, cloned (the
-      // r14 verdict's duplicated-setup finding); r2 runs the DEFAULT
-      // exact span probe (tieredVerbatim off), so the pair of gates
-      // oracle-covers both probe modes
+      // r14 verdict's duplicated-setup finding)
       InitMemo.cloneInto(s, d, base)(m =>
         ReleaseFlow.init(corpus.select("lang", "doc_id", "text"), m))
       ReleaseFlow.releaseCut(s, shard, base)
@@ -648,7 +634,7 @@ object ReleaseQueries {
             FROM s2dec GROUP BY 1, 2 ORDER BY lang, decision"""))
 
   /** R4 — the RETRACTION roundtrip, [[ReleaseFlow.retract]] under the
-    * oracle: init the four artifacts from the corpus slice (the shared
+    * oracle: init the three indexes from the corpus slice (the shared
     * [[InitMemo]] clone — same pristine master as r1/r2/c1), release a
     * shard of held-out docs (mixed decisions, admissions guaranteed by
     * a require) plus corpus copies (rejected — never indexed), then
@@ -661,12 +647,9 @@ object ReleaseQueries {
     * bands: 16 per sketched doc; substring: len(ta) − k + 1 positional
     * grams per ≥ k-token doc, k = [[SamplingQueries.SpanK]]) — so any
     * retraction residue or over-removal desynchronizes count or id-sum
-    * and fails the hash compare. The winnow artifact's cardinality is
-    * a function of xxhash64 VALUES (window-argmin selection) and is
-    * not DuckDB-replayable — its restore-to-pristine is pinned
-    * byte-for-byte in RetractSpec instead, alongside the
-    * complement-rebuild equality and re-release decision identity this
-    * count-level gate cannot see. */
+    * and fails the hash compare. RetractSpec pins the byte-for-byte
+    * restore, the complement-rebuild equality and re-release decision
+    * identity this count-level gate cannot see. */
   val r4 = DQ(
     "r4_retract_roundtrip",
     (s, d) => {

@@ -59,28 +59,4 @@ object SubstringIndex extends OneArtifactIndex(
       .join(index.select("gram").distinct(), Seq("gram"), "left_semi")
     SamplingQueries.spanRollup(newDocs, SamplingQueries.mergeSpans(hits, k))
   }
-
-  /** The TWO-TIER incremental probe: screen the shard against the
-    * [[WinnowIndex]] first (the 2/(w+1)-sized fingerprint artifact),
-    * then run the exact span probe over the FLAGGED documents only.
-    * Output ≡ [[spansAgainst]] by the winnowing guarantee — any doc
-    * with a [[SamplingQueries.SpanK]]-token verbatim hit shares a
-    * ≥ k+w−1-token run with an indexed doc (15 ≥ 8) and is therefore
-    * winnow-flagged, so restricting the exact probe to flagged docs
-    * drops nothing (WinnowIndexSpec pins the subset relation,
-    * SubstringIndexSpec the composed row equality; the paper's
-    * guarantee assumes distinct hashes inside a shared window — a
-    * 2⁻³² per-window event otherwise). At 100 TB only the flagged
-    * fraction of the shard pays the positional-gram explode and the
-    * big-index probe; the first tier reads the small artifact. */
-  def spansAgainstTiered(newDocs: DataFrame, winnow: DataFrame,
-      index: DataFrame): DataFrame = {
-    val flagged = WinnowIndex.screenAgainst(newDocs, winnow)
-      .select("doc_id")
-    val candidates = newDocs.join(flagged, Seq("doc_id"), "left_semi")
-    val k = SamplingQueries.SpanK
-    val hits = build(candidates)
-      .join(index.select("gram").distinct(), Seq("gram"), "left_semi")
-    SamplingQueries.spanRollup(newDocs, SamplingQueries.mergeSpans(hits, k))
-  }
 }

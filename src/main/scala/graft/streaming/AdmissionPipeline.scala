@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{CleaningQueries, DedupIndex, IndexSet, LlmQueries,
-  Par, SubstringIndex, WinnowIndex}
+  Par, SubstringIndex}
 
 /** Composed streaming ADMISSION pipeline — the ingest-side counterpart
   * of batch l29: every admission gate a training-data ingest runs at
@@ -38,13 +38,13 @@ import graft.operators.{CleaningQueries, DedupIndex, IndexSet, LlmQueries,
   *    precedence as l19/l29: duplicate-family dominates quality.
   *
   * Scale shape: every screen is an index equi-join (eval-set-sized gram
-  * index; banded corpus index; the opt-in span, winnow and hash
-  * indexes). Each index is streamed once per batch against
-  * broadcast batch-side keys, with no index-wide shuffle or
-  * aggregation: the ownership guards and de-duplication run on the
-  * HITS, never on an index. The reason join keys on doc_id within the
-  * microbatch, against broadcast flags — per-batch cost is O(batch ×
-  * index-hit-rate) plus one scan of each index.
+  * index; banded corpus index; the opt-in span and hash indexes).
+  * Each index is streamed once per batch against broadcast batch-side
+  * keys, with no index-wide shuffle or aggregation: the ownership
+  * guards and de-duplication run on the HITS, never on an index. The
+  * reason join keys on doc_id within the microbatch, against broadcast
+  * flags — per-batch cost is O(batch × index-hit-rate) plus one scan
+  * of each index.
   */
 object AdmissionPipeline {
 
@@ -75,25 +75,6 @@ object AdmissionPipeline {
         * are the same claim about eval leakage, detected differently.
         * None runs the pipeline unchanged. */
       evalVecs: Option[DataFrame] = None,
-      /** Opt-in TIER-1 winnow pre-gate for the verbatim arm (the
-        * persisted [[graft.operators.WinnowIndex]] fingerprint frame,
-        * column `h`): only batch docs sharing a selected fingerprint
-        * with the indexed corpus pay the 15-gram build and the
-        * span-index probe. Decision-IDENTICAL with or without (the
-        * winnowing guarantee — see [[StreamingSubstring.screenRaw]]);
-        * at scale the quiet majority of a batch stops at the
-        * 2/(w+1)-sized artifact. Ignored unless `corpusSpans` is set.
-        *
-        * COVERAGE INVARIANT (the caller's contract): the winnow
-        * artifact must cover every document the span index holds —
-        * the equivalence argument screens tier 2's candidates through
-        * tier 1, so a span-indexed doc with NO fingerprints in the
-        * winnow artifact silently under-flags its verbatim repeats.
-        * Whoever appends to one index appends to the other in the
-        * same step: [[startLive]] does (its winnow dir is required
-        * whenever both live indexes are configured), and
-        * [[graft.operators.ReleaseFlow]] holds it by construction. */
-      corpusWinnow: Option[DataFrame] = None,
       /** Opt-in Gopher DOC-QUALITY screen (l69's seven published rules
         * — word count, mean word length, symbol ratio, bullet/ellipsis
         * lines, alpha share, stopword floor — the non-repetition half
@@ -149,7 +130,7 @@ object AdmissionPipeline {
     * .PreTokens]], then [[LlmQueries.withGatePre]]). [[decide]] reads
     * its batch from about seven arm subtrees, so an unpinned lineage (a
     * stateful dedup, a cure) re-runs per arm; on the pin the arms and
-    * the four index appends project the computed columns (bit-identical
+    * the index appends project the computed columns (bit-identical
     * to recomputing them). Keeps every row — a null-text doc still
     * lands `low_quality`. Drop [[GatePreCols]] before a frame lands.
     *
@@ -180,8 +161,7 @@ object AdmissionPipeline {
   }
 
   private[graft] val GatePreCols = Seq(LlmQueries.PreTokens,
-    LlmQueries.PreShs, LlmQueries.PreSig, LlmQueries.PreGrams,
-    LlmQueries.PreWinnow)
+    LlmQueries.PreShs, LlmQueries.PreSig, LlmQueries.PreGrams)
 
   /** Screen-arm bits in the fused flag word ([[decide]]): one tagged
     * union + ONE doc_id aggregation replaces the former five per-arm
@@ -254,7 +234,7 @@ object AdmissionPipeline {
     // the opt-in verbatim-span screen
     gates.corpusSpans.foreach { ix =>
       arms += arm(StreamingSubstring.screenRaw(batch, ix,
-        excludeOwners = Some(batchOwned), winnow = gates.corpusWinnow), VrBit)
+        excludeOwners = Some(batchOwned)), VrBit)
     }
     // the opt-in exact-hash corpus backstop: content hash keys on the
     // batch's text AS DECIDED — under `clean=true` that is the cleaned
@@ -379,10 +359,10 @@ object AdmissionPipeline {
     * configured persisted index by PATH, and the batch's admitted docs
     * are appended to each of them — one [[graft.operators.IndexSet]]
     * built from the configured dirs ([[StreamingNearDup]], plus
-    * [[SubstringIndex]] and [[WinnowIndex]] with `substrIndexDir`, plus
-    * [[DedupIndex]] with `exactHashDir`) — so a doc admitted in batch N
-    * flags its near-copy, its partial span lifts and its byte-copies in
-    * batch N+1 without waiting for a corpus rebuild. What remains open,
+    * [[SubstringIndex]] with `substrIndexDir`, plus [[DedupIndex]] with
+    * `exactHashDir`) — so a doc admitted in batch N flags its
+    * near-copy, its partial span lifts and its byte-copies in batch
+    * N+1 without waiting for a corpus rebuild. What remains open,
     * by design, is the INTRA-batch window: two novel near-identical
     * docs inside one microbatch still both admit (the batch l9/l28
     * sweep is that backstop). The per-batch re-read costs one plan
@@ -420,14 +400,7 @@ object AdmissionPipeline {
       outDir: String, tsCol: String, delay: String,
       clean: Boolean = false,
       substrIndexDir: Option[String] = None,
-      /** Opt-in TIER-1 winnow pre-gate for the live verbatim arm: the
-        * persisted [[graft.operators.WinnowIndex]] directory, resolved
-        * per batch and APPENDED with each batch's admitted docs in the
-        * same step as the substring append — which is what keeps
-        * [[Gates.corpusWinnow]]'s coverage invariant under a growing
-        * span index (a winnow artifact that stops growing while the
-        * span index grows silently under-flags). Ignored unless
-        * `substrIndexDir` is set, same as the gate itself. */
+      /** No-op: ignored, nothing reads or appends it; kept so older callers compile. */
       winnowIndexDir: Option[String] = None,
       classifier: Option[Map[Int, Long]] = None,
       /** Opt-in LIVE exact-hash corpus backstop: the persisted
@@ -444,21 +417,13 @@ object AdmissionPipeline {
         * path picks up a new eval release without a restart). No
         * append: the eval suite is not grown by admissions. */
       evalVecsDir: Option[String] = None): StreamingQuery = {
-    // "ignored unless substrIndexDir is set": a set-but-unseeded winnow
-    // dir must not PATH_NOT_FOUND for a gate decide() never consults
-    val winnowDir = substrIndexDir.flatMap(_ => winnowIndexDir)
-    // the winnow member rides the SAME conditional as the substring
-    // member — one cannot grow without the other, the coverage
-    // invariant's operational form
     val indexes = IndexSet(Seq(StreamingNearDup -> neardupIndexDir) ++
       substrIndexDir.map(SubstringIndex -> _) ++
-      winnowDir.map(WinnowIndex -> _) ++
       exactHashDir.map(DedupIndex -> _): _*)
     // each index's schema, inferred ONCE here: the per-batch reads
     // re-list the live files by path but skip the footer-inference job
     val ndLike = StreamingNearDup.readIndex(spark, neardupIndexDir)
     val spanSchema = substrIndexDir.map(SubstringIndex.read(spark, _).schema)
-    val winnowSchema = winnowDir.map(WinnowIndex.read(spark, _).schema)
     val hashSchema = exactHashDir.map(DedupIndex.read(spark, _).schema)
     val evalSchema =
       evalVecsDir.map(StreamingSemanticDecontam.readIndex(spark, _).schema)
@@ -474,7 +439,6 @@ object AdmissionPipeline {
           holdoutGrams,
           corpusSpans = substrIndexDir.map(d =>
             StreamingSubstring.fromPersisted(spark, d, spanSchema)),
-          corpusWinnow = winnowDir.map(WinnowIndex.read(spark, _, winnowSchema)),
           classifier = classifier,
           exactHashes = exactHashDir.map(DedupIndex.read(spark, _, hashSchema)),
           evalVecs = evalVecsDir.map(

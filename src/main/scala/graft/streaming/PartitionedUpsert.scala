@@ -70,11 +70,19 @@ object PartitionedUpsert {
     * `.bak`). Explicit per-bucket paths, NOT a glob — a glob would also
     * match a crashed bucket's `.tmp`/`.bak` siblings and double-read.
     * None when no bucket has landed yet. */
-  def readAll(spark: SparkSession, path: String, nBuckets: Int): Option[DataFrame] = {
-    val parts = (0 until nBuckets).flatMap(b =>
-      IngestPipeline.existing(spark, bucketPath(path, b)))
-    parts.reduceOption(_.unionByName(_))
-  }
+  def readAll(spark: SparkSession, path: String, nBuckets: Int): Option[DataFrame] =
+    buckets(spark, path, nBuckets).map(_._2).reduceOption(_.unionByName(_))
+
+  /** Every live bucket of the table at `path`, by bucket id. Every
+    * bucket holds what one merge writes, so the first live bucket's
+    * inferred schema reads all the others: one footer-inference job per
+    * table, not one per bucket. */
+  private def buckets(spark: SparkSession, path: String,
+      nBuckets: Int): Seq[(Int, DataFrame)] =
+    (0 until nBuckets).foldLeft(Vector.empty[(Int, DataFrame)]) { (live, b) =>
+      live ++ IngestPipeline.existing(spark, bucketPath(path, b),
+        live.headOption.map(_._2.schema)).map(b -> _)
+    }
 
   /** Co-located equi-join of two tables stored in THIS bucket layout on
     * their shared key — the analytic-join path over the upserted sink,
@@ -91,13 +99,10 @@ object PartitionedUpsert {
     * is live. */
   def colocatedJoin(spark: SparkSession, leftPath: String, rightPath: String,
       pk: String, nBuckets: Int): Option[DataFrame] = {
-    val perBucket = (0 until nBuckets).flatMap { b =>
-      for {
-        l <- IngestPipeline.existing(spark, bucketPath(leftPath, b))
-        r <- IngestPipeline.existing(spark, bucketPath(rightPath, b))
-      } yield l.coalesce(1).hint("merge").join(r.coalesce(1), pk)
-    }
-    perBucket.reduceOption(_.unionByName(_))
+    val right = buckets(spark, rightPath, nBuckets).toMap
+    buckets(spark, leftPath, nBuckets).flatMap { case (b, l) =>
+      right.get(b).map(r => l.coalesce(1).hint("merge").join(r.coalesce(1), pk))
+    }.reduceOption(_.unionByName(_))
   }
 
   /** The bucket id of one key — same xxhash64(seed 42) the SQL-side

@@ -79,6 +79,11 @@ object StreamingNearDup extends DocIndex {
     * next batch rebuild compacts them. */
   protected def derive(docs: DataFrame): DataFrame = LlmQueries.docSketch(docs)
 
+  /** A gate-pinned frame already carries the sketch, which
+    * [[LlmQueries.docSketch]] then only projects. */
+  override protected def derives(docs: DataFrame): Boolean =
+    !LlmQueries.carriesSketch(docs)
+
   protected def parts: Seq[(IndexArtifact, DataFrame => DataFrame)] =
     Seq(Sketch -> identity, Bands -> bandsOf)
 

@@ -130,29 +130,8 @@ object StreamingSubstring {
     * surviving index rows. */
   def screenRaw(df: DataFrame, index: DataFrame,
       keep: Seq[String] = Nil,
-      excludeOwners: Option[DataFrame] = None,
-      winnow: Option[DataFrame] = None): DataFrame = {
-    // optional TIER-1 winnow pre-gate ([[graft.operators.WinnowIndex]]):
-    // only docs sharing a selected fingerprint hash with the indexed
-    // corpus pay the 15-gram build and the big-index probe. Tier 1 may
-    // OVER-flag (a shared fingerprint below SpanK, or an owner's own
-    // rows — the exact tier filters both), but by the winnowing
-    // guarantee it never under-flags a doc with a SpanK-token hit
-    // (15 ≥ k+w−1 = 8), so tiered ≡ untiered decision-for-decision —
-    // which is also why the pre-gate needs no owner-exclusion plumbing
-    // of its own. At 100 TB the batch-side saving is the per-batch
-    // gram explode; the index-side saving is reading the 2/(w+1)-sized
-    // artifact for the common (quiet) case.
-    val candidates = winnow match {
-      case Some(widx) =>
-        // a semi join ignores repeats on its build side: no distinct
-        val flagged = graft.operators.WinnowIndex.build(df)
-          .join(widx.select("h"), Seq("h"), "left_semi")
-          .select("doc_id")
-        df.join(flagged, Seq("doc_id"), "left_semi")
-      case None => df
-    }
-    val hits = SamplingQueries.docGramsK(candidates, Seq("doc_id") ++ keep,
+      excludeOwners: Option[DataFrame] = None): DataFrame = {
+    val hits = SamplingQueries.docGramsK(df, Seq("doc_id") ++ keep,
         SamplingQueries.SpanK, hashed = true)
       .join(index, Seq("gram"))
     excludeOwners

@@ -237,35 +237,6 @@ class AdmissionPipelineSpec extends AnyFunSuite {
     assert(withoutGate === Seq("admit"), withoutGate.toString)
   }
 
-  test("tier-1 winnow pre-gate: decisions with corpusWinnow are " +
-      "IDENTICAL to the untiered verbatim gate — the lift still flags, " +
-      "the quiet doc still admits") {
-    val lifted = (longCorpusText.split(" ").slice(4, 20) ++ Seq(
-      "zephyr", "quill", "almanac", "gondola", "parapet", "sundial",
-      "vellum", "ossuary", "tureen", "paddock", "bellows", "crampon",
-      "jetty", "kiln", "lozenge", "mortise", "naphtha", "oculus",
-      "pergola", "quoin")).mkString(" ")
-    val quiet = "periscope ostrich quilt lagoon velvet hammock sequoia " +
-      "tundra biscuit chandelier mongoose parchment zephyrine iceberg " +
-      "raccoon dolomite pretzel observatory kelp wombat clarinet " +
-      "geyser tambourine walrus porcelain aqueduct sycamore gondolier " +
-      "marmalade vestibule catamaran"
-    val batch = mkBatch(Seq(8L -> lifted, 9L -> quiet))
-    val spanGate = gates.copy(
-      corpusSpans = Some(StreamingSubstring.buildIndex(corpus)))
-    def reasons(g: AdmissionPipeline.Gates) =
-      AdmissionPipeline.decide(batch, g)
-        .select("doc_id", "reason").collect()
-        .map(r => r.getLong(0) -> r.getString(1)).toMap
-    val untiered = reasons(spanGate)
-    val tiered = reasons(spanGate.copy(
-      corpusWinnow = Some(graft.operators.WinnowIndex.build(corpus))))
-    assert(untiered === Map(8L -> "verbatim_repeat", 9L -> "admit"),
-      untiered.toString)
-    assert(tiered === untiered,
-      "the winnow tier must not change a single decision")
-  }
-
   test("buildIndexSince scopes the verbatim gate to a recency window: a doc " +
       "repeating only a past-horizon span admits, a recent span still flags") {
     import spark.implicits._
@@ -652,9 +623,8 @@ class AdmissionPipelineSpec extends AnyFunSuite {
   }
 
   test("startLive end-to-end: a doc admitted in batch 1 flags its " +
-      "near-copy AND its span lift in batch 2 via the live index appends, " +
-      "with the winnow tier live and coverage-complete") {
-    import graft.operators.{SubstringIndex, WinnowIndex}
+      "near-copy AND its span lift in batch 2 via the live index appends") {
+    import graft.operators.SubstringIndex
     val schema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("text", StringType),
@@ -666,10 +636,6 @@ class AdmissionPipelineSpec extends AnyFunSuite {
     SubstringIndex.write(
       corpus.withColumn("lang", lit("und")).select("lang", "doc_id", "text"),
       ssDir)
-    // the tier-1 winnow artifact, seeded from the SAME corpus as the
-    // span index (the coverage invariant at init)
-    val wDir = Files.createTempDirectory("graft_live_w_").toString
-    WinnowIndex.write(corpus, wDir)
     // batch 1: docA is a novel long admit
     val docA = "carburetor dovetail eiderdown flywheel grommet hawser " +
       "isinglass jackstay keelson lanyard mizzen oakum pintle quoin " +
@@ -682,7 +648,7 @@ class AdmissionPipelineSpec extends AnyFunSuite {
     val q = AdmissionPipeline.startLive(spark,
       spark.readStream.schema(schema).json(in), ndDir,
       gates.holdoutGrams, out, "ts", "10 minutes",
-      substrIndexDir = Some(ssDir), winnowIndexDir = Some(wDir))
+      substrIndexDir = Some(ssDir))
     q.processAllAvailable()
     // batch 2: docB = docA minus its first token (near-copy — catchable
     // only via the LIVE band append); docC lifts docA's tokens 4..19
@@ -715,17 +681,6 @@ class AdmissionPipelineSpec extends AnyFunSuite {
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     assert(indexedIds.contains(41L) && indexedIds.contains(44L),
       indexedIds.toString)
-    // the winnow artifact grew in lockstep (coverage invariant under
-    // live appends): it equals a rebuild over corpus ∪ admitted, doc
-    // for doc and fingerprint for fingerprint
-    val admitted = spark.read.parquet(s"$out/decisions")
-      .filter(col("reason") === "admit").select("doc_id", "text")
-    val rebuilt = WinnowIndex.build(
-        corpus.select("doc_id", "text").unionByName(admitted))
-      .collect().map(_.toString).toSet
-    val grown = WinnowIndex.read(spark, wDir)
-      .collect().map(_.toString).toSet
-    assert(grown === rebuilt, "live winnow append must equal rebuild")
   }
 
   test("end-to-end: exact dup suppressed by stream state, decisions land " +
@@ -867,7 +822,7 @@ class AdmissionPipelineSpec extends AnyFunSuite {
       s"""{"doc_id":$id,"text":"$text","ts":"2026-01-01T$ts"}"""
     }.mkString("\n").getBytes)
 
-  /** Seed the four release artifacts under `base` with [[corpus]] and
+  /** Seed the three release indexes under `base` with [[corpus]] and
     * start a live query appending to all of them. */
   private def startAll(in: String, out: String, base: String,
       clean: Boolean = false) = {
@@ -878,17 +833,15 @@ class AdmissionPipelineSpec extends AnyFunSuite {
       ReleaseFlow.neardupDir(base), gates.holdoutGrams, out, "ts",
       "10 minutes", clean = clean,
       substrIndexDir = Some(ReleaseFlow.substrDir(base)),
-      winnowIndexDir = Some(ReleaseFlow.winnowDir(base)),
       exactHashDir = Some(ReleaseFlow.dedupDir(base)))
   }
 
   /** Each release artifact's rows under `base`, as sorted multisets. */
   private def artifactRows(base: String): Seq[Seq[String]] = {
-    import graft.operators.{DedupIndex, ReleaseFlow, SubstringIndex, WinnowIndex}
+    import graft.operators.{DedupIndex, ReleaseFlow, SubstringIndex}
     val nd = StreamingNearDup.readIndex(spark, ReleaseFlow.neardupDir(base))
     Seq(nd.sketch, nd.bands,
       SubstringIndex.read(spark, ReleaseFlow.substrDir(base)),
-      WinnowIndex.read(spark, ReleaseFlow.winnowDir(base)),
       DedupIndex.read(spark, ReleaseFlow.dedupDir(base)))
       .map(_.collect().map(_.toString).sorted.toSeq)
   }
@@ -922,7 +875,7 @@ class AdmissionPipelineSpec extends AnyFunSuite {
 
   test("startLive with clean=true: a page-dropped doc lands low_quality " +
       "and the admitted doc reaches all four indexes redacted") {
-    import graft.operators.{DedupIndex, ReleaseFlow, SubstringIndex, WinnowIndex}
+    import graft.operators.{DedupIndex, ReleaseFlow, SubstringIndex}
     val body = Seq(
       "porcelain zeppelin hammock quasar bobbin anchovy tundra seventy.",
       "gazebo parchment kaleidoscope derrick awning lacquer plinth nine.",
@@ -961,8 +914,6 @@ class AdmissionPipelineSpec extends AnyFunSuite {
       "bands" -> (nd.bands, ndBuilt.bands),
       "span_grams" -> (SubstringIndex.read(spark, ReleaseFlow.substrDir(base)),
         SubstringIndex.build(landed)),
-      "winnow" -> (WinnowIndex.read(spark, ReleaseFlow.winnowDir(base)),
-        WinnowIndex.build(landed)),
       "content_hashes" -> (DedupIndex.read(spark, ReleaseFlow.dedupDir(base)),
         DedupIndex.build(landed))).foreach { case (name, (ix, built)) =>
       assert(of71(ix).nonEmpty && of71(ix) === of71(built), name)
@@ -1008,15 +959,14 @@ class AdmissionPipelineSpec extends AnyFunSuite {
     // The measured count: the indexes are probed, never reshaped (no
     // index-wide distinct), the three ownership guards share one
     // broadcast batch-id set, and the reason join broadcasts the flags.
-    import graft.operators.{DedupIndex, ReleaseFlow, WinnowIndex}
-    val Budget = 14
+    import graft.operators.{DedupIndex, ReleaseFlow}
+    val Budget = 12
     val base = Files.createTempDirectory("graft_decide_budget_").toString
     ReleaseFlow.init(corpus.withColumn("lang", lit("und")), base)
     val g = gates.copy(
       neardup = StreamingNearDup.readIndex(spark, ReleaseFlow.neardupDir(base)),
       corpusSpans = Some(StreamingSubstring.fromPersisted(spark,
         ReleaseFlow.substrDir(base))),
-      corpusWinnow = Some(WinnowIndex.read(spark, ReleaseFlow.winnowDir(base))),
       exactHashes = Some(DedupIndex.read(spark, ReleaseFlow.dedupDir(base))))
     val batch = AdmissionPipeline.gatePin(mkBatch(Seq(
       1L -> longCorpusText.split(" ").drop(1).mkString(" "),
@@ -1055,10 +1005,10 @@ class AdmissionPipelineSpec extends AnyFunSuite {
   test("one startLive microbatch with all four live indexes stays within " +
       "its Spark job budget") {
     // The measured count: the pin, decide's jobs (planned while the pin
-    // runs), the decisions write, the near-dup derive pin, and one job
-    // per artifact append (one key-sorted file each, no range sampling
-    // and no shuffle).
-    val Budget = 19
+    // runs), the decisions write, and one job per artifact append (one
+    // key-sorted file each, no range sampling and no shuffle; the
+    // near-dup appends project the pin's sketch, so nothing re-pins it).
+    val Budget = 15
     val in = Files.createTempDirectory("graft_live_budget_in_").toString
     val out = Files.createTempDirectory("graft_live_budget_out_").toString
     jsonLines(in, "f1.json", Seq(
@@ -1106,8 +1056,7 @@ class AdmissionPipelineSpec extends AnyFunSuite {
   test("gatePin computes each document's pre-columns once: decide is " +
       "planned while the pin runs and its jobs and the appends read the " +
       "landed pin") {
-    import graft.operators.{DedupIndex, IndexSet, ReleaseFlow, SubstringIndex,
-      WinnowIndex}
+    import graft.operators.{DedupIndex, IndexSet, ReleaseFlow, SubstringIndex}
     // counts evaluations of the doc text; nondeterministic, so the
     // optimizer neither duplicates nor reorders it within one pass
     val seen = spark.sparkContext.longAccumulator("gate_pin_computed")
@@ -1130,8 +1079,7 @@ class AdmissionPipelineSpec extends AnyFunSuite {
       .withColumn("lang", lit("und"))
     val live = IndexSet(DedupIndex -> ReleaseFlow.dedupDir(base),
       StreamingNearDup -> ReleaseFlow.neardupDir(base),
-      SubstringIndex -> ReleaseFlow.substrDir(base),
-      WinnowIndex -> ReleaseFlow.winnowDir(base))
+      SubstringIndex -> ReleaseFlow.substrDir(base))
     val decisions = AdmissionPipeline.gatePin(batch) { pinned =>
       val g = gates.copy(
         neardup = StreamingNearDup.readIndex(spark, ReleaseFlow.neardupDir(base)),

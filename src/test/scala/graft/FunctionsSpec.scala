@@ -347,8 +347,8 @@ class FunctionsSpec extends AnyFunSuite {
     graft.functions.NativeTextExprs.ensureRegistered(spark)
     val dd = Tables.documents(spark, sf).filter(col("text").isNotNull)
       .withColumn("ta", split(lower(col("text")), "\\s+"))
-    // every gram width the engine hashes: sketch shingles (3), winnow
-    // grams (5), span grams (15)
+    // the gram widths the engine hashes, sketch shingles (3) and span
+    // grams (15), plus one width between them
     for (k <- Seq(3, 5, 15)) {
       val hof = expr(s"CASE WHEN size(ta) >= $k THEN " +
         s"transform(sequence(0, size(ta) - $k), " +

@@ -167,4 +167,46 @@ class PartitionedUpsertSpec extends AnyFunSuite {
         s"bucket $b must hold its merged rows")
     }
   }
+
+  /** The Spark jobs `body` runs on this thread. */
+  private def jobsOf(label: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"$label-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, label)
+      try body finally sc.clearJobGroup()
+      org.apache.spark.graftbridge.ListenerBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get()
+  }
+
+  test("readAll and colocatedJoin resolve each table's schema once, not " +
+      "once per live bucket") {
+    val left = tmp()
+    val right = tmp()
+    val v1 = products(80, seed = 27)
+    val touched = PartitionedUpsert.upsert(spark, left, v1, "product_id",
+      Seq("created_at", "_src_offset"), B)
+    PartitionedUpsert.upsert(spark, right,
+      v1.select(col("product_id"), col("created_at").as("snap_at"),
+        col("_src_offset").as("snap_off")),
+      "product_id", Seq("snap_at", "snap_off"), B)
+    assert(touched.size >= 8, s"too few live buckets to tell: $touched")
+    // resolving the frames runs only footer-inference jobs: one per table
+    val readJobs = jobsOf("readAll-schema")(PartitionedUpsert.readAll(spark, left, B))
+    assert(readJobs <= 1, s"$readJobs jobs to resolve ${touched.size} buckets")
+    val joinJobs = jobsOf("colocated-schema")(
+      PartitionedUpsert.colocatedJoin(spark, left, right, "product_id", B))
+    assert(joinJobs <= 2, s"$joinJobs jobs to resolve ${touched.size} bucket pairs")
+    assert(PartitionedUpsert.readAll(spark, left, B).get.count() === 80)
+    assert(PartitionedUpsert.colocatedJoin(spark, left, right, "product_id", B)
+      .get.count() === 80)
+  }
 }

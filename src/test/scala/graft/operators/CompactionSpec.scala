@@ -59,7 +59,6 @@ class CompactionSpec extends AnyFunSuite {
     val beforeRows = Map(
       "dedup" -> rowsOf(DedupIndex.read(spark, ReleaseFlow.dedupDir(base))),
       "substr" -> rowsOf(SubstringIndex.read(spark, ReleaseFlow.substrDir(base))),
-      "winnow" -> rowsOf(WinnowIndex.read(spark, ReleaseFlow.winnowDir(base))),
       "bands" -> rowsOf(StreamingNearDup
         .readIndex(spark, ReleaseFlow.neardupDir(base)).bands))
 
@@ -69,8 +68,6 @@ class CompactionSpec extends AnyFunSuite {
       beforeRows("dedup"), "dedup row multiset")
     assert(rowsOf(SubstringIndex.read(spark, ReleaseFlow.substrDir(base))) ===
       beforeRows("substr"), "substring row multiset")
-    assert(rowsOf(WinnowIndex.read(spark, ReleaseFlow.winnowDir(base))) ===
-      beforeRows("winnow"), "winnow row multiset")
     assert(rowsOf(StreamingNearDup
       .readIndex(spark, ReleaseFlow.neardupDir(base)).bands) ===
       beforeRows("bands"), "band row multiset")
@@ -82,14 +79,12 @@ class CompactionSpec extends AnyFunSuite {
 
     // the probe semantics are untouched: release the SAME final shard
     // against the compacted base and the untouched twin — decisions
-    // must agree row-for-row (this also exercises the winnow tier's
-    // compacted artifact)
+    // must agree row-for-row
     val shard4 = docsAll.filter(col("doc_id") % 3 === 1)
       .select(col("lang"), (col("doc_id") + lit(9 * off)).as("doc_id"),
         col("text"))
     def decisions(b: String) =
-      ReleaseFlow.release(spark, shard4, b,
-          ReleaseFlow.Screens(tieredVerbatim = true))
+      ReleaseFlow.release(spark, shard4, b)
         .select("doc_id", "decision").collect()
         .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(decisions(base) === decisions(twin),

@@ -4,14 +4,10 @@ import graft.Session
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The two setup tricks the round-15 gates lean on, pinned directly:
+/** The setup trick the round-15 gates lean on, pinned directly:
   * [[ReleaseQueries.InitMemo]]'s clone must be byte-equivalent to a
   * fresh init (r1/r2/c1 all mutate clones — a drifting clone would
-  * desynchronize every lifecycle gate at once), and a stale-FORMAT
-  * winnow artifact must fail LOUDLY at read (the ADVICE-flagged
-  * safety-silent failure: a v1-keyed artifact probed under v2 keys
-  * would match nothing and under-flag verbatim repeats without any
-  * error). */
+  * desynchronize every lifecycle gate at once). */
 class GateInitMemoSpec extends AnyFunSuite {
 
   private lazy val spark = Session.get()
@@ -50,7 +46,6 @@ class GateInitMemoSpec extends AnyFunSuite {
         String => org.apache.spark.sql.DataFrame)](
       "dedup" -> (b => DedupIndex.read(spark, ReleaseFlow.dedupDir(b))),
       "substr" -> (b => SubstringIndex.read(spark, ReleaseFlow.substrDir(b))),
-      "winnow" -> (b => WinnowIndex.read(spark, ReleaseFlow.winnowDir(b))),
       "bands" -> (b => graft.streaming.StreamingNearDup
         .readIndex(spark, ReleaseFlow.neardupDir(b)).bands))) {
       assert(rows(read(destA)) === rows(read(fresh)), s"$name: clone A")
@@ -64,42 +59,5 @@ class GateInitMemoSpec extends AnyFunSuite {
     assert(rows(DedupIndex.read(spark, ReleaseFlow.dedupDir(destB))) ===
       rows(DedupIndex.read(spark, ReleaseFlow.dedupDir(fresh))),
       "mutating clone A leaked into clone B")
-  }
-
-  test("a stale-FORMAT winnow artifact fails loudly at read instead of " +
-      "silently matching nothing") {
-    import spark.implicits._
-    val base = tmp("graft_winnow_stale")
-    // simulate a pre-v2 artifact: fingerprint rows under the RETIRED
-    // directory name (the v1 layout this build no longer writes)
-    Seq((1L, 42L)).toDF("doc_id", "h")
-      .write.parquet(s"$base/winnow_fp")
-    val e = intercept[Exception] {
-      WinnowIndex.read(spark, base).collect()
-    }
-    assert(e.getMessage.contains("winnow_fp_v2") ||
-      Option(e.getCause).exists(_.getMessage.contains("winnow_fp_v2")),
-      s"the failure must name the expected format dir: ${e.getMessage}")
-  }
-
-  test("a winnow APPEND onto a stale-format base fails loudly instead of " +
-      "silently creating a fresh partial v2 artifact beside it") {
-    import spark.implicits._
-    val base = tmp("graft_winnow_stale_append")
-    Seq((1L, 42L)).toDF("doc_id", "h")
-      .write.parquet(s"$base/winnow_fp")
-    // without the guard this would create $base/winnow_fp_v2 holding
-    // ONLY the appended docs — a later tiered release would then read
-    // a partial artifact with no error and under-flag verbatim repeats
-    val e = intercept[IllegalArgumentException] {
-      WinnowIndex.append(
-        Seq((7L, "a b c d e f g h i j")).toDF("doc_id", "text"), base)
-    }
-    assert(e.getMessage.contains("winnow_fp_v2"),
-      s"the failure must name the expected format dir: ${e.getMessage}")
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$base/winnow_fp_v2")),
-      "the guard must refuse BEFORE any partial artifact is written")
   }
 }

@@ -206,7 +206,6 @@ class GateReadLiveSpec extends AnyFunSuite {
     val nd0 = StreamingNearDup.readIndex(spark, ReleaseFlow.neardupDir(base))
     val md0 = StreamingMediaDedup.readIndex(spark, mediaBase)
     val sch = Seq(SubstringIndex.read(spark, ReleaseFlow.substrDir(base)),
-      WinnowIndex.read(spark, ReleaseFlow.winnowDir(base)),
       DedupIndex.read(spark, ReleaseFlow.dedupDir(base)),
       StreamingSemanticDecontam.readIndex(spark, evalBase)).map(_.schema)
     def reads(pinned: Boolean): Seq[DataFrame] = {
@@ -217,9 +216,8 @@ class GateReadLiveSpec extends AnyFunSuite {
         if (pinned) Some(md0) else None)
       Seq(nd.sketch, nd.bands, md.sigs, md.bands,
         SubstringIndex.read(spark, ReleaseFlow.substrDir(base), s(0)),
-        WinnowIndex.read(spark, ReleaseFlow.winnowDir(base), s(1)),
-        DedupIndex.read(spark, ReleaseFlow.dedupDir(base), s(2)),
-        StreamingSemanticDecontam.readIndex(spark, evalBase, s(3)))
+        DedupIndex.read(spark, ReleaseFlow.dedupDir(base), s(1)),
+        StreamingSemanticDecontam.readIndex(spark, evalBase, s(2)))
     }
     def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
     def same(step: String): Seq[Int] =
@@ -235,7 +233,6 @@ class GateReadLiveSpec extends AnyFunSuite {
     DedupIndex.append(shard, ReleaseFlow.dedupDir(base))
     StreamingNearDup.append(shard, ReleaseFlow.neardupDir(base))
     SubstringIndex.append(shard, ReleaseFlow.substrDir(base))
-    WinnowIndex.append(shard, ReleaseFlow.winnowDir(base))
     StreamingMediaDedup.append(media(5 to 6), mediaBase)
     Compaction.appendInto(spark, evalDir)(
       StreamingSemanticDecontam.buildIndex(evals(5 to 6))

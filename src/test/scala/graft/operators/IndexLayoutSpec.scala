@@ -72,7 +72,6 @@ class IndexLayoutSpec extends AnyFunSuite {
       assertRangeDisjoint(s"${ReleaseFlow.neardupDir(base)}/bands",
         "band_id", "bkey")
       assertRangeDisjoint(s"${ReleaseFlow.substrDir(base)}/span_grams", "gram")
-      assertRangeDisjoint(s"${ReleaseFlow.winnowDir(base)}/winnow_fp_v2", "h")
     }
     multiFile {
       ReleaseFlow.init(corpus, base)
@@ -92,8 +91,7 @@ class IndexLayoutSpec extends AnyFunSuite {
       (ReleaseFlow.dedupDir _, "content_hashes", Seq("h")),
       (ReleaseFlow.neardupDir _, "sketch", Seq("doc_id")),
       (ReleaseFlow.neardupDir _, "bands", Seq("band_id", "bkey")),
-      (ReleaseFlow.substrDir _, "span_grams", Seq("gram")),
-      (ReleaseFlow.winnowDir _, "winnow_fp_v2", Seq("h")))
+      (ReleaseFlow.substrDir _, "span_grams", Seq("gram")))
     def rows(base: String): Seq[Seq[String]] = artifacts.map { case (d, sub, _) =>
       Compaction.readLive(spark, s"${d(base)}/$sub").collect()
         .map(_.toString).sorted.toSeq

@@ -117,9 +117,6 @@ class ReleaseFlowSpec extends AnyFunSuite {
       rows(DedupIndex.build(union)), "hash index")
     assert(rows(SubstringIndex.read(spark, ReleaseFlow.substrDir(base))) ===
       rows(SubstringIndex.build(union)), "substring index")
-    assert(rows(WinnowIndex.read(spark, ReleaseFlow.winnowDir(base))) ===
-      rows(WinnowIndex.build(union)),
-      "winnow index — the tier's coverage invariant as an equality")
     val persisted = StreamingNearDup.readIndex(spark, ReleaseFlow.neardupDir(base))
     val rebuilt = StreamingNearDup.buildIndex(union)
     assert(rows(persisted.bands) === rows(rebuilt.bands), "band index")
@@ -215,18 +212,13 @@ class ReleaseFlowSpec extends AnyFunSuite {
 
   test("release decisions ARE the streaming pipeline's decisions: " +
       "AdmissionPipeline.decide over the same persisted gates labels " +
-      "every shard row identically (one decision function, two callers) " +
-      "— and with release run tier-ON while these gates are untiered, " +
-      "it also pins tier-on ≡ tier-off at release grain") {
+      "every shard row identically (one decision function, two callers)") {
     import graft.streaming.{AdmissionPipeline, StreamingNearDup, StreamingSubstring}
     val base = tmp("graft_release_parity")
     val (corpus, shard, _, _, _) = fixture()
     ReleaseFlow.init(corpus, base)
     // the streaming-side decision, built from the SAME artifacts the
-    // release reads — computed BEFORE release mutates them. Deliberately
-    // NO corpusWinnow here while release() below runs tieredVerbatim =
-    // true, so the equality is also the tier's decision-identity proof
-    // on real-corpus data (the knob's contract).
+    // release reads — computed BEFORE release mutates them
     val gates = AdmissionPipeline.Gates(
       StreamingNearDup.readIndex(spark, ReleaseFlow.neardupDir(base)),
       spark.emptyDataFrame.select(lit(0L).as("gram")).limit(0),
@@ -239,36 +231,11 @@ class ReleaseFlowSpec extends AnyFunSuite {
         .withColumn("n_chars", length(col("text")).cast("long")), gates)
       .select("doc_id", "reason").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
-    val releaseSide = ReleaseFlow.release(spark, shard, base,
-        ReleaseFlow.Screens(tieredVerbatim = true))
+    val releaseSide = ReleaseFlow.release(spark, shard, base)
       .select("doc_id", "decision").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(releaseSide === streamSide,
       "ingest-time and release-time decisions must read identically")
-  }
-
-  test("tieredVerbatim is a pure cost knob: release and releaseCut " +
-      "label (and cut) identically in both modes over the same init") {
-    val baseT = tmp("graft_release_tier_on")
-    val baseE = tmp("graft_release_tier_off")
-    val (corpus, shard, _, _, _) = fixture()
-    ReleaseFlow.init(corpus, baseT)
-    ReleaseFlow.init(corpus, baseE)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_id", "decision", "n_cut_tokens", "text").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-          r.getString(3))).toSet
-    val tiered = rows(ReleaseFlow.releaseCut(spark, shard, baseT,
-      ReleaseFlow.Screens(tieredVerbatim = true)))
-    val exact = rows(ReleaseFlow.releaseCut(spark, shard, baseE))
-    assert(tiered === exact,
-      "cut + decision must be identical under either probe mode")
-    // and the artifacts the two releases appended must agree too —
-    // same admitted slice, same cleaned bytes
-    def hashes(b: String) =
-      DedupIndex.read(spark, ReleaseFlow.dedupDir(b))
-        .collect().map(_.toString).toSet
-    assert(hashes(baseT) === hashes(baseE))
   }
 
   test("releaseCut cures a span-lifting doc (cut + admit with cleaned " +

@@ -41,7 +41,6 @@ class RetractSpec extends AnyFunSuite {
   private def artifacts(base: String): Map[String, Map[String, Int]] = Map(
     "dedup" -> rowsOf(DedupIndex.read(spark, ReleaseFlow.dedupDir(base))),
     "substr" -> rowsOf(SubstringIndex.read(spark, ReleaseFlow.substrDir(base))),
-    "winnow" -> rowsOf(WinnowIndex.read(spark, ReleaseFlow.winnowDir(base))),
     "sketch" -> rowsOf(StreamingNearDup
       .readIndex(spark, ReleaseFlow.neardupDir(base)).sketch),
     "bands" -> rowsOf(StreamingNearDup
@@ -204,7 +203,7 @@ class RetractSpec extends AnyFunSuite {
 
     // doc artifacts: back to the pre-release multisets exactly
     assert(artifacts(base) === pristine,
-      "retractAll must restore the four doc artifacts")
+      "retractAll must restore the doc artifacts")
     // ANN: equal to a complement rebuild (same centroids for IVF —
     // retraction never retrains, so compare the band index exactly and
     // the inverted lists' surviving id set)
