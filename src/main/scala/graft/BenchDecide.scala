@@ -47,7 +47,9 @@ object BenchDecide {
       println(f"[decide-arm] $label%-28s min ${ts.min}%6.3f s  shots ${ts.map(t => f"$t%.3f").mkString(" ")}")
     }
 
-    val batchOwned = shard.select(col("doc_id").as("corpus_id")).distinct()
+    // the guarded arms' batch-id frame exactly as decide() builds it: the
+    // pin's own column, no `distinct`
+    val batchOwned = shard.select(col("doc_id").as("corpus_id"))
     minOf("full_decide") { AdmissionPipeline.decide(shard, gates) }
     minOf("arm_neardup_batch_form") {
       StreamingNearDup.screenBatch(shard, neardup, keep = Nil)

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** S9 — monitoring sink: persists per-batch streaming progress, the
@@ -11,7 +10,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * A `StreamingQueryListener` receives every microbatch's progress
   * (row counts, durations, event-time watermark) off the query thread
   * and appends it to a parquet audit table. Driver-side, tiny rows —
-  * the observability path adds no load to executors.
+  * the observability path adds no load to executors. The landing time
+  * enters through [[IngestPipeline.perBatch]], so every progress write
+  * runs the same generated classes.
   */
 final class ProgressSink(spark: SparkSession, path: String)
     extends StreamingQueryListener {
@@ -29,7 +30,7 @@ final class ProgressSink(spark: SparkSession, path: String)
       Option(p.eventTime.get("watermark")).getOrElse(""))))
       .toDF("query_id", "batch_id", "trigger_ts", "num_input_rows",
         "trigger_ms", "watermark")
-      .withColumn("recorded_at", current_timestamp())
+      .withColumn("recorded_at", IngestPipeline.perBatch(java.time.Instant.now()))
       .write.mode("append").parquet(path)
   }
 }

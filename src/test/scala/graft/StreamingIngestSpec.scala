@@ -300,12 +300,18 @@ class StreamingIngestSpec extends AnyFunSuite {
 
   /** A Kafka-shaped batch of `n` corrupted products at offsets above
     * `offsetBase`, read back as the frame the stream hands `processBatch`. */
-  private def productBatch(n: Long, seed: Long, offsetBase: Long): org.apache.spark.sql.DataFrame = {
-    val in = tmp()
-    KafkaShaped.writeTopicFile(
-      Corruptions.products(Generator.products(spark, n, seed), 0.3, seed + 1),
-      "product_id", "products", 3, offsetBase, in)
-    spark.read.schema(KafkaShaped.schema).json(in)
+  private def productBatch(n: Long, seed: Long, offsetBase: Long): org.apache.spark.sql.DataFrame =
+    spark.read.schema(KafkaShaped.schema).json(productFiles(tmp(), n, seed -> offsetBase))
+
+  /** One topic file of `n` corrupted products per (seed, offsetBase) in
+    * `dir`; the same pair always writes the same records at the same
+    * offsets, so writing a pair again redelivers them. */
+  private def productFiles(dir: String, n: Long, files: (Long, Long)*): String = {
+    for ((seed, offsetBase) <- files)
+      KafkaShaped.writeTopicFile(
+        Corruptions.products(Generator.products(spark, n, seed), 0.3, seed + 1),
+        "product_id", "products", 3, offsetBase, dir)
+    dir
   }
 
   private def offsets(df: org.apache.spark.sql.DataFrame): Seq[(Int, Long)] =
@@ -317,6 +323,15 @@ class StreamingIngestSpec extends AnyFunSuite {
       batchId: Long, normalizedBuckets: Option[Int] = None): Unit =
     IngestPipeline.processBatch(batch, batchId, sinks, productSchema, "product_id",
       "created_at", Validation.productRules, normalizedBuckets = normalizedBuckets)
+
+  /** The classes Janino compiles while `body` runs. The counter is
+    * JVM-wide; suites run one at a time, so only this suite compiles. */
+  private def compilesOf(body: => Unit): Long = {
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    body
+    compiles.getCount - before
+  }
 
   /** The Spark jobs `body` runs on this thread and the threads it starts. */
   private def jobsOf(label: String)(body: => Unit): Int = {
@@ -417,6 +432,98 @@ class StreamingIngestSpec extends AnyFunSuite {
     val norm = graft.streaming.PartitionedUpsert.readAll(spark, sinks.normalized,
       Buckets).get
     assert(norm.count() === norm.select("product_id").distinct().count())
+  }
+
+  test("a steady-state microbatch compiles no class: per-batch values stay out of generated code") {
+    // Batches 1 and 2 have one shape: fresh records plus a redelivery of
+    // the previous batch's records, so both take the lineage lookup and
+    // filter replays out of the raw and rejects appends. Batch 2 differs
+    // from batch 1 only in values (batch id, times, offsets).
+    val base = tmp()
+    val sinks = IngestPipeline.Sinks(s"$base/raw", s"$base/norm", s"$base/rej",
+      s"$base/stats", s"$base/ckpt")
+    def batch(files: (Long, Long)*) =
+      spark.read.schema(KafkaShaped.schema).json(productFiles(tmp(), 40, files: _*))
+    ingest(sinks, batch(75L -> 0L), 0)
+    ingest(sinks, batch(77L -> 1000L, 75L -> 0L), 1)
+    val third = batch(79L -> 2000L, 77L -> 1000L)
+
+    val compiles = compilesOf(ingest(sinks, third, 2))
+    assert(compiles === 0, s"$compiles classes compiled for a batch shaped like the last")
+    assert(spark.read.parquet(sinks.raw).count() === 120, "redelivered offsets land once")
+    assert(spark.read.parquet(sinks.stats).orderBy("batch_id").collect()
+      .map(r => (r.getAs[Long]("batch_id"), r.getAs[Long]("n_in"), r.getAs[Long]("n_fresh")))
+      .toSeq === Seq((0L, 40L, 40L), (1L, 80L, 40L), (2L, 80L, 40L)))
+  }
+
+  test("a restarted stream compiles no class for a batch shaped like its last run's last batch") {
+    // Each streaming query runs on its own cloned session; the generated
+    // classes its batches need were compiled by the previous run.
+    val in = tmp()
+    val base = tmp()
+    val sinks = IngestPipeline.Sinks(s"$base/raw", s"$base/norm", s"$base/rej",
+      s"$base/stats", s"$base/ckpt")
+    val listener = Monitoring.attach(spark, s"$base/progress")
+    def run(): Unit = {
+      IngestPipeline.start(spark, in, sinks, productSchema, "product_id", "created_at",
+        Validation.productRules, maxFilesPerTrigger = Some(1)).awaitTermination()
+      org.apache.spark.graftbridge.ListenerBus.drain(spark.sparkContext)
+    }
+    try {
+      productFiles(in, 40, 75L -> 0L)
+      productFiles(in, 40, 77L -> 1000L)
+      run()
+      assert(spark.read.parquet(sinks.stats).count() === 2)
+      productFiles(in, 40, 79L -> 2000L)
+
+      val compiles = compilesOf(run())
+      assert(compiles === 0, s"$compiles classes compiled by the restarted stream")
+      assert(spark.read.parquet(sinks.stats).count() === 3)
+      assert(spark.read.parquet(sinks.raw).count() === 120)
+      assert(spark.read.parquet(s"$base/progress").count() === 3)
+    } finally spark.streams.removeListener(listener)
+  }
+
+  test("the raw, rejects, normalized, stats and progress sinks keep their written schemas") {
+    val in = tmp()
+    val base = tmp()
+    val sinks = IngestPipeline.Sinks(s"$base/raw", s"$base/norm", s"$base/rej",
+      s"$base/stats", s"$base/ckpt")
+    val listener = Monitoring.attach(spark, s"$base/progress")
+    try {
+      productFiles(in, 40, 75L -> 0L)
+      IngestPipeline.start(spark, in, sinks, productSchema, "product_id", "created_at",
+        Validation.productRules).awaitTermination()
+      org.apache.spark.graftbridge.ListenerBus.drain(spark.sparkContext)
+    } finally spark.streams.removeListener(listener)
+    // The schema each file was written with, nullability included (a
+    // parquet read makes every column nullable).
+    def written(dir: String): Seq[String] = {
+      val hconf = spark.sparkContext.hadoopConfiguration
+      val d = new org.apache.hadoop.fs.Path(dir)
+      val f = d.getFileSystem(hconf).listStatus(d).map(_.getPath)
+        .filter(_.getName.endsWith(".parquet")).head
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, hconf))
+      val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata") finally reader.close()
+      org.apache.spark.sql.types.DataType.fromJson(json)
+        .asInstanceOf[org.apache.spark.sql.types.StructType].fields.toSeq
+        .map(f => s"${f.name} ${f.dataType.simpleString}${if (f.nullable) "" else " not null"}")
+    }
+    val entity = Seq("product_id string", "name string", "category string",
+      "price double", "stock_quantity int", "created_at timestamp")
+    assert(written(sinks.raw) === Seq("key string", "value string", "topic string",
+      "partition int", "offset bigint", "timestamp timestamp", "consumed_at timestamp not null"))
+    assert(written(sinks.rejects) === Seq("partition int", "offset bigint") ++ entity ++
+      Seq("violations array<string> not null", "batch_id bigint not null"))
+    assert(written(sinks.normalized) === Seq("product_id string", "_src_offset bigint") ++
+      entity.tail :+ "last_modified timestamp")
+    assert(written(sinks.stats) === Seq("batch_id", "n_in", "n_fresh", "n_valid", "n_rejects",
+      "duration_ms").map(c => s"$c bigint not null") :+ "recorded_at timestamp not null")
+    assert(written(s"$base/progress") === Seq("query_id string", "batch_id bigint not null",
+      "trigger_ts string", "num_input_rows bigint not null", "trigger_ms bigint not null",
+      "watermark string", "recorded_at timestamp not null"))
   }
 
   test("a batch mixing replayed and fresh offsets lands exactly the fresh rows") {
