@@ -90,8 +90,8 @@ object Report {
     val recent = operators.ValidationQueries.t2.fn(spark, sfDir)
       .orderBy(col("win_start_us").desc).limit(24).orderBy("win_start_us")
     // near-dup pair frame computed once for the two panels that read it
-    // (lazy val initialization is synchronized, so the concurrent
-    // panel builds below race safely to ONE materialization)
+    // (Tables.shared builds and pins it once, so the concurrent panel
+    // builds below race safely to ONE materialization)
     lazy val sharedPairs = operators.LlmQueries.sharedPairs(spark, sfDir)
     val panelDefs: Seq[(String, () => String)] = Seq(
       "revenue_trend" -> (() => rowsJson(trend)),
@@ -169,9 +169,9 @@ object Report {
       "vocab_growth" -> (() => rowsJson(operators.AuditQueries.l75.fn(spark, sfDir))),
       "pii_by_source" -> (() => rowsJson(operators.AuditQueries.l78.fn(spark, sfDir))))
     // Build the panels CONCURRENTLY ([[operators.Par]]): each is an
-    // independent bounded collect, the shared-subtree memos are
-    // ConcurrentHashMaps (one materialization however many panels
-    // race), and Spark's scheduler
+    // independent bounded collect, the shared subtrees come from
+    // graft.Tables.shared, which builds and pins each key once (one
+    // materialization however many panels race), and Spark's scheduler
     // interleaves the jobs — a sequential build leaves the cluster idle
     // between one panel's stages and the next's (cold sf0.1 build
     // measured ~31 s sequential → ~12 s at width 8 on local[32]).

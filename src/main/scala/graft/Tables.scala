@@ -8,9 +8,11 @@ import org.apache.spark.sql.functions._
   *
   * All readers are plain `spark.read.parquet` scans — column pruning and
   * predicate pushdown reach the parquet footer (verify with
-  * `.explain("formatted")`: `PushedFilters`, `ReadSchema`). No caching at
-  * this layer: at 100 TB a table does not fit in memory and every query
-  * should prune its own columns.
+  * `.explain("formatted")`: `PushedFilters`, `ReadSchema`). No table is
+  * cached: at 100 TB a table does not fit in memory and every query
+  * should prune its own columns. What this layer does memoize per
+  * snapshot is metadata (schemas, row counts) and the few derived
+  * frames several queries share ([[shared]]).
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -92,7 +94,7 @@ object Tables {
     * the path — memoized once per JVM. A pipeline whose input actually
     * changes must publish a NEW snapshot path (the versioned-directory
     * philosophy [[graft.operators.AnnIndexes.retrainIvf]] applies to
-    * data too) or call [[invalidateRowCounts]]. */
+    * data too) or call [[invalidateCaches]]. */
   private val rowCounts =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
@@ -100,12 +102,38 @@ object Tables {
     rowCounts.computeIfAbsent(s"$dir/$name",
       _ => table(spark, dir, name).count())
 
-  def invalidateRowCounts(): Unit = rowCounts.clear()
+  /** One eagerly pinned frame per key. The `lazy val` runs the build
+    * and its checkpoint outside the map's lock, so a build may read
+    * another shared frame (nested `computeIfAbsent` on one map throws
+    * "Recursive update"), and concurrent callers block on the holder
+    * until the one build lands. */
+  private final class Pin(build: () => DataFrame) {
+    lazy val frame: DataFrame = build().localCheckpoint()
+  }
+  private val pins =
+    new java.util.concurrent.ConcurrentHashMap[(String, String, String), Pin]()
 
-  /** Drop BOTH memo layers (schemas and row counts). The memos' contract
-    * is immutable snapshot paths, but round 10 proved the testdata CAN be
-    * regenerated in place under a warm JVM — after any suspected in-place
-    * rewrite (e.g. the schema-drift canary firing), call this so the next
-    * construction re-infers from the live footers. */
-  def invalidateCaches(): Unit = { schemas.clear(); rowCounts.clear() }
+  /** The frame `build` derives from the snapshot at `dir`, computed and
+    * checkpointed ONCE per (application, dir, name) however many
+    * consumers — or concurrent [[graft.Report]] panels — ask: every
+    * reader gets the same instance over fully cached partitions, so no
+    * reader re-runs its lineage or races another to fill the cache. The
+    * build must be a deterministic function of the snapshot (same
+    * immutable-path contract as [[rowCount]]), so a memo read cannot
+    * differ from a rebuild. The application id keeps a dead context's
+    * frames from leaking into a fresh one. */
+  def shared(spark: SparkSession, dir: String, name: String)(
+      build: => DataFrame): DataFrame =
+    pins.computeIfAbsent((spark.sparkContext.applicationId, dir, name),
+      _ => new Pin(() => build)).frame
+
+  /** Drop every memo layer (schemas, row counts and [[shared]] frames).
+    * The memos' contract is immutable snapshot paths, but round 10
+    * proved the testdata CAN be regenerated in place under a warm JVM —
+    * after any suspected in-place rewrite (e.g. the schema-drift canary
+    * firing), call this so the next construction re-infers from the
+    * live footers and rebuilds each shared frame from the live rows. */
+  def invalidateCaches(): Unit = {
+    schemas.clear(); rowCounts.clear(); pins.clear()
+  }
 }

@@ -191,18 +191,17 @@ object Ivf {
     require(probeSuper >= 1, s"assignCoarse: probeSuper >= 1, got $probeSuper")
     val s = math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
     // level 0: cluster the centroids themselves (k rows, broadcast-
-    // sized) into s super-cells with the same seeded Lloyd. LAZY
-    // localCheckpoints pin the level-0 frames to ONE computation: the
+    // sized) into s super-cells with the same seeded Lloyd. The
+    // checkpoints pin the level-0 frames to ONE computation: the
     // plan references them three times (membership, the live-super
     // filter, the per-vector pass) and without the pin each reference
     // re-runs the Lloyd subtree — measured as ~⅔ of the coarse path's
-    // cost at the 100× rung. Lazy, so plan construction stays
-    // action-free; the cached frames are ≤ k rows.
+    // cost at the 100× rung. The cached frames are ≤ k rows.
     val cvecs = centroids.select(col("cid").cast("long").as("vec_id"),
       col("cv").as("v"))
     val supers0 = train(cvecs, s, superIters)
       .select(col("cid").as("sid"), col("cv").as("sv"))
-      .localCheckpoint(false)
+      .localCheckpoint()
     // membership: each centroid's nearest super-cell — exact, k·s dots
     val members = cvecs.crossJoin(broadcast(supers0))
       .withColumn("d2", dist2(col("v"), col("sv")))
@@ -210,7 +209,7 @@ object Ivf {
       .agg(min_by(col("sid"), struct(col("d2"), col("sid"))).as("sid"),
         first(col("v")).as("cv"))
       .select(col("sid"), col("vec_id").cast("int").as("cid"), col("cv"))
-      .localCheckpoint(false)
+      .localCheckpoint()
     // only super-cells that won ≥1 centroid are probe-able — an empty
     // super nearest to some vector must not strand it memberless
     val supers = supers0.join(members.select("sid").distinct(),

@@ -240,7 +240,7 @@ object AuditQueries {
     val trainGrams = corpus.filter(col("split") === "train")
       .transform(SamplingQueries.docGramsK(_, Seq("doc_id"), k,
         hashed = false))
-      .localCheckpoint(false) // probed twice (both leak directions)
+      .localCheckpoint() // probed twice (both leak directions)
     val hitTrain = trainGrams.join(broadcast(suiteGrams), Seq("gram"))
       .select("suite", "doc_id").distinct()
     val hitEval = trainGrams.select("gram")
@@ -1285,7 +1285,7 @@ object AuditQueries {
       val media = basem.unionByName(pert).unionByName(bytec)
         .withColumn("hx", sha2(col("payload"), 256))
         .withColumn("sig", graft.functions.Multimodal.sigCol(col("payload")))
-        .localCheckpoint(false)
+        .localCheckpoint()
       val byteDup = media
         .join(media.groupBy("hx").agg(min("doc_id").as("_mn")), Seq("hx"))
         .filter(col("doc_id") > col("_mn"))

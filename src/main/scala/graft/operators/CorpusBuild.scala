@@ -46,7 +46,7 @@ import graft.streaming.AdmissionPipeline
   *
   * Scale shape: every stage is the standalone component's own plan —
   * nothing new executes here. The only additions are the ledger union
-  * (a per-doc projection per stage) and one lazy checkpoint of the
+  * (a per-doc projection per stage) and one checkpoint of the
   * survivor slice (consumed by the manifest rollup AND the shard
   * writer — same discipline as [[ReleaseFlow.release]]'s decision
   * pin).

@@ -69,17 +69,14 @@ object CorpusBuildQueries {
     s"${sys.props("java.io.tmpdir")}/graft_build_gate_" +
       s"${ReleaseQueries.nonce}_${d.replaceAll("[^A-Za-z0-9.]", "_")}"
 
-  /** One SOLO frame per (JVM, source dir), shared by [[c1]] and
-    * [[c2]]: clean held-out docs ([[ReleaseQueries.cleanHeld]]) that
-    * also share no 8-gram with any OTHER clean doc — the intra-shard
+  /** One SOLO frame per snapshot ([[graft.Tables.shared]]), shared by
+    * [[c1]] and [[c2]]: clean held-out docs ([[ReleaseQueries.cleanHeld]],
+    * itself shared, built inside this build on a cold memo) that also
+    * share no 8-gram with any OTHER clean doc — the intra-shard
     * determinism filter. The gram self-join is fixture machinery worth
-    * paying once per source dir, not per gate (the same memo
-    * discipline as the shared init). Lazy checkpoint; the first gate
-    * materializes it. */
-  private val soloMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private def soloFrame(s: SparkSession, d: String): DataFrame =
-    soloMemo.computeIfAbsent(s.sparkContext.applicationId + ":" + d, _ => {
+    * paying once per source dir, not per gate. */
+  private[operators] def soloFrame(s: SparkSession, d: String): DataFrame =
+    Tables.shared(s, d, "solo") {
       val clean = ReleaseQueries.cleanHeld(s, d)
       val cleanG = SamplingQueries.docGramsK(clean, Seq("doc_id"), 8,
         hashed = false)
@@ -87,8 +84,8 @@ object CorpusBuildQueries {
         .join(cleanG.as("b"), col("a.gram") === col("b.gram") &&
           col("a.doc_id") =!= col("b.doc_id"))
         .select(col("a.doc_id").as("doc_id")).distinct()
-      clean.join(sharedIds, Seq("doc_id"), "left_anti").localCheckpoint(false)
-    })
+      clean.join(sharedIds, Seq("doc_id"), "left_anti")
+    }
 
   /** The build's complete accounting as ONE oracle-comparable frame:
     * ledger rollup per (stage, outcome, lang) — cleanse/gate/curation/

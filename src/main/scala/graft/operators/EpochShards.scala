@@ -83,8 +83,7 @@ object EpochShards {
     * it. */
   def retractShards(spark: SparkSession, ids: DataFrame, epoch: Int,
       base: String): Unit =
-    retractShardsPinned(spark,
-      ids.select("doc_id").distinct().localCheckpoint(), epoch, base)
+    retractShardsPinned(spark, IndexArtifact.pinIds(ids), epoch, base)
 
   /** [[retractShards]] for an already-materialized id frame (the
     * [[ReleaseFlow.retractAll]] one-pin discipline). */
@@ -155,8 +154,7 @@ object EpochShards {
     * phase-major replay order included. */
   def retractCurriculumShards(spark: SparkSession, ids: DataFrame,
       base: String): Unit =
-    retractCurriculumShardsPinned(spark,
-      ids.select("doc_id").distinct().localCheckpoint(), base)
+    retractCurriculumShardsPinned(spark, IndexArtifact.pinIds(ids), base)
 
   private[graft] def retractCurriculumShardsPinned(spark: SparkSession,
       pinned: DataFrame, base: String): Unit =

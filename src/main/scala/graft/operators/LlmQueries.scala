@@ -540,57 +540,35 @@ object LlmQueries {
       .select("ida", "idb", "jac_e4")
   }
 
-  /** ONE checkpointed verified-pair frame per corpus snapshot, shared
-    * by every consumer of the sketch pipeline — l9's accounting, l28's
-    * closure, l29's curation, [[graft.Report]]'s panels. Before the
-    * memo each of the three catalog queries re-ran the whole
-    * shingle→signature→band→Jaccard subtree from scratch (~9 s of the
-    * sf0.1 gate total combined); now the FIRST action over any of them
-    * materializes the lazy localCheckpoint once and the rest read the
-    * materialized rows — which is also the 100 TB production shape
-    * (sketch a corpus snapshot once, let every downstream decision
-    * consume the same verified pairs). The pipeline is deterministic,
-    * so a replay from the memo cannot differ from a rebuild — the
-    * three queries' CORRECTNESS rows are pinned unchanged.
-    *
-    * Keyed by (applicationId, dir): the dir is an immutable snapshot
-    * (same contract as [[graft.Tables.rowCount]]), and the appId guard
-    * keeps a dead context's frames from leaking into a fresh one. The
-    * checkpoint is LAZY so query construction stays action-free. */
-  private val pairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+  /** ONE checkpointed verified-pair frame per corpus snapshot
+    * ([[graft.Tables.shared]]), shared by every consumer of the sketch
+    * pipeline — l9's accounting, l28's closure, l29's curation,
+    * [[graft.Report]]'s panels. Without it each of the three catalog
+    * queries re-ran the whole shingle→signature→band→Jaccard subtree
+    * from scratch (~9 s of the sf0.1 gate total combined) — and the
+    * production shape is the same: sketch a corpus snapshot once, let
+    * every downstream decision consume the same verified pairs. The
+    * three queries' CORRECTNESS rows are pinned unchanged. */
   private[graft] def sharedPairs(s: SparkSession, d: String): DataFrame =
-    pairsMemo.computeIfAbsent(s.sparkContext.applicationId + ":" + d,
-      _ => candidatePairs(planted(docs(s, d))).localCheckpoint(eager = false))
+    Tables.shared(s, d, "pairs")(candidatePairs(planted(docs(s, d))))
 
   /** The trained IVF centroid frame for the RAW embeddings snapshot,
-    * shared and checkpointed under the same (appId, dir) memo
-    * discipline as [[sharedPairs]] and for the same reason: l26's
-    * cell self-join references the centroids on BOTH sides, and an
+    * shared like [[sharedPairs]] and for the same reason: l26's cell
+    * self-join references the centroids on BOTH sides, and an
     * un-materialized reference re-executes the whole Lloyd fold
     * (exchange reuse collapses only part of it — the executed plan
     * carried 69 corpus-scan nodes; memo + checkpoint measured
-    * 2.93 → 2.08 s at sf0.1). Training is deterministic (seeded
-    * init, fixed fold), so a memo read cannot differ from a rebuild.
-    * NOTE (AQE): even a LAZY localCheckpoint executes the plan's
-    * intermediate stages at CONSTRUCTION under adaptive execution, so
-    * the first construction per JVM launches the training jobs —
-    * exactly like [[sharedPairs]]; every later construction is
-    * action-free (PlanSpec pins the warm path). */
-  private val centroidsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+    * 2.93 → 2.08 s at sf0.1). The first construction per JVM trains;
+    * every later one is action-free (PlanSpec pins the warm path). */
   private[graft] def sharedIvfCentroids(s: SparkSession, d: String): DataFrame =
-    centroidsMemo.computeIfAbsent(s.sparkContext.applicationId + ":" + d, _ => {
+    Tables.shared(s, d, "ivfCentroids") {
       val raw = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val n = Tables.rowCount(s, d, "embeddings")
       // trainSampled = the production path: identical below the sample
       // budget (every tested corpus), bounded Lloyd cost past the cap
       Ivf.trainSampled(raw, k = Ivf.cellCount(n), iters = 2, n = n)
-        .localCheckpoint(eager = false)
-    })
+    }
 
   /** The k that sized [[sharedIvfCentroids]]' training run — what the
     * memo's assignment consumers hand to [[Ivf.assignAuto]] so the
@@ -1737,9 +1715,9 @@ object LlmQueries {
       val e = plantedVecs(embs(s, d))
       // shared cell-size selector: k ∝ n keeps the per-cell quadratic
       // term (~n²/2k) LINEAR in the corpus — the scale claim below.
-      // Centroids come from the shared (appId, dir)-memoized
-      // checkpointed frame — see sharedIvfCentroids for why the
-      // self-join below needs the materialization.
+      // Centroids come from the shared checkpointed frame — see
+      // sharedIvfCentroids for why the self-join below needs the
+      // materialization.
       val centroids = sharedIvfCentroids(s, d)
       val cells = assignFn(e, centroids)
         .join(hyperplaneSig(e, hyperplanes64).select("vec_id", "sig"), "vec_id")

@@ -143,17 +143,14 @@ object ReleaseQueries {
   private[operators] def inCorpus =
     substring(md5(concat(col("doc_id").cast("string"), lit(":r1"))), 1, 4) < "c000"
 
-  /** ONE checkpointed CLEAN held-out frame per (app, source dir) —
-    * r1, r2 and c1 all derive the identical set (held-out docs sharing
-    * no 8-token gram with the corpus, the oracle-replayed determinism
-    * filter), so the corpus-gram explode + anti-join chain prices once
-    * per JVM instead of once per gate ([[LlmQueries.sharedPairs]]'s
-    * memo discipline; deterministic, so a memo read cannot differ from
-    * a rebuild). Columns: (lang, doc_id, text, ta). */
-  private val cleanMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  /** ONE checkpointed CLEAN held-out frame per snapshot
+    * ([[graft.Tables.shared]]) — r1, r2 and c1 all derive the identical
+    * set (held-out docs sharing no 8-token gram with the corpus, the
+    * oracle-replayed determinism filter), so the corpus-gram explode +
+    * anti-join chain prices once per JVM instead of once per gate.
+    * Columns: (lang, doc_id, text, ta). */
   private[operators] def cleanHeld(s: SparkSession, d: String): DataFrame =
-    cleanMemo.computeIfAbsent(s.sparkContext.applicationId + ":" + d, _ => {
+    Tables.shared(s, d, "cleanHeld") {
       val all = docs(s, d).filter(col("text").isNotNull)
         .select(col("lang"), col("doc_id"), col("text"))
         .withColumn("ta", split(lower(col("text")), "\\s+"))
@@ -165,8 +162,8 @@ object ReleaseQueries {
           hashed = false)
         .join(corpusG8, Seq("gram"), "left_semi")
         .select("doc_id").distinct()
-      held.join(dirty, Seq("doc_id"), "left_anti").localCheckpoint(false)
-    })
+      held.join(dirty, Seq("doc_id"), "left_anti")
+    }
 
   /** One internal space doubled after the first space — the token
     * array (split on \s+) is unchanged, so the MinHash sketch is

@@ -642,24 +642,16 @@ object SamplingQueries {
   }
 
   /** ONE checkpointed positional string-gram frame of the PLANTED
-    * corpus per snapshot, shared by every SpanK-gram consumer — l33's
-    * span accounting, l64/l65's ExactSubstr cuts, l66's duplication
-    * profile. Same (appId, dir) memo discipline (and rationale) as
-    * [[LlmQueries.sharedPairs]]: before the memo each of the four
-    * catalog queries re-ran the tokenize + posexplode + 15-gram build
-    * from scratch; now the first action materializes the lazy
-    * checkpoint once and the rest read rows — which is also the
-    * production shape (the gram frame IS the persisted
-    * [[SubstringIndex]]; this is its single-job stand-in). The frame
-    * is a deterministic pure function of the snapshot, so a memo read
-    * cannot differ from a rebuild. */
-  private val plantedGramsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+    * corpus per snapshot ([[graft.Tables.shared]]), shared by every
+    * SpanK-gram consumer — l33's span accounting, l64/l65's ExactSubstr
+    * cuts, l66's duplication profile, [[graft.Report]]'s panels.
+    * Without it each of the four catalog queries re-ran the tokenize +
+    * posexplode + 15-gram build from scratch; the production shape is
+    * the same (the gram frame IS the persisted [[SubstringIndex]]; this
+    * is its single-job stand-in). */
   private[graft] def sharedPlantedGrams(s: SparkSession, d: String): DataFrame =
-    plantedGramsMemo.computeIfAbsent(s.sparkContext.applicationId + ":" + d,
-      _ => spanGrams(LlmQueries.plantedFull(docs(s, d)), SpanK,
-        hashed = false).localCheckpoint(eager = false))
+    Tables.shared(s, d, "plantedGrams")(
+      spanGrams(LlmQueries.plantedFull(docs(s, d)), SpanK, hashed = false))
 
   /** The PROBE half of l33, factored so the gram frame can come from
     * either the in-job checkpoint ([[substringSpans]]) or the persisted

@@ -149,7 +149,7 @@ object AdmissionPipeline {
       plan: DataFrame => DataFrame): DataFrame = {
     val pinned = LlmQueries.withGatePre(withNChars(df)
         .withColumn(LlmQueries.PreTokens, split(lower(col("text")), "\\s+")))
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = false) // lazy: Par.deferred lands it first
     // the one job an eager checkpoint runs inline: computing every
     // partition caches it and truncates the lineage
     val landed = Par.deferred(Seq(() => pinned.queryExecution.toRdd.count()))

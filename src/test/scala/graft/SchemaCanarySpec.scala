@@ -109,21 +109,33 @@ class SchemaCanarySpec extends AnyFunSuite {
   test("invalidateCaches makes a rewritten-in-place snapshot re-infer") {
     val dir = java.nio.file.Files.createTempDirectory("canary2").toString
     val path = s"$dir/documents.parquet"
-    spark.range(3).selectExpr("id AS doc_id", "'t' AS text", "'en' AS lang",
+    // 20 distinct words per doc, so the shared span-gram frame has rows
+    val text = "concat_ws(' ', transform(sequence(1, 20), " +
+      "i -> concat('w', id, '_', i))) AS text"
+    spark.range(3).selectExpr("id AS doc_id", text, "'en' AS lang",
         "'web' AS source", "id AS n_chars")
       .write.mode("overwrite").parquet(path)
     assert(Tables.table(spark, dir, "documents").schema("n_chars").dataType == LongType)
     assert(Tables.rowCount(spark, dir, "documents") == 3L)
+    def grams() = operators.SamplingQueries.sharedPlantedGrams(spark, dir)
+    val gramsBefore = grams().count()
     // in-place rewrite (exactly what the driver did in round 10)
-    spark.range(5).selectExpr("id AS doc_id", "'t' AS text", "'en' AS lang",
+    spark.range(5).selectExpr("id AS doc_id", text, "'en' AS lang",
         "'web' AS source", "CAST(id AS STRING) AS n_chars")
       .write.mode("overwrite").parquet(path)
-    // memoized: still the OLD schema and count by design…
+    // memoized: still the OLD schema, count and shared frame by design…
     assert(Tables.table(spark, dir, "documents").schema("n_chars").dataType == LongType)
     assert(Tables.rowCount(spark, dir, "documents") == 3L)
-    // …until both memo layers are dropped in one call
+    assert(grams().count() == gramsBefore)
+    // …until every memo layer is dropped in one call
     Tables.invalidateCaches()
     assert(Tables.table(spark, dir, "documents").schema("n_chars").dataType == StringType)
     assert(Tables.rowCount(spark, dir, "documents") == 5L)
+    val rebuilt = operators.SamplingQueries.spanGrams(
+      operators.LlmQueries.plantedFull(Tables.documents(spark, dir)),
+      operators.SamplingQueries.SpanK, hashed = false).count()
+    assert(rebuilt > gramsBefore)
+    assert(grams().count() == rebuilt,
+      "the shared frame still holds the rows of the rewritten snapshot")
   }
 }

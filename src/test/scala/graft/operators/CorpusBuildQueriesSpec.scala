@@ -112,6 +112,20 @@ class CorpusBuildQueriesSpec extends AnyFunSuite {
     assert(curation.nonEmpty, "planted pairs must reach curation")
   }
 
+  test("c1 on a cold memo: the solo frame builds the shared clean frame " +
+      "inside its own build, and the output matches the warm snapshot's") {
+    // a snapshot no spec has read: c1's soloFrame call finds neither
+    // shared frame built, so one memo build runs inside another
+    val cold = java.nio.file.Files.createTempDirectory("c1_cold")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/documents.parquet"),
+      cold.resolve("documents.parquet"))
+    def rows(d: String) =
+      CorpusBuildQueries.c1.fn(spark, d).collect().map(_.toString).sorted.toSeq
+    assert(rows(cold.toString) === rows(sf))
+    assert(CorpusBuildQueries.soloFrame(spark, cold.toString) eq
+      CorpusBuildQueries.soloFrame(spark, cold.toString))
+  }
+
   test("c2's cleansing build is non-degenerate at sf0.001 — every stage " +
       "fires: cleaned_out pages, a low_quality gate class, curation " +
       "twins, and a manifest — and the twin pairs converge to byte-equal " +

@@ -2,6 +2,8 @@ package graft.operators
 
 import graft.{Session, Tables}
 import graft.functions.{MinHash, SimHash}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -195,10 +197,38 @@ class LshSpec extends AnyFunSuite {
       s"no exchange reuse in l9's executed plan:\n${plan.take(2000)}")
   }
 
+  /** Whether `df`'s checkpoint RDD has every partition cached now. */
+  private def fullyCached(df: DataFrame): Boolean = {
+    val rdd = df.queryExecution.logical.collectFirst {
+      case r: LogicalRDD => r.rdd
+    }.getOrElse(fail(s"not a checkpointed frame:\n${df.queryExecution.logical}"))
+    rdd.getNumPartitions == 0 || spark.sparkContext.getRDDStorageInfo
+      .exists(i => i.id == rdd.id && i.numCachedPartitions == i.numPartitions)
+  }
+
   test("sharedPairs memo: one frame instance per corpus, and the memoized " +
       "l9 equals the from-scratch composition row-for-row") {
-    // same instance back → the sketch subtree is priced once per
-    // (context, dir) no matter how many consumers ask
+    // Every shared catalog frame, on a snapshot no spec has read yet:
+    // the accessor returns with its checkpoint fully cached (eager pin,
+    // so no consumer recomputes it or races another to fill it), and
+    // the same instance comes back, so the subtree is priced once per
+    // (context, dir) no matter how many consumers ask. The solo frame
+    // goes first: its build reads the clean frame, cold too.
+    val cold = java.nio.file.Files.createTempDirectory("shared_frames")
+    for (t <- Seq("documents", "embeddings"))
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/$t.parquet"),
+        cold.resolve(s"$t.parquet"))
+    val shared = Seq[(String, (SparkSession, String) => DataFrame)](
+      "solo" -> CorpusBuildQueries.soloFrame,
+      "cleanHeld" -> ReleaseQueries.cleanHeld,
+      "pairs" -> LlmQueries.sharedPairs,
+      "ivfCentroids" -> LlmQueries.sharedIvfCentroids,
+      "plantedGrams" -> SamplingQueries.sharedPlantedGrams)
+    for ((name, frame) <- shared) {
+      val df = frame(spark, cold.toString)
+      assert(fullyCached(df), s"$name: returned before its pin landed")
+      assert(frame(spark, cold.toString) eq df, s"$name: built twice")
+    }
     assert(LlmQueries.sharedPairs(spark, sf) eq LlmQueries.sharedPairs(spark, sf))
     val viaMemo = LlmQueries.l9.fn(spark, sf).collect().toSeq
     val scratch = LlmQueries.l9From(spark, sf,

@@ -6,7 +6,7 @@
 #   tools/gate.sh [--skip-bench] [--skip-test]
 #
 # Runs, in order, failing fast:
-#   1. sbt compile
+#   1. lazy-pin check + sbt compile
 #   2. sbt test                      (full ScalaTest suite)
 #   3. graft.Verify @ sf0.01 + DuckDB oracle compare  (the t2 gate)
 #   4. graft.Bench  @ sf0.1          (only if the box is quiet)
@@ -29,6 +29,16 @@ for a in "$@"; do
 done
 
 echo "== gate 1/4: compile =="
+# Pin discipline: a lazy localCheckpoint leaves its last stage to
+# whichever consumer reaches it first, so concurrent readers recompute
+# it. Every lazy pin must say on its own line why it is safe.
+LAZY=$(grep -rnE 'localCheckpoint\((false|eager *= *false)\)' src/main \
+  | grep -v '// lazy:' || true)
+if [[ -n "$LAZY" ]]; then
+  echo "lazy localCheckpoint without a '// lazy:' reason:" >&2
+  echo "$LAZY" >&2
+  exit 1
+fi
 sbt -batch compile
 
 if [[ "$SKIP_TEST" == 0 ]]; then
