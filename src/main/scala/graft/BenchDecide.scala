@@ -77,7 +77,7 @@ object BenchDecide {
     }
     minOf("arm_exact_hash") {
       shard.withColumn("_h", DedupIndex.contentHash)
-        .join(hashes.select(col("h").as("_h")).distinct(), Seq("_h"), "left_semi")
+        .join(hashes.select(col("h").as("_h")), Seq("_h"), "left_semi")
     }
     minOf("arm_quality_stats") {
       LlmQueries.withStopBp(shard)

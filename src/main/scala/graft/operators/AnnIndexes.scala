@@ -31,9 +31,11 @@ import graft.functions.{Ivf, SimHash, VectorOps}
   *    keys down as literal predicates, so row-group min/max stats on
   *    the clustered layout skip everything outside the query's 4 band
   *    values.
-  *  - IVF inverted lists are DIRECTORY-partitioned by cell id: a probe
-  *    touches `nprobe`/`k` of the index files by path pruning alone,
-  *    before any row is read. Centroids are a k-row side file.
+  *  - IVF inverted lists (fp64 and int8, one
+  *    [[IndexArtifact.cellPartitioned]] layout each) are
+  *    DIRECTORY-partitioned by cell id: a probe touches `nprobe`/`k` of
+  *    the index files by path pruning alone, before any row is read.
+  *    Centroids are a k-row side file.
   *  - Neither index stores vectors. The probe re-ranks candidates
   *    against the embeddings table itself — the index stays tens of
   *    bytes per vector, and re-ranking reads only candidate rows.
@@ -71,8 +73,10 @@ object AnnIndexes {
   def appendLsh(newVecs: DataFrame, base: String): Unit =
     LshArtifact.append(lshBands(newVecs), base)
 
-  /** Retract vectors from BOTH persisted artifacts under `base` —
-    * `lsh_bands` and/or `ivf_lists`, whichever exist — with ONE id set
+  /** Retract vectors from EVERY persisted artifact under `base` —
+    * `lsh_bands`, `ivf_lists` and/or `ivf8_lists`, whichever exist; the
+    * inverted files of a versioned root ([[initIvfVersioned]]) under its
+    * live tree — with ONE id set
     * pinned before any swap (exactly one materialization for the
     * combined path: the single-artifact retracts below delegate to the
     * same pre-pinned variants). This is the safe form whenever the id
@@ -94,16 +98,17 @@ object AnnIndexes {
       val p = new org.apache.hadoop.fs.Path(d)
       p.getFileSystem(conf).exists(p)
     }
+    // a versioned root keeps its inverted files under the live tree
+    val ivfBase = Compaction.resolve(spark, base)
     // disjoint artifact dirs — concurrent swaps ([[Par]], guide §2.6)
-    Par.run(Seq(
-      ("lsh_bands", () => LshArtifact.retract(spark, pinned, base)),
-      ("ivf_lists", () => retractIvfPinned(spark, pinned, base)),
-      ("ivf8_lists", () => retractIvfInt8Pinned(spark, pinned, base)))
-      .collect { case (d, t) if exists(s"$base/$d") => t })
+    Par.run(Seq(LshArtifact -> base, Fp64.lists -> ivfBase,
+        Int8.lists -> ivfBase)
+      .collect { case (a, b) if exists(a.dir(b)) =>
+        () => a.retract(spark, pinned, b) })
   }
 
   /** Remove every band row of vectors in `ids` (a vec_id frame) —
-    * [[Compaction.retract]]'s contract on this artifact (the vector
+    * [[Compaction.retractWith]]'s contract on this artifact (the vector
     * side of [[graft.operators.ReleaseFlow.retract]]'s recall story:
     * retracting a document whose embedding was indexed must recall the
     * embedding too). Band rows are pure per-vector functions, so the
@@ -289,16 +294,42 @@ object AnnIndexes {
     buildIvf(e, Ivf.cellCount(n), iters, n)
   }
 
-  /** Inverted lists directory-partition by `cid`: probing nprobe of k
-    * cells prunes to nprobe/k of the files by PATH, before reading a
-    * row. The centroid side is k rows — one file. */
-  def writeIvf(idx: IvfIndex, base: String): Unit = {
-    idx.centroids.coalesce(1)
-      .write.mode("overwrite").parquet(s"$base/ivf_centroids")
-    idx.lists.repartition(col("cid"))
-      .sortWithinPartitions("vec_id")
-      .write.mode("overwrite").partitionBy("cid").parquet(s"$base/ivf_lists")
+  /** One IVF variant's persisted files: the k-row centroid file and the
+    * inverted file, directory-partitioned by `cid` so that probing
+    * nprobe of k cells prunes to nprobe/k of the files by PATH, before
+    * reading a row. `assign` is the variant's list rows of new vectors
+    * under the FROZEN centroids — what an append lands. */
+  private final class IvfFiles(centroidsSub: String, val lists: IndexArtifact,
+      assign: (DataFrame, DataFrame) => DataFrame) {
+
+    def write(centroids: DataFrame, rows: DataFrame, base: String): Unit = {
+      centroids.coalesce(1)
+        .write.mode("overwrite").parquet(s"$base/$centroidsSub")
+      lists.write(rows, base)
+    }
+
+    def centroids(spark: SparkSession, base: String): DataFrame =
+      spark.read.parquet(s"$base/$centroidsSub")
+
+    def append(spark: SparkSession, newVecs: DataFrame, base: String): Unit =
+      lists.append(assign(centroids(spark, base), newVecs), base)
+
+    /** Pinned before the swap — same lineage hazard as [[retractLsh]]. */
+    def retract(spark: SparkSession, ids: DataFrame, base: String): Unit =
+      lists.retract(spark, IndexArtifact.pinIds(ids, "vec_id"), base)
   }
+
+  private val Fp64 = new IvfFiles("ivf_centroids",
+    IndexArtifact.cellPartitioned("ivf_lists", "vec_id", "cid", "vec_id"),
+    (c, e) => Ivf.assign(e, c))
+
+  private val Int8 = new IvfFiles("ivf8_centroids",
+    IndexArtifact.cellPartitioned("ivf8_lists", "vec_id", "cid", "vec_id"),
+    (c, e) => buildIvfInt8From(c, e).lists)
+
+  /** Cid directory-partitioned lists, one centroid file ([[IvfFiles]]). */
+  def writeIvf(idx: IvfIndex, base: String): Unit =
+    Fp64.write(idx.centroids, idx.lists, base)
 
   /** [[writeIvf]] plus the 1-row training-quality stats file the drift
     * criterion compares against: mean squared assignment distance and
@@ -312,9 +343,7 @@ object AnnIndexes {
   }
 
   def readIvf(spark: SparkSession, base: String): IvfIndex =
-    IvfIndex(
-      spark.read.parquet(s"$base/ivf_centroids"),
-      Compaction.readLive(spark, s"$base/ivf_lists"))
+    IvfIndex(Fp64.centroids(spark, base), Fp64.lists.read(spark, base))
 
   /** Incremental append: assign `newVecs` against the FROZEN persisted
     * centroids and append to the cid-partitioned inverted lists — the
@@ -328,40 +357,11 @@ object AnnIndexes {
     * vec_ids — append cannot dedup against the landed lists without
     * reading them, so a replayed overlapping batch lands duplicates
     * (the batch probe tolerates this via its candidate distinct; dedup
-    * the ingest upstream, e.g. [[graft.streaming.StreamingDedup]]). */
+    * the ingest upstream, e.g. [[graft.streaming.StreamingDedup]]).
+    * An append after a full takedown clears the empty sentinel first
+    * ([[IndexArtifact]]), so the lifecycle never bricks the lists. */
   def appendIvf(spark: SparkSession, newVecs: DataFrame, base: String): Unit =
-    Compaction.appendInto(spark, s"$base/ivf_lists") { lists =>
-      clearTakedownSentinel(spark, lists)
-      Ivf.assign(newVecs, spark.read.parquet(s"$base/ivf_centroids"))
-        .repartition(col("cid")).sortWithinPartitions("vec_id")
-        .write.mode("append").partitionBy("cid").parquet(lists)
-    }
-
-  /** A fully-retracted inverted file holds a single non-partitioned
-    * empty sentinel ([[retractIvf]]'s takedown edge — the only way a
-    * parquet file ever sits at the lists ROOT, since every data write
-    * is `partitionBy(cid)`). A partitioned append BESIDE it would land
-    * `cid=` directories next to that root file and every later read
-    * would die with "conflicting directory structures" — the
-    * takedown → re-ingest lifecycle must not brick the artifact. So:
-    * verify the root files really are the 0-row sentinel (anything
-    * else is a corrupted layout — fail loudly rather than delete
-    * data), then remove them; the append then rebuilds the partitioned
-    * layout from scratch. */
-  private def clearTakedownSentinel(spark: SparkSession, lists: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(lists)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return
-    val rootParquet = fs.listStatus(p)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    if (rootParquet.isEmpty) return
-    // a mixed root-file + cid= layout is already unreadable; this read
-    // fails loudly on it, which is the right outcome
-    require(spark.read.parquet(lists).isEmpty,
-      s"appendIvf: $lists holds non-empty root parquet files — not the " +
-        "takedown sentinel; refusing to touch them")
-    rootParquet.foreach(s => fs.delete(s.getPath, false))
-  }
+    Fp64.append(spark, newVecs, base)
 
   /** Remove every inverted-list row of vectors in `ids` (a vec_id
     * frame) — the IndexIVF `remove_ids` operation. Assignments are a
@@ -380,39 +380,10 @@ object AnnIndexes {
     * it). [[Compaction.retractWith]] discovers the touched cells from
     * one column-pruned (vec_id → file) scan; the cid directory layout
     * is preserved (basePath read + partitionBy staging), so path-level
-    * cell pruning survives the rewrite. */
+    * cell pruning survives the rewrite. Retracting EVERY vector leaves
+    * an empty sentinel that reads back as an empty index. */
   def retractIvf(spark: SparkSession, ids: DataFrame, base: String): Unit =
-    retractIvfPinned(spark,
-      // pinned before the swap — same lineage hazard as [[retractLsh]]
-      IndexArtifact.pinIds(ids, "vec_id"), base)
-
-  private def retractIvfPinned(spark: SparkSession, pinned: DataFrame,
-      base: String): Unit = {
-    val dir = s"$base/ivf_lists"
-    // capture the artifact's READ-BACK schema before the swap: the
-    // full-takedown sentinel below must carry exactly what a read of
-    // the live lists returns (cid as a data column), and deriving it
-    // from the artifact itself — instead of a hand-built literal row —
-    // keeps any future list column from silently diverging the
-    // sentinel's schema from the data's
-    val listSchema = Compaction.readLive(spark, dir).schema
-    Compaction.retractWith(spark, dir, pinned, "vec_id") { (kept, staging) =>
-      kept.repartition(col("cid")).sortWithinPartitions("vec_id")
-        .write.mode("overwrite").partitionBy("cid").parquet(staging)
-    }
-    // the full-takedown edge: retracting EVERY vector leaves no
-    // schema-bearing parquet file (a dynamically-partitioned write of
-    // an empty frame emits only _SUCCESS), which would brick the
-    // artifact for every later read. Restore a non-partitioned empty
-    // sentinel — the schema (cid included, now as a data column)
-    // survives, reads return an empty frame, probes return no rows as
-    // a fully retracted index should, and [[appendIvf]] clears the
-    // sentinel before the next partitioned append.
-    if (Compaction.fileCount(spark, dir) == 0L)
-      spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], listSchema)
-        .write.mode("overwrite").parquet(Compaction.resolve(spark, dir))
-  }
+    Fp64.retract(spark, ids, base)
 
   /** The retrain criterion: 1-row frame comparing the mean squared
     * assignment distance of `newVecs` under the persisted centroids
@@ -533,69 +504,34 @@ object AnnIndexes {
     IvfInt8Index(centroids, Ivf.assign(e, centroids).join(q, "vec_id"))
   }
 
-  /** Same layout discipline as [[writeIvf]]: cid directory-partitioned
-    * lists (path-level nprobe pruning), one centroid file. The parquet
-    * schema stores `qv` as `array<tinyint>` — the 4× saving is real on
-    * disk, not just in memory. */
-  def writeIvfInt8(idx: IvfInt8Index, base: String): Unit = {
-    idx.centroids.coalesce(1)
-      .write.mode("overwrite").parquet(s"$base/ivf8_centroids")
-    idx.lists.repartition(col("cid"))
-      .sortWithinPartitions("vec_id")
-      .write.mode("overwrite").partitionBy("cid").parquet(s"$base/ivf8_lists")
-  }
+  /** Same layout as [[writeIvf]] ([[IvfFiles]]). The parquet schema
+    * stores `qv` as `array<tinyint>` — the 4× saving is real on disk,
+    * not just in memory. */
+  def writeIvfInt8(idx: IvfInt8Index, base: String): Unit =
+    Int8.write(idx.centroids, idx.lists, base)
 
   def readIvfInt8(spark: SparkSession, base: String): IvfInt8Index =
-    IvfInt8Index(
-      spark.read.parquet(s"$base/ivf8_centroids"),
-      Compaction.readLive(spark, s"$base/ivf8_lists"))
+    IvfInt8Index(Int8.centroids(spark, base), Int8.lists.read(spark, base))
 
-  /** Incremental append on the quantized index — [[appendIvf]]'s twin:
-    * assign `newVecs` against the FROZEN persisted centroids, quantize
-    * row-locally ([[quantizeInt8]] — l24's rule), append to the
-    * cid-partitioned int8 lists. Pure per-vector functions of the
+  /** [[appendIvf]] on the quantized index: assign `newVecs` against the
+    * FROZEN persisted centroids and quantize row-locally
+    * ([[quantizeInt8]] — l24's rule). Pure per-vector functions of the
     * frozen centroids, so append-then-probe equals a rebuild over the
     * union corpus exactly (QuantizedAnnSpec pins it); the disjoint-ids
-    * caller contract and the takedown-sentinel clearing are
-    * [[appendIvf]]'s. */
+    * caller contract is [[appendIvf]]'s. */
   def appendIvfInt8(spark: SparkSession, newVecs: DataFrame,
       base: String): Unit =
-    Compaction.appendInto(spark, s"$base/ivf8_lists") { lists =>
-      clearTakedownSentinel(spark, lists)
-      buildIvfInt8From(spark.read.parquet(s"$base/ivf8_centroids"), newVecs)
-        .lists
-        .repartition(col("cid")).sortWithinPartitions("vec_id")
-        .write.mode("append").partitionBy("cid").parquet(lists)
-    }
+    Int8.append(spark, newVecs, base)
 
   /** [[retractIvf]] on the QUANTIZED index — the same remove_ids
     * contract (every int8 list row is a pure per-vector function of
     * the frozen centroids plus l24's quantization rule, so the
     * anti-join equals a quantize-and-assign rebuild over the
-    * complement exactly), the same cell-scoped cost model, the same
-    * full-takedown sentinel discipline. Centroids untouched —
-    * retraction does not retrain. Without this the recall story had a
-    * hole: a takedown against a deployment probing the int8 index
+    * complement exactly) and the same cell-scoped cost model. Centroids
+    * untouched — retraction does not retrain. Without this a takedown against a deployment probing the int8 index
     * would leave the retracted vectors probe-visible. */
   def retractIvfInt8(spark: SparkSession, ids: DataFrame, base: String): Unit =
-    retractIvfInt8Pinned(spark,
-      IndexArtifact.pinIds(ids, "vec_id"), base)
-
-  private def retractIvfInt8Pinned(spark: SparkSession, pinned: DataFrame,
-      base: String): Unit = {
-    val dir = s"$base/ivf8_lists"
-    // schema captured from the artifact itself — [[retractIvfPinned]]'s
-    // sentinel discipline
-    val listSchema = Compaction.readLive(spark, dir).schema
-    Compaction.retractWith(spark, dir, pinned, "vec_id") { (kept, staging) =>
-      kept.repartition(col("cid")).sortWithinPartitions("vec_id")
-        .write.mode("overwrite").partitionBy("cid").parquet(staging)
-    }
-    if (Compaction.fileCount(spark, dir) == 0L)
-      spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], listSchema)
-        .write.mode("overwrite").parquet(Compaction.resolve(spark, dir))
-  }
+    Int8.retract(spark, ids, base)
 
   /** Probe the quantized index: cell selection exactly as [[probeIvf]]
     * (fp64 centroids), then an INT8 shortlist pass over the probed
@@ -686,64 +622,52 @@ object AnnIndexes {
   // ------------------------------------------- versioned retrain / swap
 
   /** Versioned IVF index lifecycle — the ACTION for [[ivfDrift]]'s
-    * alert, closing the drift→retrain loop. Layout under `base`:
+    * alert, closing the drift→retrain loop. The root is a
+    * [[Compaction]] version container, flipped by its one pointer:
     * {{{
-    *   base/CURRENT      one line, e.g. "v3" — the live version
+    *   base/_CURRENT     one line, e.g. "v3" — the live version
     *   base/v1 … base/vN immutable index trees ([[writeIvfWithStats]])
     * }}}
     * [[retrainIvf]] builds v(n+1) COMPLETELY beside the live tree and
-    * only then renames a temp pointer over CURRENT — a same-directory
-    * rename, atomic on POSIX and HDFS, so a reader either sees the old
-    * version or the new one, never a half-written tree. (On an object
-    * store without atomic rename the pointer becomes a small manifest
-    * written with put-if-absent + generation number — same contract,
-    * different primitive.) In-flight probes that already resolved vN
-    * keep reading it: version trees are immutable and never deleted by
-    * a retrain ([[pruneIvfVersions]] is the separate, explicit GC).
-    * Single-writer contract: retrains are a scheduled batch refresh
-    * job, not concurrent mutators. Reference analog: the index set is
-    * derived, rebuildable state (`sql/init/03_create_indexes.sql:27-93`
-    * — drop and rebuild without touching the data). */
-  def currentIvfVersion(base: String): Option[Int] = {
-    val p = java.nio.file.Paths.get(base, "CURRENT")
-    if (!java.nio.file.Files.exists(p)) None
-    else Some(new String(java.nio.file.Files.readAllBytes(p),
-      java.nio.charset.StandardCharsets.UTF_8).trim.stripPrefix("v").toInt)
-  }
+    * only then flips `_CURRENT` ([[Compaction]]'s atomic pointer write,
+    * through the Hadoop FS of `base`), so a reader either sees the old
+    * version or the new one, never a half-written tree. In-flight
+    * probes that already resolved vN keep reading it: a retrain never
+    * deletes a tree ([[pruneIvfVersions]] is the separate, explicit
+    * GC). Single-writer contract: retrains are a scheduled batch
+    * refresh job, not concurrent mutators. Reference analog: the index
+    * set is derived, rebuildable state (`sql/init/03_create_indexes.sql:
+    * 27-93` — drop and rebuild without touching the data). */
+  def currentIvfVersion(base: String): Option[Int] =
+    Compaction.currentVersion(SparkSession.active, base)
 
   /** The live version tree — every `*Current` accessor resolves the
     * pointer ONCE and then only touches that immutable directory. */
-  def currentIvfDir(base: String): String = {
-    val v = currentIvfVersion(base).getOrElse(throw new IllegalStateException(
-      s"no CURRENT pointer under $base — run initIvfVersioned first"))
-    s"$base/v$v"
-  }
+  def currentIvfDir(base: String): String =
+    currentIvfVersion(base).map(v => s"$base/v$v").getOrElse(
+      throw new IllegalStateException(
+        s"no _CURRENT pointer under $base — run initIvfVersioned first"))
 
-  private def flipPointer(base: String, v: Int): Unit = {
-    val dir = java.nio.file.Paths.get(base)
-    java.nio.file.Files.createDirectories(dir)
-    val tmp = dir.resolve(".CURRENT.tmp")
-    java.nio.file.Files.write(tmp,
-      s"v$v\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, dir.resolve("CURRENT"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  /** Build `v(cur+1)` with drift stats from `e`, then flip the pointer. */
+  private def writeVersion(e: DataFrame, k: Int, iters: Int, base: String,
+      cur: Int): String = {
+    val dir = s"$base/v${cur + 1}"
+    writeIvfWithStats(buildIvf(e, k, iters, e.count()), e, dir)
+    Compaction.flipPointer(e.sparkSession, base, cur + 1)
+    dir
   }
 
   /** First-time versioned build: trains on `e`, writes `base/v1` with
-    * drift stats, points CURRENT at it. Returns the version dir. */
+    * drift stats, points `_CURRENT` at it. Returns the version dir. */
   def initIvfVersioned(e: DataFrame, k: Int, iters: Int, base: String): String = {
     require(currentIvfVersion(base).isEmpty,
-      s"initIvfVersioned: $base already has a CURRENT pointer — use retrainIvf")
-    val dir = s"$base/v1"
-    writeIvfWithStats(buildIvf(e, k, iters, e.count()), e, dir)
-    flipPointer(base, 1)
-    dir
+      s"initIvfVersioned: $base already has a _CURRENT pointer — use retrainIvf")
+    writeVersion(e, k, iters, base, 0)
   }
 
   /** Retrain-and-atomic-swap: train fresh centroids on `e` (the corpus
     * as it stands NOW, drifted appends included), write the complete
-    * v(n+1) tree with fresh drift stats, then flip CURRENT. The old
+    * v(n+1) tree with fresh drift stats, then flip `_CURRENT`. The old
     * tree stays on disk for in-flight readers. Returns the new version
     * dir. After a retrain on the drifted corpus, [[ivfDriftCurrent]]
     * of that same corpus reads ≈ 1 by construction — the staleness
@@ -751,11 +675,8 @@ object AnnIndexes {
     * probe continuity across the swap on unchanged data). */
   def retrainIvf(e: DataFrame, k: Int, iters: Int, base: String): String = {
     val cur = currentIvfVersion(base).getOrElse(throw new IllegalStateException(
-      s"retrainIvf: no CURRENT under $base — run initIvfVersioned first"))
-    val dir = s"$base/v${cur + 1}"
-    writeIvfWithStats(buildIvf(e, k, iters, e.count()), e, dir)
-    flipPointer(base, cur + 1)
-    dir
+      s"retrainIvf: no _CURRENT under $base — run initIvfVersioned first"))
+    writeVersion(e, k, iters, base, cur)
   }
 
   /** [[retrainIvf]] with k from the shared [[Ivf.cellCount]] selector —
@@ -774,29 +695,24 @@ object AnnIndexes {
   def ivfDriftCurrent(spark: SparkSession, newVecs: DataFrame, base: String): DataFrame =
     ivfDrift(spark, newVecs, currentIvfDir(base))
 
-  /** Explicit GC for superseded version trees: deletes every version
-    * older than the newest `keep` (default 2 — live + one rollback).
-    * Never touches CURRENT's tree: `keep` is clamped to ≥1 and the
-    * pointer's version is always retained even if an operator points
-    * CURRENT at an old version manually (rollback). Driver-side
-    * directory walk — bounded by the version count, not data size. */
+  /** Explicit GC for superseded version trees: deletes every `vN` tree
+    * older than the newest `keep` (default 2 — live + one rollback) and
+    * nothing else under `base` (an `lsh_bands` artifact written at the
+    * same root stays). Never touches the live tree: `keep` is clamped
+    * to ≥1 and the pointer's version is always retained even if an
+    * operator points `_CURRENT` at an old version manually (rollback).
+    * Driver-side listing — bounded by the version count, not data size. */
   def pruneIvfVersions(base: String, keep: Int = 2): Seq[Int] = {
-    import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Paths.get(base)
-    if (!java.nio.file.Files.isDirectory(dir)) return Nil
-    val versions = java.nio.file.Files.list(dir).iterator().asScala
-      .map(_.getFileName.toString)
+    val spark = SparkSession.active
+    val dir = new org.apache.hadoop.fs.Path(base)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir)) return Nil
+    val versions = fs.listStatus(dir).map(_.getPath.getName)
       .collect { case s if s.matches("v\\d+") => s.drop(1).toInt }
       .toSeq.sorted
     val live = currentIvfVersion(base)
-    val doomed = versions.dropRight(keep.max(1))
-      .filterNot(live.contains)
-    doomed.foreach { v =>
-      val root = dir.resolve(s"v$v")
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.delete)
-    }
+    val doomed = versions.dropRight(keep.max(1)).filterNot(live.contains)
+    doomed.foreach(v => fs.delete(new org.apache.hadoop.fs.Path(dir, s"v$v"), true))
     doomed
   }
 

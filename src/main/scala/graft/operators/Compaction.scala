@@ -44,14 +44,17 @@ import org.apache.spark.sql.types.StructType
   * }}}
   * A whole-artifact rewrite ([[rewriteWith]]) writes a SELF-CONTAINED
   * tree (no manifest) completely beside the live one, then atomically
-  * replaces `_CURRENT` (`java.nio` ATOMIC_MOVE on a local filesystem;
-  * on HDFS the same contract is `FileContext.rename(OVERWRITE)`, on
-  * an object store a put-if-match manifest). A SCOPED retraction
-  * ([[retractWith]]) writes ONLY the rewritten slice into the next
-  * tree plus a `_MANIFEST` naming (old live set − touched files) +
-  * (new files), then flips the same pointer — the table-format
-  * snapshot/manifest design (Iceberg/Delta's DELETE), at the cost of
-  * one small text file per retraction. Untouched files keep their
+  * replaces `_CURRENT` ([[flipPointer]], the engine's one pointer
+  * writer: `java.nio` ATOMIC_MOVE on a local filesystem; on HDFS the
+  * same contract is `FileContext.rename(OVERWRITE)`, on an object store
+  * a put-if-match manifest). The IVF retrain flips the same pointer
+  * over whole index trees ([[AnnIndexes.retrainIvf]]) and keeps its
+  * superseded trees until an explicit [[AnnIndexes.pruneIvfVersions]].
+  * A SCOPED retraction ([[retractWith]]) writes ONLY the rewritten
+  * slice into the next tree plus a `_MANIFEST` naming (old live set −
+  * touched files) + (new files), then flips the same pointer — the
+  * table-format snapshot/manifest design (Iceberg/Delta's DELETE), at
+  * the cost of one small text file per retraction. Untouched files keep their
   * paths, bytes AND mtimes (they are never copied or deleted — the
   * manifest just keeps referencing them), and the touched files stay
   * physically intact in their superseded tree for in-flight readers,
@@ -162,8 +165,10 @@ object Compaction {
     }
   }
 
-  /** Atomically replace the pointer. */
-  private def flipPointer(spark: SparkSession, dir: String, v: Int): Unit =
+  /** Atomically replace the pointer — the engine's one pointer writer:
+    * every artifact swap and the IVF retrain
+    * ([[AnnIndexes.retrainIvf]]) flip through here. */
+  private[graft] def flipPointer(spark: SparkSession, dir: String, v: Int): Unit =
     atomicWrite(spark, new Path(dir), Pointer,
       s"v$v\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
@@ -367,24 +372,18 @@ object Compaction {
     }
   }
 
-  /** Read the live set, re-cluster via `cluster`, write the next
-    * version beside it, flip the pointer. The new tree completes
-    * before the pointer moves, so a crash mid-compaction leaves the
-    * old version live and a partial staging tree the next attempt
-    * clears — never a half-written live artifact. */
-  private[graft] def rewrite(spark: SparkSession, dir: String)(
-      cluster: DataFrame => DataFrame): Unit =
-    rewriteWith(spark, dir)((df, staging) =>
-      cluster(df).write.mode("overwrite").parquet(staging))
-
-  /** [[rewrite]] with a caller-supplied writer — for artifacts whose
-    * layout is more than a cluster+sort (e.g. the IVF inverted lists'
-    * `partitionBy(cid)` directory layout, which a plain parquet write
-    * would flatten and so lose the path-level cell pruning probes rely
-    * on). Same versioned-swap crash-safety and reader-atomicity
-    * contract. The new tree is SELF-CONTAINED (no manifest): a
-    * compaction folds any retraction chain back into one tree, which
-    * is also what lets [[pruneVersions]] release the chain's history. */
+  /** Read the live set, hand it to `write` with the next version's
+    * staging path, flip the pointer. The writer is the artifact's own
+    * ([[IndexArtifact]] passes its one writer: cluster + sort, plus the
+    * IVF inverted files' `partitionBy(cid)` directory layout, which a
+    * plain parquet write would flatten and so lose the path-level cell
+    * pruning probes rely on). The new tree completes before the pointer
+    * moves, so a crash mid-compaction leaves the old version live and
+    * a partial staging tree the next attempt clears — never a
+    * half-written live artifact. The new tree is SELF-CONTAINED (no
+    * manifest): a compaction folds any retraction chain back into one
+    * tree, which is also what lets [[pruneVersions]] release the
+    * chain's history. */
   private[graft] def rewriteWith(spark: SparkSession, dir: String)(
       write: (DataFrame, String) => Unit): Unit = {
     val d = new Path(dir)
@@ -400,12 +399,14 @@ object Compaction {
 
   /** RETRACTION primitive — drop every row of the artifact at `dir`
     * whose `keyCol` (doc_id for the document indexes, vec_id for the
-    * ANN ones) is in `ids`. Because every index row is a PURE per-doc
-    * function of a document (the append contract's own premise), the
-    * anti-join equals a rebuild over the complement corpus EXACTLY —
-    * retraction is the recall half of append-≡-rebuild, and
-    * RetractSpec pins the multiset equality both ways (vs the pristine
-    * pre-release artifact and vs a fresh complement rebuild).
+    * ANN ones) is in `ids`, writing what is kept through the artifact's
+    * own `write` ([[rewriteWith]]'s writer contract). Because every
+    * index row is a PURE per-doc function of a document (the append
+    * contract's own premise), the anti-join equals a rebuild over the
+    * complement corpus EXACTLY — retraction is the recall half of
+    * append-≡-rebuild, and RetractSpec pins the multiset equality both
+    * ways (vs the pristine pre-release artifact and vs a fresh
+    * complement rebuild).
     *
     * SCOPED by default (the IndexIVF `remove_ids` cost model): one
     * column-pruned scan of (`keyCol`, file) finds the files holding
@@ -414,25 +415,16 @@ object Compaction {
     * handful of files into the next version tree, whose `_MANIFEST`
     * keeps referencing every untouched file in place (bytes and
     * mtimes intact — AnnIndexSpec pins it), and the `_CURRENT` flip
-    * publishes the whole change atomically. When the id set touches
-    * EVERY live file (gram-keyed artifacts scatter each doc
-    * everywhere — the span index's normal case), the scoped path
-    * falls back to the whole-artifact [[rewriteWith]] rewrite, which
-    * also restores the probe-keyed clustering. `ids` is bounded by a
+    * publishes the whole change atomically. The writer receives either
+    * that touched-file slice or, when the id set touches EVERY live
+    * file (gram-keyed artifacts scatter each doc everywhere — the span
+    * index's normal case), the whole surviving artifact through the
+    * [[rewriteWith]] path, which also restores the probe-keyed
+    * clustering — identical obligations. `ids` is bounded by a
     * release's admitted set — shard-sized, never corpus-sized — hence
     * the broadcast; batch recalls should union their id lists first.
     * Caller pins `ids` ([[ReleaseFlow.retract]]'s discipline) — it is
     * evaluated more than once here. */
-  private[graft] def retract(spark: SparkSession, dir: String,
-      ids: DataFrame, keyCol: String = "doc_id")(
-      cluster: DataFrame => DataFrame): Unit =
-    retractWith(spark, dir, ids, keyCol)((df, staging) =>
-      cluster(df).write.mode("overwrite").parquet(staging))
-
-  /** [[retract]] with a caller-supplied writer ([[rewriteWith]]'s
-    * variant, for directory-partitioned artifacts). The writer
-    * receives either the touched-file slice (scoped path) or the whole
-    * surviving artifact (full fallback) — identical obligations. */
   private[graft] def retractWith(spark: SparkSession, dir: String,
       ids: DataFrame, keyCol: String = "doc_id")(
       write: (DataFrame, String) => Unit): Unit = {

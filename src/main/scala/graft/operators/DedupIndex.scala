@@ -55,6 +55,6 @@ object DedupIndex extends OneArtifactIndex(
   def novelOnly(batch: DataFrame, index: DataFrame): DataFrame =
     batch.filter(col("text").isNotNull)
       .withColumn("h", contentHash)
-      .join(index.select("h").distinct(), Seq("h"), "left_anti")
+      .join(index.select("h"), Seq("h"), "left_anti")
       .drop("h")
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
@@ -18,7 +19,12 @@ import org.apache.spark.sql.types.StructType
   * just row groups (a hash-partitioned file's min/max spans ~the whole
   * key domain). The LSH bands hash-partition instead — a probe pushes
   * literal band keys, so one band per file is the selectivity it needs.
-  * An append lands ONE file per step, sorted by the artifact's keys: a
+  * The IVF inverted files ([[IndexArtifact.cellPartitioned]]) are
+  * DIRECTORY-partitioned by cell, so a probe prunes to its cells by path
+  * before reading a row; every write of them, compactions and
+  * retractions included, keeps the `cell=` directories.
+  * An append lands ONE file per step (per cell directory for a
+  * cell-partitioned artifact), sorted by the artifact's keys: a
   * live microbatch appends ~100 documents, and partitioning those rows
   * costs more scheduling (a range-bound sampling job, then a shuffled
   * write) than the rows it orders. An appended file's keys (hashes,
@@ -28,12 +34,13 @@ import org.apache.spark.sql.types.StructType
   * restores the clustered layout across the whole chain.
   *
   * Retraction takes an id frame the caller already PINNED
-  * ([[IndexArtifact.pinIds]]): [[Compaction.retract]] evaluates it more
-  * than once, and a lazy frame whose lineage reads this very artifact
-  * would re-evaluate after the swap and silently under-retract.
+  * ([[IndexArtifact.pinIds]]): [[Compaction.retractWith]] evaluates it
+  * more than once, and a lazy frame whose lineage reads this very
+  * artifact would re-evaluate after the swap and silently under-retract.
   */
 final class IndexArtifact private (sub: String, idCol: String,
-    cluster: DataFrame => DataFrame, keys: Seq[String]) {
+    cluster: DataFrame => DataFrame, keys: Seq[String],
+    cell: Option[String] = None) {
 
   private def sorted(rows: DataFrame): DataFrame =
     rows.sortWithinPartitions(keys.map(col): _*)
@@ -41,19 +48,33 @@ final class IndexArtifact private (sub: String, idCol: String,
   /** Clustered by `cluster`, each file sorted by `keys`. */
   private def layout(rows: DataFrame): DataFrame = sorted(cluster(rows))
 
+  /** THE writer — `rows` as parquet at `path`, directory-partitioned by
+    * `cell` when the artifact has one. */
+  private def put(mode: String)(rows: DataFrame, path: String): Unit = {
+    val w = rows.write.mode(mode)
+    cell.fold(w)(w.partitionBy(_)).parquet(path)
+  }
+
+  /** A whole layout written fresh at `path` — what write, compaction and
+    * retraction hand [[Compaction]]. */
+  private def rewrite(rows: DataFrame, path: String): Unit =
+    put("overwrite")(layout(rows), path)
+
   def dir(base: String): String = s"$base/$sub"
 
   /** Replace the artifact with `rows` — a fresh flat layout (any
     * version pointer is reset with it). */
-  def write(rows: DataFrame, base: String): Unit =
-    layout(rows).write.mode("overwrite").parquet(dir(base))
+  def write(rows: DataFrame, base: String): Unit = rewrite(rows, dir(base))
 
-  /** Land `rows` beside the live files as ONE file sorted by `keys` —
-    * one job, no shuffle — manifest-extended when the live tree carries
-    * one ([[Compaction.appendInto]]). */
+  /** Land `rows` beside the live files as ONE file sorted by `keys` (one
+    * per cell directory when cell-partitioned, after clearing a takedown
+    * sentinel) — one job, no shuffle — manifest-extended when the live
+    * tree carries one ([[Compaction.appendInto]]). */
   def append(rows: DataFrame, base: String): Unit =
-    Compaction.appendInto(rows.sparkSession, dir(base))(
-      sorted(rows.coalesce(1)).write.mode("append").parquet(_))
+    Compaction.appendInto(rows.sparkSession, dir(base)) { live =>
+      if (cell.isDefined) clearTakedownSentinel(rows.sparkSession, live)
+      put("append")(sorted(rows.coalesce(1)), live)
+    }
 
   /** The live rows; `schema` skips inference ([[Compaction.readLive]]). */
   def read(spark: SparkSession, base: String,
@@ -62,12 +83,53 @@ final class IndexArtifact private (sub: String, idCol: String,
 
   /** Restore the layout after an append chain — row multiset unchanged. */
   def compact(spark: SparkSession, base: String): Unit =
-    Compaction.rewrite(spark, dir(base))(layout)
+    withTakedownSentinel(spark, base)(
+      Compaction.rewriteWith(spark, dir(base))(rewrite))
 
   /** Drop every row whose `idCol` is in `pinned` — equals a rebuild
-    * without those ids exactly ([[Compaction.retract]]). */
+    * without those ids exactly ([[Compaction.retractWith]]). */
   def retract(spark: SparkSession, pinned: DataFrame, base: String): Unit =
-    Compaction.retract(spark, dir(base), pinned, idCol)(layout)
+    withTakedownSentinel(spark, base)(
+      Compaction.retractWith(spark, dir(base), pinned, idCol)(rewrite))
+
+  /** Run a swap; when it leaves a cell-partitioned artifact with no
+    * file — a full takedown, whose partitioned write of no rows emits
+    * only `_SUCCESS` — write a non-partitioned empty SENTINEL of the
+    * pre-swap read-back schema (the cell a data column) into the live
+    * tree, so reads return an empty frame instead of failing to infer
+    * a schema. The schema comes from the artifact itself, so a future
+    * column cannot diverge the sentinel from the data. */
+  private def withTakedownSentinel(spark: SparkSession, base: String)(
+      swap: => Unit): Unit =
+    if (cell.isEmpty) swap
+    else {
+      val schema = read(spark, base).schema
+      swap
+      if (Compaction.fileCount(spark, dir(base)) == 0L)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+          .write.mode("overwrite").parquet(Compaction.resolve(spark, dir(base)))
+    }
+
+  /** A cell-partitioned append beside the takedown sentinel would land
+    * `cell=` directories next to a root file, and every later read would
+    * die with "conflicting directory structures". So: verify the root
+    * files of the live tree really are the 0-row sentinel (anything else
+    * is a corrupted layout — fail loudly rather than delete data), then
+    * remove them; the append rebuilds the partitioned layout. */
+  private def clearTakedownSentinel(spark: SparkSession, live: String): Unit = {
+    val p = new Path(live)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) return
+    val rootParquet = fs.listStatus(p)
+      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+    if (rootParquet.isEmpty) return
+    // a mixed root-file + cell= layout is already unreadable; this read
+    // fails loudly on it, which is the right outcome
+    require(spark.read.parquet(live).isEmpty,
+      s"append: $live holds non-empty root parquet files — not the " +
+        "takedown sentinel; refusing to touch them")
+    rootParquet.foreach(s => fs.delete(s.getPath, false))
+  }
 }
 
 object IndexArtifact {
@@ -81,6 +143,12 @@ object IndexArtifact {
   def hashClustered(sub: String, idCol: String, part: String,
       sort: String*): IndexArtifact =
     new IndexArtifact(sub, idCol, _.repartition(col(part)), sort)
+
+  /** Directory-partitioned by `cell` (`<sub>/<cell>=N/`), one shuffle
+    * partition per cell, sorted within each file by `sort`. */
+  def cellPartitioned(sub: String, idCol: String, cell: String,
+      sort: String*): IndexArtifact =
+    new IndexArtifact(sub, idCol, _.repartition(col(cell)), sort, Some(cell))
 
   /** The distinct ids of `ids`, materialized once — what a retraction
     * across one or more artifacts takes, so every swap sees the same

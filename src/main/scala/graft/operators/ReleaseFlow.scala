@@ -215,8 +215,8 @@ object ReleaseFlow {
       .localCheckpoint()
     val fresh = shard
       .withColumn("_h", DedupIndex.contentHash)
-      .join(DedupIndex.read(spark, dedupDir(base))
-        .select(col("h").as("_h")).distinct(), Seq("_h"), "left_anti")
+      .join(DedupIndex.read(spark, dedupDir(base)).select(col("h").as("_h")),
+        Seq("_h"), "left_anti")
       .drop("_h")
     val cured = SamplingQueries.cutAgainstIndex(fresh,
         SubstringIndex.read(spark, substrDir(base)), SamplingQueries.SpanK)

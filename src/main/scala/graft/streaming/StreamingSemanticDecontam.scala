@@ -45,18 +45,9 @@ object StreamingSemanticDecontam {
       schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
     graft.operators.Compaction.readLive(spark, s"$base/eval_vecs", schema)
 
-  /** Screen a streaming document frame (doc_id, v, `tsCol`): emits
-    * (doc_id, `tsCol`) once per semantically contaminated doc. */
-  def screen(stream: DataFrame, index: DataFrame, tsCol: String,
-      delay: String): DataFrame =
-    screenRaw(stream, index, Seq(tsCol))
-      .withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark("doc_id")
-
-  /** The STATELESS part (broadcast cosine screen, no watermark) —
-    * batch-callable; the composed admission decision uses it inside
-    * `foreachBatch`. A doc near several eval vectors emits several
-    * rows; callers dedup. */
+  /** The broadcast cosine screen (stateless, no watermark) — the
+    * composed admission decision runs it inside `foreachBatch`. A doc
+    * near several eval vectors emits several rows; callers dedup. */
   def screenRaw(df: DataFrame, index: DataFrame,
       keep: Seq[String] = Nil): DataFrame =
     df.filter(col("v").isNotNull)

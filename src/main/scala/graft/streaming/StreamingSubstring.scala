@@ -25,8 +25,7 @@ import graft.operators.{SamplingQueries, SubstringIndex}
   *  - the STREAM side explodes each incoming doc to its distinct
   *    hashed 15-grams map-side and equi-joins the index, excluding
   *    SELF-owned grams (the replay-idempotence guard); one overlap row
-  *    per shared (gram, owner), deduped by the caller or [[screen]]'s
-  *    watermark-bounded state.
+  *    per shared (gram, owner), deduped by the caller.
   *
   * SCALE CAVEAT, by design: unlike L30's eval-set-sized index, this
   * index is CORPUS-sized (≈ one 8-byte row per corpus token). At 100 TB
@@ -108,17 +107,8 @@ object StreamingSubstring {
   def readIndex(spark: SparkSession, base: String): DataFrame =
     graft.operators.Compaction.readLive(spark, s"$base/corpus_spans")
 
-  /** Screen a streaming document frame (doc_id, text, `tsCol`): emits
-    * (doc_id, `tsCol`) once per verbatim-repeating doc. */
-  def screen(stream: DataFrame, index: DataFrame, tsCol: String,
-      delay: String): DataFrame =
-    screenRaw(stream, index, Seq(tsCol))
-      .withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark("doc_id")
-
-  /** The stateless half (gram explode + equi-join + owner exclusion) —
-    * batch-callable; the composed admission decision uses it inside
-    * `foreachBatch`. A doc sharing several spans (or one span owned by
+  /** The screen (gram explode + equi-join + owner exclusion; stateless)
+    * — the composed admission decision runs it inside `foreachBatch`. A doc sharing several spans (or one span owned by
     * several corpus docs) emits several rows; callers dedup. The owner
     * exclusion is the replay-idempotence guard: a doc screened against
     * an index already holding its OWN grams (the crash-replay state

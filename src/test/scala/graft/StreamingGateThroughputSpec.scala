@@ -28,13 +28,18 @@ class StreamingGateThroughputSpec extends AnyFunSuite {
 
   /** Wall-clock floors are only meaningful on a quiet box — the same
     * discipline as tools/gate.sh's bench step (a contended box reads
-    * 10-30× high, BENCH_NOTES.md). On a loaded box the floor cases
-    * SKIP (assume) instead of failing a semantics-correct build. */
-  private def quietBox(): Unit = {
-    val load = scala.io.Source.fromFile("/proc/loadavg").mkString
-      .split(" ")(0).toDouble
-    assume(load <= sys.env.getOrElse("SPARK_GRAFT_MAX_LOAD", "8").toDouble,
-      s"box contended (loadavg $load) — throughput floor skipped")
+    * 10-30× high, BENCH_NOTES.md). Each case reads the load BEFORE its
+    * run, always runs and checks its output, and only then hands the
+    * reading to [[rateFloor]]: on a loaded box the rate floor alone
+    * cancels (assume) instead of failing a semantics-correct build. */
+  private def loadAvg(): Double =
+    scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
+
+  private def rateFloor(loadBefore: Double, label: String, rate: Double): Unit = {
+    assume(loadBefore <= sys.env.getOrElse("SPARK_GRAFT_MAX_LOAD", "8").toDouble,
+      s"box contended (loadavg $loadBefore) — throughput floor skipped")
+    assert(rate > 500.0,
+      f"$label rate $rate%.0f/s below 5x the reference's 100 msg/s")
   }
 
   private val schema = StructType(Seq(
@@ -54,7 +59,7 @@ class StreamingGateThroughputSpec extends AnyFunSuite {
 
   test("L17 streaming dedup gate sustains > 500 docs/s (5x the reference floor)") {
     assume(new java.io.File(sf1).isDirectory)
-    quietBox()
+    val load = loadAvg()
     val (in, n) = dumpDocs()
     val stream = spark.readStream.schema(schema).json(in)
     val t0 = System.nanoTime()
@@ -67,14 +72,13 @@ class StreamingGateThroughputSpec extends AnyFunSuite {
     assert(landed > 0 && landed <= n)
     val rate = n / sec
     info(f"L17 dedup gate: $n docs in $sec%.2f s = $rate%.0f docs/s")
-    assert(rate > 500.0,
-      f"L17 dedup gate rate $rate%.0f docs/s below 5x the reference's 100 msg/s")
+    rateFloor(load, "L17 dedup gate", rate)
   }
 
   test("L18 near-dup screen sustains > 500 docs/s against a persisted " +
       "bench-scale corpus index") {
     assume(new java.io.File(sf1).isDirectory)
-    quietBox()
+    val load = loadAvg()
     // Steady-state shape: the corpus index is MATERIALIZED once (batch
     // refresh), the screen probes the parquet index — so the timed
     // section prices sketch + band probe + verify join, not corpus
@@ -98,14 +102,13 @@ class StreamingGateThroughputSpec extends AnyFunSuite {
     assert(flagged > n / 2, s"self-pairs flagged: $flagged of $n")
     val rate = n / sec
     info(f"L18 near-dup screen: $n docs in $sec%.2f s = $rate%.0f docs/s")
-    assert(rate > 500.0,
-      f"L18 screen rate $rate%.0f docs/s below 5x the reference's 100 msg/s")
+    rateFloor(load, "L18 screen", rate)
   }
 
   test("L30 decontamination screen sustains > 500 docs/s against a persisted " +
       "bench-scale holdout gram index") {
     assume(new java.io.File(sf1).isDirectory)
-    quietBox()
+    val load = loadAvg()
     // Steady-state shape: the holdout gram index is materialized once
     // (it changes only when the eval set does); the timed section
     // prices gram explode + semi-join + within-watermark dedup. The
@@ -127,14 +130,13 @@ class StreamingGateThroughputSpec extends AnyFunSuite {
     assert(flagged > n / 2, s"self-contaminated docs flagged: $flagged of $n")
     val rate = n / sec
     info(f"L30 decontam screen: $n docs in $sec%.2f s = $rate%.0f docs/s")
-    assert(rate > 500.0,
-      f"L30 screen rate $rate%.0f docs/s below 5x the reference's 100 msg/s")
+    rateFloor(load, "L30 screen", rate)
   }
 
   test("L56 media near-dup screen sustains > 500 items/s against a " +
       "persisted bench-scale perceptual-hash index") {
     assume(new java.io.File(sf1).isDirectory)
-    quietBox()
+    val load = loadAvg()
     import graft.streaming.StreamingMediaDedup
     // Steady-state shape: the corpus signature index is materialized
     // once; the timed section prices in-place signing + band probe +
@@ -163,7 +165,6 @@ class StreamingGateThroughputSpec extends AnyFunSuite {
     assert(flagged === n, s"self-pairs flagged: $flagged of $n")
     val rate = n / sec
     info(f"L56 media screen: $n items in $sec%.2f s = $rate%.0f items/s")
-    assert(rate > 500.0,
-      f"L56 screen rate $rate%.0f items/s below 5x the reference's 100 msg/s")
+    rateFloor(load, "L56 screen", rate)
   }
 }

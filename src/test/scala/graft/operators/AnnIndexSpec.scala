@@ -315,6 +315,25 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(new java.io.File(s"$base/v3").isDirectory)
   }
 
+  test("a retrain never prunes; pruneIvfVersions removes only superseded " +
+      "vN trees and leaves an lsh_bands artifact at the same root") {
+    val e = vecs(sf)
+    val base = Files.createTempDirectory("graft_annidx_prune_").toString
+    AnnIndexes.initIvfVersioned(e, k = 16, iters = 2, base)
+    AnnIndexes.writeLsh(AnnIndexes.lshBands(e), base)
+    val bands = AnnIndexes.readLsh(spark, base).count()
+    (1 to 3).foreach(_ => AnnIndexes.retrainIvf(e, k = 16, iters = 2, base))
+    assert(AnnIndexes.currentIvfVersion(base) === Some(4))
+    assert((1 to 4).forall(v => new java.io.File(s"$base/v$v").isDirectory),
+      "a retrain must leave every older tree for in-flight readers")
+    assert(AnnIndexes.pruneIvfVersions(base, keep = 1) === Seq(1, 2, 3))
+    assert((1 to 3).forall(v => !new java.io.File(s"$base/v$v").exists()))
+    assert(new java.io.File(s"$base/v4/ivf_lists").isDirectory)
+    assert(AnnIndexes.readLsh(spark, base).count() === bands,
+      "the root's LSH artifact must survive the prune")
+    assert(AnnIndexes.readIvfCurrent(spark, base).lists.count() === e.count())
+  }
+
   test("retrainIvf: a drifted corpus reads drift_ratio >> 1 before and ≈ 1 " +
       "after the retrain — the alert now has an action that clears it") {
     val e = vecs(sf)

@@ -46,6 +46,11 @@ class GateReadLiveSpec extends AnyFunSuite {
   // disjoint-vocabulary texts: group A tokens a1.., group B tokens b1..
   private def words(p: String, n: Int) = (1 to n).map(p + _).mkString(" ")
 
+  /** A flat-layout artifact's writer for [[Compaction]]'s swaps. */
+  private def writer(layout: DataFrame => DataFrame) =
+    (df: DataFrame, path: String) =>
+      layout(df).write.mode("overwrite").parquet(path)
+
   test("DedupIndex.novelOnly: retraction re-admits the retracted " +
       "content hash, untouched hashes keep blocking") {
     val base = tmp("graft_gate_dedup")
@@ -123,9 +128,9 @@ class GateReadLiveSpec extends AnyFunSuite {
         StreamingSubstring.readIndex(spark, base))
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     assert(flagged() === Set(101L, 102L))
-    Compaction.retract(spark, s"$base/corpus_spans",
+    Compaction.retractWith(spark, s"$base/corpus_spans",
       Seq(2L).toDF("corpus_id"), "corpus_id")(
-      _.sortWithinPartitions("gram"))
+      writer(_.sortWithinPartitions("gram")))
     assert(manifested(s"$base/corpus_spans"),
       "retraction must have produced a manifest-bearing tree")
     assert(flagged() === Set(101L),
@@ -147,9 +152,9 @@ class GateReadLiveSpec extends AnyFunSuite {
         StreamingDecontam.readIndex(spark, base))
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     assert(flagged() === Set(101L, 102L))
-    Compaction.retract(spark, s"$base/holdout_grams",
+    Compaction.retractWith(spark, s"$base/holdout_grams",
       StreamingDecontam.buildIndex(h2).localCheckpoint(), "gram")(
-      _.sortWithinPartitions("gram"))
+      writer(_.sortWithinPartitions("gram")))
     assert(manifested(s"$base/holdout_grams"),
       "retraction must have produced a manifest-bearing tree")
     assert(flagged() === Set(101L),
@@ -174,9 +179,9 @@ class GateReadLiveSpec extends AnyFunSuite {
         StreamingSemanticDecontam.readIndex(spark, base))
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     assert(flagged() === Set(101L, 102L))
-    Compaction.retract(spark, s"$base/eval_vecs",
+    Compaction.retractWith(spark, s"$base/eval_vecs",
       Seq(2L).toDF("vec_id"), "vec_id")(
-      _.coalesce(1).sortWithinPartitions("vec_id"))
+      writer(_.coalesce(1).sortWithinPartitions("vec_id")))
     assert(manifested(s"$base/eval_vecs"),
       "retraction must have produced a manifest-bearing tree")
     assert(flagged() === Set(101L),
@@ -238,14 +243,14 @@ class GateReadLiveSpec extends AnyFunSuite {
       StreamingSemanticDecontam.buildIndex(evals(5 to 6))
         .write.mode("append").parquet(_))
     assert(same("append").forall(_ == 6), "the pinned read must list afresh")
-    val evalLayout = (df: DataFrame) => df.coalesce(1).sortWithinPartitions("vec_id")
+    val evalLayout = writer(_.coalesce(1).sortWithinPartitions("vec_id"))
     ReleaseFlow.compact(spark, base)
     StreamingMediaDedup.compact(spark, mediaBase)
-    Compaction.rewrite(spark, evalDir)(evalLayout)
+    Compaction.rewriteWith(spark, evalDir)(evalLayout)
     assert(same("compact").forall(_ == 6))
     ReleaseFlow.retract(spark, Seq(5L).toDF("doc_id"), base)
     StreamingMediaDedup.retract(spark, Seq(5L).toDF("doc_id"), mediaBase)
-    Compaction.retract(spark, evalDir, Seq(5L).toDF("vec_id"), "vec_id")(evalLayout)
+    Compaction.retractWith(spark, evalDir, Seq(5L).toDF("vec_id"), "vec_id")(evalLayout)
     assert(same("retract").forall(_ == 5))
   }
 }

@@ -253,4 +253,33 @@ class RetractSpec extends AnyFunSuite {
     assert(TrainMeta.isStaleFor(full, dsirBase),
       "a different corpus still reads stale under the strong check")
   }
+
+  test("retractAll on a versioned ANN root takes the ids out of the live " +
+      "tree's inverted lists (fp64 and int8) and the root's LSH bands") {
+    val base = tmp("graft_retractall_vroot")
+    val root = tmp("graft_retractall_vroot_ann")
+    val corpus = docsAll.filter(col("doc_id") % 3 === 0)
+    ReleaseFlow.init(corpus, base)
+    val vecs = corpus.select(col("doc_id").as("vec_id"),
+      array((col("doc_id") % 7).cast("double"),
+        (col("doc_id") % 5).cast("double"), lit(1.0)).as("v"))
+    AnnIndexes.initIvfVersioned(vecs, k = 8, iters = 2, root)
+    val live = AnnIndexes.currentIvfDir(root)
+    AnnIndexes.writeIvfInt8(AnnIndexes.buildIvfInt8From(
+      AnnIndexes.readIvfCurrent(spark, root).centroids, vecs), live)
+    AnnIndexes.writeLsh(AnnIndexes.lshBands(vecs), root)
+    val victims = corpus.filter(col("doc_id") % 2 === 0).select("doc_id")
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("vec_id").collect().map(_.getLong(0)).toSet
+    val kept = ids(vecs) -- victims.collect().map(_.getLong(0))
+    assert(kept.nonEmpty && kept.size < ids(vecs).size, "fixture")
+    ReleaseFlow.retractAll(spark, victims,
+      ReleaseFlow.Footprint(base, ann = Some(root)))
+    assert(ids(AnnIndexes.readIvfCurrent(spark, root).lists) === kept,
+      "the live tree's fp64 lists must hold exactly the kept ids")
+    assert(ids(AnnIndexes.readIvfInt8(spark, live).lists) === kept,
+      "the live tree's int8 lists must hold exactly the kept ids")
+    assert(ids(AnnIndexes.readLsh(spark, root)) === kept,
+      "the root's LSH bands must hold exactly the kept ids")
+  }
 }

@@ -6,7 +6,7 @@
 #   tools/gate.sh [--skip-bench] [--skip-test]
 #
 # Runs, in order, failing fast:
-#   1. lazy-pin check + sbt compile
+#   1. lazy-pin + one-pointer-writer checks, sbt compile
 #   2. sbt test                      (full ScalaTest suite)
 #   3. graft.Verify @ sf0.01 + DuckDB oracle compare  (the t2 gate)
 #   4. graft.Bench  @ sf0.1          (only if the box is quiet)
@@ -37,6 +37,16 @@ LAZY=$(grep -rnE 'localCheckpoint\((false|eager *= *false)\)' src/main \
 if [[ -n "$LAZY" ]]; then
   echo "lazy localCheckpoint without a '// lazy:' reason:" >&2
   echo "$LAZY" >&2
+  exit 1
+fi
+# One pointer writer: every version flip (artifact swaps, the IVF
+# retrain) goes through Compaction.flipPointer, which alone knows how to
+# rename atomically on each filesystem.
+MOVES=$(grep -rln 'ATOMIC_MOVE' src/main \
+  | grep -v '^src/main/scala/graft/operators/Compaction\.scala$' || true)
+if [[ -n "$MOVES" ]]; then
+  echo "ATOMIC_MOVE outside Compaction.scala (flip through Compaction):" >&2
+  echo "$MOVES" >&2
   exit 1
 fi
 sbt -batch compile
